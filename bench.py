@@ -75,6 +75,7 @@ def _budget_left() -> float:
 def main() -> None:
     sf_dir = result["sf"]
     import __spark_entry__ as entry_mod
+    from icecube_spark import staging
     from icecube_spark.session import get_spark
 
     spark = get_spark("icecube-bench")
@@ -189,14 +190,11 @@ def main() -> None:
 
     def _pagerank_prewarm() -> None:
         from icecube_spark.queries import pipeline_queries as _pq
-        from icecube_spark.queries.analytics import (
-            release_copurchase_staging as _rel_cp,
-        )
 
         _pq.part_pagerank(spark, tiny).write.format("noop").mode(
             "overwrite"
         ).save()
-        _rel_cp(tiny)
+        staging.release(tiny)
 
     def _probe_curve_prewarm() -> None:
         from icecube_spark.queries import llm_queries as _lqw
@@ -204,7 +202,7 @@ def main() -> None:
         _lqw.ivf_probe_curve(spark, tiny).write.format("noop").mode(
             "overwrite"
         ).save()
-        _lqw.release_staging(tiny)
+        staging.release(tiny)
 
     _prewarm("pagerank", _pagerank_prewarm)
     _prewarm("probe_curve", _probe_curve_prewarm)
@@ -233,7 +231,6 @@ def main() -> None:
         _stage("minhash_pairs", lambda: _lq.staged_minhash_pairs(spark, sf_dir).count())
         _stage("jaccard_pairs", lambda: _lq.staged_jaccard_pairs(spark, sf_dir, 0.3).count())
         _stage("ivf_index", lambda: _lq.staged_ivf_index(spark, sf_dir)[0].count())
-        _stage("tfidf_fit", lambda: _lq.staged_tfidf_fit(spark, sf_dir))
 
         from icecube_spark.queries import analytics as _an
 
@@ -252,7 +249,7 @@ def main() -> None:
     # until a full Python GC. A per-key gc.collect() releases them so
     # Spark's ContextCleaner unpersists leaked blocks through its own
     # throttled async path — staged tables stay cached because the
-    # staging stores hold live references. (Tried and reverted:
+    # staging store holds live references. (Tried and reverted:
     # force-unpersisting every non-staged RDD id after each key —
     # the synchronous block-removal storm contended with the Arrow
     # worker keys and cost more than the leaks did.)

@@ -336,12 +336,26 @@ def create_cube_from_rasters(
 def _grd_cube(
     spark: SparkSession, bdf: DataFrame, config: CubeConfig
 ) -> Datacube:
-    """GRD build body shared by the directory-crawl and explicit-list
-    entry points: crawl + decode + config filters + temporal grid."""
+    """GRD crawl + decode, shared by the directory-crawl and
+    explicit-list entry points."""
     from icecube_spark.sources.raster import crawl_iceye_metadata, decode_rasters
 
     meta = crawl_iceye_metadata(bdf)
     layers = meta.join(decode_rasters(bdf).select("path", "pixels"), "path")
+    return _filter_and_grid(spark, layers, config, ["pixels"])
+
+
+def _filter_and_grid(
+    spark: SparkSession, layers: DataFrame, config: CubeConfig,
+    band_cols: list[str],
+) -> Datacube:
+    """The config filters and temporal grid of every product family
+    (GRD and SLC differ only in crawl and decode), in reference order:
+    date range on acquisition_date, incidence-angle range (a NULL
+    angle passes), the latest acquisition_end_utc per date unless
+    temporal_overlap, then — when temporal_resolution > 0 — one slot
+    per `temporal_resolution` days from start_date to end_date, empty
+    slots being gap rows with null product/bands."""
     layers = layers.where(
         F.col("acquisition_date").between(
             F.lit(config.start_date.date()), F.lit(config.end_date.date())
@@ -385,7 +399,7 @@ def _grd_cube(
     else:
         cube_df = layers
         ts_col = "acquisition_date"
-    return Datacube(cube_df, "product_file", ts_col, ["pixels"])
+    return Datacube(cube_df, "product_file", ts_col, band_cols)
 
 
 def create_cube_from_slc(
@@ -419,8 +433,8 @@ def create_cube_from_slc(
 def _slc_cube(
     spark: SparkSession, bdf: DataFrame, config: CubeConfig, with_rpc: bool
 ) -> Datacube:
-    """SLC build body shared by the directory-crawl and explicit-list
-    entry points."""
+    """SLC crawl + decode, shared by the directory-crawl and
+    explicit-list entry points."""
     from icecube_spark.sources.hdf5 import crawl_slc_metadata, decode_slc
 
     meta = crawl_slc_metadata(bdf)
@@ -436,14 +450,7 @@ def _slc_cube(
         from icecube_spark.sources.rpc import crawl_rpc_metadata
 
         layers = layers.join(crawl_rpc_metadata(bdf), "path", "left")
-    return build_cube(
-        layers,
-        config,
-        key_col="product_file",
-        ts_col="acquisition_date",
-        angle_col="incidence_center",
-        band_cols=["Real", "Complex"],
-    )
+    return _filter_and_grid(spark, layers, config, ["Real", "Complex"])
 
 
 def create_cube_from_list(
@@ -488,10 +495,11 @@ def build_cube(
     band_cols: list[str],
     extent_cols: tuple[str, str] | None = None,
 ) -> Datacube:
-    """One-shot config-driven cube build — the Spark twin of
-    IceyeProcessGenerateCube.create_cube (generate_cube.py:36-80) and
+    """Config-driven cube build for any keyed layer series — the
     SARDatacubeMetadata.filter_metadata_df_as_per_configuration
-    (sar_datacube_metadata.py:122-147). Applies, in reference order:
+    (sar_datacube_metadata.py:122-147) chain generalized to a key
+    column (the create_cube_from_* entry points use _filter_and_grid
+    instead). Applies, in reference order:
     date filter, angle filter, temporal dedup (unless
     temporal_overlap), spatial overlap (unless coregistered), and
     leaves resampling to `temporal.resample_to_grid` (gap rows only

@@ -132,10 +132,10 @@ def exact_group_members(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     the group size. ONE shuffle on the content hash — rep id and size
     come from the same window exchange (a groupBy+join would shuffle
     twice). Deliberately NOT persisted here: callers that read it
-    repeatedly persist it in their own staging layer (see
-    queries/llm_queries.staged_collapse, which also owns release via
-    clear_staging) so a long session doesn't leak one cached table
-    per call."""
+    repeatedly persist it in a session-staged artifact (see
+    queries/llm_queries.staged_collapse; icecube_spark.staging owns
+    its release) so a long session doesn't leak one cached table per
+    call."""
     wth = Window.partitionBy("_th")
     return (
         df.select(F.col(id_col), F.md5(normalized(text_col)).alias("_th"))
@@ -167,7 +167,8 @@ def minhash_lsh_pairs(
     `grams`/`sigs` accept a pre-staged (persisted) gram/signature
     table so a session running several dedup reports computes the
     shingling and the 64 min-hash aggregates ONCE (the staging-table
-    pattern; see queries/llm_queries.staged_corpus).
+    pattern; see queries/llm_queries.staged_corpus and the session
+    store in icecube_spark.staging).
 
     Degenerate-bucket guard (`collapse_exact`): real crawls carry
     mass exact-duplicate templates; all N copies land in the SAME
@@ -317,9 +318,10 @@ def ngram_jaccard_pairs(
     pair sharing >= 1 gram with df <= max_df.
 
     NOTE: `max_df` only applies when `cands` is None — a caller
-    passing a pre-staged candidate table (staged_candidates) owns the
-    cap that table was built with, and this function will not
-    re-derive or re-check it.
+    passing a pre-staged candidate table (llm_queries.staged_candidates,
+    held in the icecube_spark.staging store) owns the cap that table
+    was built with, and this function will not re-derive or re-check
+    it.
     """
     if cands is not None and max_df != 64:
         raise ValueError(

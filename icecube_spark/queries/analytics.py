@@ -9,27 +9,24 @@ for skew splitting at scale.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from typing import NamedTuple
-
-from icecube_spark import catalog
+from icecube_spark import catalog, staging
 from icecube_spark.functions.parity import davg, dsum, qsum
 from icecube_spark.functions.materialize import materialize
-from icecube_spark.session import staging_stale
 
 
 class CopurchaseStaging(NamedTuple):
-    """The session-staged co-purchase artifacts (field order is part
-    of the release contract — consumers access by NAME)."""
+    """The session-staged co-purchase artifacts (consumers access
+    them by NAME)."""
 
     baskets: DataFrame  # distinct (l_orderkey, l_partkey)
     pairs: DataFrame  # oriented (pa < pb, n_orders)
     edges2: DataFrame  # support>=2 edge list (pa, pb)
-
-
-_STAGED_COPURCHASE: dict[str, CopurchaseStaging] = {}
 
 
 def staged_copurchase(spark: SparkSession, sf_dir: str) -> CopurchaseStaging:
@@ -40,24 +37,17 @@ def staged_copurchase(spark: SparkSession, sf_dir: str) -> CopurchaseStaging:
     (B26), basket_lift (B29), part_triangles (B36), part_pagerank
     (P33). At 100 TB this is the materialized co-occurrence view a
     recommender stack maintains next to the fact table; staging it is
-    the session-scale equivalent (same ownership discipline as the
-    dedup/IVF stores in llm_queries: release via
-    release_staging/clear_staging).
+    the session-scale equivalent, held in the session staging store
+    (icecube_spark.staging) with every other staged_* artifact and
+    released by staging.release.
 
     The pair build is the one bounded self-join all four keys were
     paying separately: fanout ≤ lines-per-order (≤ 7 in TPC-H shape),
     both sides share one orderkey shuffle, the (pa, pb) aggregate
-    partial-combines map-side. A cached entry bound to a stopped-and-
-    recreated SparkSession is detected and rebuilt instead of handing
-    consumers dead py4j references.
+    partial-combines map-side.
     """
-    from pyspark import StorageLevel
 
-    cached = _STAGED_COPURCHASE.get(sf_dir)
-    if cached is not None and staging_stale(cached, spark):
-        release_copurchase_staging(sf_dir)
-        cached = None
-    if cached is None:
+    def build():
         li = (
             catalog.load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_partkey")
@@ -78,24 +68,9 @@ def staged_copurchase(spark: SparkSession, sf_dir: str) -> CopurchaseStaging:
             .select("pa", "pb")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        cached = CopurchaseStaging(li, pairs, edges2)
-        _STAGED_COPURCHASE[sf_dir] = cached
-    return cached
+        return CopurchaseStaging(li, pairs, edges2)
 
-
-def release_copurchase_staging(sf_dir: str | None = None) -> None:
-    """Release the co-purchase staging of one corpus (or all when
-    sf_dir is None) — the ownership twin of staged_copurchase."""
-    keys = [sf_dir] if sf_dir is not None else list(_STAGED_COPURCHASE)
-    for key in keys:
-        val = _STAGED_COPURCHASE.pop(key, None)
-        if val is None:
-            continue
-        for df in val:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+    return staging.get(spark, ("copurchase", sf_dir), build)
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,10 +3,11 @@ embeddings."""
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from icecube_spark import catalog
+from icecube_spark import catalog, staging
 from icecube_spark.operators import dedup, multimodal, similarity, text
 from icecube_spark.functions.materialize import materialize
 from icecube_spark.operators import pipeline as pipeline_ops
@@ -20,22 +21,6 @@ def _emb(spark, sf_dir):
     return catalog.load(spark, sf_dir, "embeddings")
 
 
-def _fresh(store: dict, key, spark):
-    """Get a staging-store entry, invalidating (release + rebuild
-    signal) any entry bound to a stopped-and-recreated SparkSession —
-    consumers of a stale entry fail with opaque py4j errors."""
-    from icecube_spark.session import staging_stale
-
-    cached = store.get(key)
-    if cached is not None and staging_stale(cached, spark):
-        _release_entry(store.pop(key))
-        cached = None
-    return cached
-
-
-_STAGED: dict[str, tuple] = {}
-
-
 def staged_corpus(spark, sf_dir):
     """Session-scoped corpus staging: the gram table and MinHash
     signature table persisted ONCE per sf_dir and shared by every
@@ -44,9 +29,8 @@ def staged_corpus(spark, sf_dir):
     local[32] it is a MEMORY_AND_DISK persist. Results are identical
     with or without staging — the oracle tests run the unstaged
     operators directly."""
-    from pyspark import StorageLevel
 
-    if _fresh(_STAGED, sf_dir, spark) is None:
+    def build():
         docs = _docs(spark, sf_dir)
         grams = dedup.with_grams(docs.select("doc_id", "text"), "text").select(
             "doc_id", "grams"
@@ -54,11 +38,9 @@ def staged_corpus(spark, sf_dir):
         sigs = dedup.minhash_signatures(docs, "doc_id", "text").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        _STAGED[sf_dir] = (grams, sigs)
-    return _STAGED[sf_dir]
+        return grams, sigs
 
-
-_STAGED_COLLAPSE: dict[str, object] = {}
+    return staging.get(spark, ("corpus", sf_dir), build)
 
 
 def staged_collapse(spark, sf_dir):
@@ -68,10 +50,8 @@ def staged_collapse(spark, sf_dir):
     (D2, P6, P23, P32, P39); without staging each re-runs the content
     hash window and two semi-joins. Results identical either way —
     the collapse is output-invariant by construction."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
 
-    if _fresh(_STAGED_COLLAPSE, sf_dir, spark) is None:
+    def build():
         grams, sigs = staged_corpus(spark, sf_dir)
         members = dedup.exact_group_members(
             _docs(spark, sf_dir), "doc_id", "text"
@@ -85,11 +65,9 @@ def staged_collapse(spark, sf_dir):
         rep_sigs = sigs.join(rep_ids, "doc_id", "left_semi").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        _STAGED_COLLAPSE[sf_dir] = (members, rep_grams, rep_sigs)
-    return _STAGED_COLLAPSE[sf_dir]
+        return members, rep_grams, rep_sigs
 
-
-_STAGED_CANDS: dict[str, object] = {}
+    return staging.get(spark, ("collapse", sf_dir), build)
 
 
 def staged_candidates(spark, sf_dir):
@@ -99,17 +77,13 @@ def staged_candidates(spark, sf_dir):
     the window-count + bucket self-join + DISTINCT that builds it is
     the most expensive part of both plans. Same at-scale story: a
     dedup campaign writes candidates once, every verifier reads them."""
-    from pyspark import StorageLevel
-
-    if _fresh(_STAGED_CANDS, sf_dir, spark) is None:
-        grams, _ = staged_corpus(spark, sf_dir)
-        _STAGED_CANDS[sf_dir] = dedup.capped_gram_candidates(
-            grams, "doc_id", max_df=64
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _STAGED_CANDS[sf_dir]
-
-
-_STAGED_MH_PAIRS: dict[str, object] = {}
+    return staging.get(
+        spark,
+        ("candidates", sf_dir),
+        lambda: dedup.capped_gram_candidates(
+            staged_corpus(spark, sf_dir)[0], "doc_id", max_df=64
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def staged_minhash_pairs(spark, sf_dir):
@@ -120,18 +94,15 @@ def staged_minhash_pairs(spark, sf_dir):
     mining + verify join is the expensive part of each. A real dedup
     campaign materializes the pair table once and every downstream
     report reads it."""
-    from pyspark import StorageLevel
 
-    if _fresh(_STAGED_MH_PAIRS, sf_dir, spark) is None:
+    def build():
         members, grams, sigs = staged_collapse(spark, sf_dir)
-        _STAGED_MH_PAIRS[sf_dir] = dedup.minhash_lsh_pairs(
+        return dedup.minhash_lsh_pairs(
             _docs(spark, sf_dir), "doc_id", "text", threshold=0.8,
             grams=grams, sigs=sigs, members=members,
         ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _STAGED_MH_PAIRS[sf_dir]
 
-
-_STAGED_PAIRS: dict[tuple, object] = {}
+    return staging.get(spark, ("minhash_pairs", sf_dir), build)
 
 
 def staged_jaccard_pairs(spark, sf_dir, threshold):
@@ -143,19 +114,15 @@ def staged_jaccard_pairs(spark, sf_dir, threshold):
     pipeline re-runs per reference. Same at-scale story as the other
     staged_* tables: a dedup campaign writes pairs once, every graph
     diagnostic reads them."""
-    from pyspark import StorageLevel
-
-    key = (sf_dir, threshold)
-    if _fresh(_STAGED_PAIRS, key, spark) is None:
-        _STAGED_PAIRS[key] = dedup.ngram_jaccard_pairs(
+    return staging.get(
+        spark,
+        ("jaccard_pairs", sf_dir, threshold),
+        lambda: dedup.ngram_jaccard_pairs(
             _docs(spark, sf_dir), "doc_id", "text", threshold=threshold,
             grams=staged_corpus(spark, sf_dir)[0],
             cands=staged_candidates(spark, sf_dir),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _STAGED_PAIRS[key]
-
-
-_STAGED_IVF: dict[str, tuple] = {}
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def staged_ivf_index(spark, sf_dir):
@@ -164,82 +131,24 @@ def staged_ivf_index(spark, sf_dir):
     nprobe curve, the scale-path tests). At 100 TB the index is a
     materialized artifact (vectors written bucketed by cluster +
     broadcastable centroids); staging it is the session-scale
-    equivalent. The assigned table persists MEMORY_AND_DISK; release
-    via release_staging/clear_staging like every staged_* table."""
-    from pyspark import StorageLevel
-
+    equivalent. The assigned table persists MEMORY_AND_DISK; the
+    centroids are a driver-built k-row table and stay unpersisted."""
     from icecube_spark.operators.ivf import build_ivf_index
 
-    if _fresh(_STAGED_IVF, sf_dir, spark) is None:
+    def build():
         assigned, centroids = build_ivf_index(
             _emb(spark, sf_dir), "vec_id", "embedding", k=16, n_iter=4
         )
-        _STAGED_IVF[sf_dir] = (
-            assigned.persist(StorageLevel.MEMORY_AND_DISK), centroids
-        )
-    return _STAGED_IVF[sf_dir]
+        return assigned.persist(StorageLevel.MEMORY_AND_DISK), centroids
 
-
-_STAGED_TFIDF: dict[str, bool] = {}
+    return staging.get(spark, ("ivf_index", sf_dir), build)
 
 
 def staged_tfidf_fit(spark, sf_dir) -> None:
-    """Fit the MLlib TF-IDF pipeline ONCE per corpus (the model is a
-    written artifact at 100 TB); text_features and the bench staging
-    warmup both route through this gate."""
-    if sf_dir not in _STAGED_TFIDF:
-        from icecube_spark.operators.features import tfidf_features
-
-        tfidf_features(_docs(spark, sf_dir), "doc_id", "text")
-        _STAGED_TFIDF[sf_dir] = True
-
-
-_STAGING_STORES = (
-    _STAGED, _STAGED_COLLAPSE, _STAGED_CANDS, _STAGED_PAIRS,
-    _STAGED_MH_PAIRS, _STAGED_IVF,
-)
-
-
-def _release_entry(val) -> None:
-    for df in val if isinstance(val, tuple) else (val,):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def release_staging(sf_dir: str) -> None:
-    """Release the staging tables of ONE corpus (grams, signatures,
-    collapse members, candidate/pair graphs). A long-lived session
-    that walks many corpora calls this when a campaign finishes so
-    the executor cache holds only live corpora — the per-corpus twin
-    of clear_staging()."""
-    for store in _STAGING_STORES:
-        for key in [
-            k for k in store
-            if k == sf_dir or (isinstance(k, tuple) and k and k[0] == sf_dir)
-        ]:
-            _release_entry(store.pop(key))
-    _STAGED_TFIDF.pop(sf_dir, None)
-    from icecube_spark.queries.analytics import release_copurchase_staging
-
-    release_copurchase_staging(sf_dir)
-
-
-def clear_staging() -> None:
-    """Release every session-scoped staging table (grams, signatures,
-    collapse members, candidate pairs). The ownership twin of the
-    staged_* persists above: a long-lived session that switches
-    corpora calls this between campaigns instead of leaking one
-    cached table set per sf_dir."""
-    for store in _STAGING_STORES:
-        for val in store.values():
-            _release_entry(val)
-        store.clear()
-    _STAGED_TFIDF.clear()
-    from icecube_spark.queries.analytics import release_copurchase_staging
-
-    release_copurchase_staging()
+    """No-op. text_features no longer fits TF-IDF: its output comes
+    from a native projection and never depended on the fit. Kept only
+    because the benchmark's staging list (perfbench/workloads.py)
+    calls it by name; it goes when that list drops it."""
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,20 +265,13 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib TF-IDF features. Returns stable stats columns rather
-    than raw ml vectors so the driver can hash the schema — and since
-    round 6 those stats come from a native tokenizer projection, the
-    key is fully oracle-checked (the engine-internal HashingTF/IDF
-    vectors never leave the fit).
-
-    The IDF fit is the exercised MLlib operator (one corpus pass),
-    cached per corpus like every staged_* artifact (at 100 TB the IDF
-    model is a written artifact the campaign fits once); the stats
-    columns come from a separate native projection — routing them
-    through model.transform re-ran the tokenizer UDF per stats
-    expression after projection collapse (the r5 2.2 s reading)."""
+    """Per-document TF-IDF input stats: token and distinct-term counts
+    from a native tokenizer projection, so the key is fully
+    oracle-checked. No HashingTF/IDF model is fitted: the stats never
+    depended on one, and routing them through model.transform re-runs
+    the tokenizer UDF per stats expression after projection collapse.
+    The MLlib operator itself is operators/features.tfidf_features."""
     docs = _docs(spark, sf_dir)
-    staged_tfidf_fit(spark, sf_dir)
     toks = F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "")
     return docs.select(
         "doc_id",

@@ -64,18 +64,3 @@ def get_spark(app_name: str = "icecube-spark", master: str | None = None) -> Spa
             builder = builder.config(k.strip(), v.strip())
     return builder.getOrCreate()
 
-
-def staging_stale(cached: object, spark: SparkSession) -> bool:
-    """True when a cached session-scoped staging entry (a DataFrame or
-    a tuple whose first element is one) is bound to a DIFFERENT
-    SparkSession than the caller's — e.g. the original session was
-    stopped and recreated. Consumers of a stale entry fail with opaque
-    py4j errors; the staging stores use this to rebuild instead."""
-    head = cached[0] if isinstance(cached, tuple) else cached
-    try:
-        owner = head.sparkSession
-        if owner is spark:
-            return False
-        return not owner._jsparkSession.equals(spark._jsparkSession)
-    except Exception:
-        return True

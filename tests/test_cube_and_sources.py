@@ -375,3 +375,57 @@ def test_corrupt_json_records_are_quarantined(spark, tmp_path):
     assert bad.count() == 2
     assert {r.id for r in good.collect()} == {1, 2}
     df.unpersist()
+
+
+def test_slc_cube_dedups_same_date_and_grids_gaps(spark, tmp_path):
+    """SLC and GRD share one filter-and-grid step: on a synthesized
+    3-product SLC stack where two products share a date, temporal
+    dedup keeps the later acquisition, and temporal_resolution lays
+    a daily slot grid whose empty slots are null-product gap rows."""
+    import numpy as np
+
+    from icecube_spark.cube import create_cube_from_slc
+    from icecube_spark.sources.hdf5_write import write_h5
+
+    rng = np.random.default_rng(7)
+    products = [  # (name, acquisition_end_utc, incidence_center)
+        ("slc_a.h5", "2021-03-01T08:00:00.000000", 25.0),
+        ("slc_b.h5", "2021-03-01T20:00:00.000000", 30.0),
+        ("slc_c.h5", "2021-03-04T10:30:00.000000", 28.0),
+    ]
+    s_i = {}
+    for name, end_utc, angle in products:
+        s_i[name] = rng.normal(0, 300, (4, 4)).astype("i2")
+        (tmp_path / name).write_bytes(
+            write_h5(
+                {
+                    "s_i": s_i[name],
+                    "s_q": rng.normal(0, 300, (4, 4)).astype("i2"),
+                    "product_file": name,
+                    "acquisition_end_utc": end_utc,
+                    "incidence_center": np.array([angle], dtype="f8"),
+                    "orbit_direction": "ASCENDING",
+                    "number_of_azimuth_samples": np.array([4], dtype="i4"),
+                    "number_of_range_samples": np.array([4], dtype="i4"),
+                }
+            )
+        )
+    cfg = CubeConfig.from_dict(
+        {
+            "start_date": 20210301,
+            "end_date": 20210306,
+            "temporal_resolution": 1,
+            "temporal_overlap": False,
+        }
+    )
+    dc = create_cube_from_slc(spark, str(tmp_path), cfg)
+    assert dc.ts_col == "slot_date" and dc.band_cols == ["Real", "Complex"]
+    rows = dc.df.orderBy("slot_date").collect()
+    assert [str(r.slot_date) for r in rows] == [
+        f"2021-03-0{d}" for d in range(1, 7)
+    ]
+    assert [r.product_file for r in rows] == [
+        "slc_b.h5", None, None, "slc_c.h5", None, None,
+    ]
+    assert rows[0].Real == list(s_i["slc_b.h5"].astype("f8").ravel())
+    assert all(r.Real is None and r.Complex is None for r in rows if r.product_file is None)

@@ -524,9 +524,9 @@ def test_registry_wide_funnel_sweep(spark, sf_dir):
     # sit on the staged co-purchase AGGREGATE and must read as such).
     # Clearing staging makes the sweep scan full lineage regardless of
     # suite order; plan CONSTRUCTION alone never re-materializes it.
-    from icecube_spark.queries.llm_queries import clear_staging
+    from icecube_spark import staging
 
-    clear_staging()
+    staging.release()
 
     qs = entry_mod.queries()
     flagged, cartesians, errs = [], [], {}
