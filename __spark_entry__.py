@@ -7,6 +7,9 @@ from SURVEY.md §2 with its DuckDB oracle twin.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,11 +27,11 @@ from icecube_spark.queries.timeseries_oracles import ORACLES as TIMESERIES_ORACL
 
 # Registration ORDER matters: the driver grades a ~50-key sample from
 # the head. The dict below keeps the historical hand-ordering (newest
-# wave first); ``queries()`` then mechanically floats every key WITHOUT
-# driver-green evidence (r1-r4 CORRECTNESS files, frozen in
-# ``_DRIVER_GREEN`` below) to the head — and sinks the declared
-# rows-only keys (``_NO_ORACLE``) below them — so each round's sample
-# grades maximum new oracle-able surface.
+# wave first); ``queries()`` then mechanically floats every oracle key
+# WITHOUT driver-green evidence (``_DRIVER_GREEN``, read from the
+# committed CORRECTNESS files) to the head — and sinks the rows-only
+# keys (``_NO_ORACLE``) below them — so each round's sample grades
+# maximum new oracle-able surface.
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- wave 55 (A74, B84, C122, E49, P80) ---
     "cube_center_of_mass": dq.cube_center_of_mass,
@@ -585,207 +588,35 @@ def entry(spark: SparkSession) -> DataFrame:
     return analytics.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-# Keys with a fully-green driver grade (rows+schema+hash) in some prior
-# round's CORRECTNESS_r{N}.json. These sort to the TAIL of queries() so
-# the driver's head-sample re-grades only unproven surface. Regenerate
-# with: union over rounds of keys where rows/schema/hash all true.
-_DRIVER_GREEN = frozenset({
-    "abc_xyz_classes", "basket_lift", "basket_pairs", "bbit_minhash_eval",
-    "blocklist_filter", "bloom_filter_eval", "bm25_topk",
-    "boilerplate_prefixes", "bollinger_bands", "bounce_rate",
-    "bpe_merge_candidates", "brand_spearman", "chi2_terms", "cohort_ltv",
-    "corr_matrix", "croston_forecast", "cube_band_index",
-    "cube_baseline_pairs", "cube_composite", "cube_config_filter",
-    "cube_coregister", "cube_downsample", "cube_enl", "cube_gradient",
-    "cube_hillshade", "cube_hist_equalize", "cube_hist_match",
-    "cube_local_moran", "cube_mask_components", "cube_merge", "cube_pivot",
-    "cube_resample_gapfill", "cube_resample_interpolate",
-    "cube_rgb_composite", "cube_temporal_dedup", "curation_waterfall",
-    "curriculum_shards", "customer_churn", "dedup_incremental",
-    "diff_in_diff", "dsir_weights", "dup_rate_by_source",
-    "embed_bucket_stats", "embed_pq_codes", "entropy_by_source",
-    "erasure_impact", "feature_binning", "focal_mean",
-    "forecast_baseline_eval", "haar_energy", "hamming_recall",
-    "js_divergence_langs", "k_anonymity", "kmeans_refine",
-    "label_agreement", "label_noise_knn", "label_silhouette",
-    "labels_align", "labels_vector_align", "license_notice_rate",
-    "mann_whitney", "markov_accuracy", "matryoshka_recall", "max_drawdown",
-    "media_chunk_windows", "media_prefix_dedup", "metadata_concat",
-    "metadata_summary", "mi_lang_source", "minhash_accuracy",
-    "minhash_eval_f1", "mix_drift", "mojibake_score", "multimodal_tiles",
-    "multitouch_attribution", "nation_affinity", "packing_curve",
-    "part_triangles", "peak_detection", "period_detect", "pq_code_balance",
-    "price_elasticity", "price_index", "q10_returned_items",
-    "q11_important_stock", "q13_customer_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_count", "q17_small_quantity",
-    "q18_large_orders", "q19_disjunctive_revenue", "q1_pricing_summary",
-    "q20_excess_stock", "q21_waiting_supplier", "q22_global_sales",
-    "q3_shipping_priority", "q4_order_priority", "q5_local_supplier",
-    "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "quantile_normalize", "quota_rebalance",
-    "rake_keywords", "range_join_clicks", "readability_scores",
-    "repeated_substrings", "revenue_growth", "rfm_segments",
-    "rolling_daily_revenue", "sar_band_math", "sax_symbols",
-    "segment_migration", "series_lead_lag", "sessionize",
-    "shard_checksums", "ship_latency_quantiles", "skyline_parts",
-    "spatial_bbox_join", "spatial_overlap_1d", "stratified_kfold",
-    "stupid_backoff_logprob", "supplier_hhi", "supplier_scorecard",
-    "table_diff", "tfidf_cosine_pairs", "top_parts_by_revenue",
-    "translation_pairs", "uncertainty_sampling", "unigram_logprob",
-    "value_at_risk", "vocab_coverage", "weighted_median_price",
-    "window_funnel_strict", "window_tumbling", "winsorize_values",
-    "zonal_stats", "zorder_plan",
-    # r4 greens (CORRECTNESS_r04.json: rows+schema+hash all true)
-    "anomaly_cooccurrence", "backlog_aging", "brand_loyalty",
-    "casing_profile", "chunking_plan", "cube_box_counting",
-    "cube_change_vector", "cube_destripe", "cube_inpaint",
-    "cube_laplacian", "cube_orientation_hist", "cube_quadtree",
-    "cube_stretch_params", "cube_temporal_anomaly", "cube_velocity_field",
-    "curation_ablation", "customer_pareto_overlap", "dedup_token_savings",
-    "distance_concentration", "dup_cluster_purity", "dup_pair_length_bias",
-    "first_passage_time", "flag_priority_residuals", "gate_kappa",
-    "knn_hubness", "langid_margin", "lifecycle_value_curve",
-    "media_format_sniff", "minhash_band_tuning", "neyman_allocation",
-    "order_size_profile", "payload_compression_probe",
-    "peak_hour_stability", "purchase_acceleration", "retention_halflife",
-    "sentence_dedup_rate", "session_concurrency", "shingle_stats",
-    "simhash_bit_balance", "split_length_parity", "status_mix_trend",
-    "supplier_churn", "tax_rate_profile", "transition_latency",
-    "type_affinity", "value_concentration_trend", "volume_bars",
-    "volume_price_decomposition", "yule_k",
-    # r5 greens (CORRECTNESS_r05.json: rows+schema+hash all true)
-    "anchor_margin_deciles", "anomaly_persistence", "balance_sign_profile",
-    "brand_price_realization", "cube_anisotropy", "cube_border_gradient",
-    "cube_class_transitions", "cube_column_defects", "cube_hist_modes",
-    "cube_parity_contrast", "cube_quadrant_quartiles", "cube_revisit_stats",
-    "cube_row_runs", "cube_symmetry_profile", "customer_reactivation",
-    "daily_new_returning", "discount_tax_interaction", "dup_group_span",
-    "gap_autocorrelation", "gap_regularity", "id_continuity_audit",
-    "interarrival_hazard", "ivf_probe_curve", "label_quantization_distortion",
-    "length_band_dup_rate", "line_position_effect", "margin_waterfall",
-    "media_chunk_dedup_rate", "media_dup_factor", "media_size_profile",
-    "norm_percentiles_by_label", "norm_quality_deciles",
-    "normalization_dup_gain", "numeric_token_rate", "oov_rate_by_source",
-    "order_dow_profile", "order_total_consistency",
-    "part_supplier_cardinality", "prefix_collision_curve",
-    "priority_value_skew", "round_value_bias", "sample_overlap_audit",
-    "seasonality_stability", "session_depth_histogram", "source_coherence",
-    "split_hash_uniformity", "type_mix_entropy_trend", "url_email_density",
-    "weekend_lift", "word_length_profile",
-    # r6 greens (CORRECTNESS_r06.json: rows+schema+hash all true)
-    "acctbal_spend_deciles", "anchor_coverage_curve", "ar1_halflife",
-    "burrows_delta", "burstiness_index", "char_trigram_logprob",
-    "cosine_label_pr_curve", "cross_correlation", "cross_sell_matrix",
-    "cross_shard_dup_rate", "cube_center_of_mass", "cube_contour_bands",
-    "cube_diagonal_banding", "cube_flow_direction", "cube_integral_image",
-    "cube_layover_shadow", "cube_lbp_texture", "cube_swath_coverage",
-    "dedup_cost_model", "dedup_sorted_neighborhood", "dow_hour_interaction",
-    "dup_transitivity_audit", "embed_isotropy", "hurst_exponent",
-    "id_hash_collisions", "knn_margin", "length_filter_tuning",
-    "mattr_diversity", "media_frame_entropy", "media_loudness",
-    "month_end_effect", "nation_trade_balance", "order_ship_span",
-    "price_dispersion", "priority_escalation_trend", "quantity_integrality",
-    "quantization_sweep", "retention_policy_matrix", "return_rate_anomaly",
-    "revenue_run_lengths", "sample_size_planner", "spectral_entropy",
-    "split_stratification_check", "supply_risk", "temperature_sweep",
-    "term_burstiness", "token_budget_sample", "transition_entropy",
-    "weekly_profile_drift", "whitespace_profile",
-    # r7 greens (CORRECTNESS_r07.json: rows+schema+hash all true)
-    "bigram_logprob", "bucket_label_ari", "bulk_discount_curve",
-    "char_entropy_docs", "cms_heavy_hitters", "code_detect",
-    "cosine_adjacent_hist", "cube_aspect_octant", "cube_cfar_detect",
-    "cube_glcm_texture", "cube_lee_filter", "cube_median_filter",
-    "cube_morph_open", "cube_otsu_threshold", "cube_ring_stats",
-    "cube_ruggedness", "cube_variogram", "dedup_winnowing",
-    "doc_stitch_pairs", "dot_cosine_rank_corr", "drawdown_durations",
-    "embed_drift", "hard_negatives", "heaps_fit", "interarrival_fit",
-    "intervention_impact", "knn_reciprocity", "kruskal_wallis",
-    "lead_time_sla", "ljung_box", "lorenz_curve", "mean_shift_split",
-    "media_audio_silence", "media_scene_cuts", "new_repeat_revenue",
-    "normalization_impact", "pq_adc_topk", "psi_drift",
-    "quality_reliability", "reorder_intervals", "revenue_theil",
-    "rp_recall", "runs_test", "seasonal_strength", "seasonality_index",
-    "shard_skew_report", "stopword_profile", "topk_coverage_curve",
-    "truncation_loss", "turning_points",
-    # r8 greens (CORRECTNESS_r08.json: rows+schema+hash all true)
-    "acf_daily_value", "active_streaks", "asof_join", "asof_join_forward",
-    "asof_join_nearest", "benford_deviation", "blocklist_fuzzy",
-    "burst_detection", "chunk_dedup", "conversion_lag",
-    "cross_source_leakage", "cube_coherence", "dedup_clusters",
-    "dedup_minhash_lsh", "dedup_threshold_curve", "discount_uplift",
-    "dow_anova", "dup_ngram_fraction", "epoch_plan", "gap_stats",
-    "ks_drift", "lsh_bucket_profile", "m4_downsample", "mad_outliers",
-    "media_frame_dedup", "mmr_diversify", "near_dup_diff", "order_backlog",
-    "order_gap_stats", "part_pagerank", "perplexity_buckets",
-    "pit_join_orders", "pq_recall_eval", "q12_ship_delay",
-    "q2_min_cost_supplier", "quality_length_corr", "rapid_repeat_events",
-    "record_days", "revenue_share_window", "rollup_revenue", "sales_cube",
-    "scd2_intervals", "seasonal_decompose", "split_leakage_check",
-    "survival_km", "theil_sen_trend", "time_weighted_avg",
-    "tokenizer_fertility", "vocab_stats", "zipf_fit",
-    # r9 greens (CORRECTNESS_r09.json: rows+schema+hash all true)
-    "ann_recall_eval", "bigram_lift", "cdc_merge", "centroid_similarity",
-    "changepoint_cusum", "char_profile", "class_weights",
-    "cube_change_detection", "cube_completeness", "cube_mosaic",
-    "dataset_card", "dedup_containment", "dedup_embedding_cosine",
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_simhash",
-    "doc_fingerprint", "doc_top_tfidf", "downsample_lttb",
-    "embed_ann_lsh", "embed_cosine_topk", "embed_dim_stats",
-    "embed_knn_label", "embed_label_centroids", "embed_norm_outliers",
-    "embed_top_dims", "event_paths", "ewma_smooth", "feature_pivot",
-    "fuzzy_name_pairs", "gopher_quality", "interval_coverage", "lang_id",
-    "langid_confusion", "ngram_novelty", "pareto_report",
-    "quality_gate_funnel", "quality_score", "repetition_stats",
-    "seasonal_dow", "sentence_stats", "sequence_packing",
-    "shard_manifest", "spatial_overlap_polygon", "term_commonness",
-    "token_count", "weighted_sample",
-})
+def _driver_green() -> frozenset[str]:
+    """Keys fully green (rows, schema and hash) in any committed driver
+    grade round — one ``CORRECTNESS_r{N}.json`` per round next to this
+    file. Folding a round in means committing its file."""
+    green = set()
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            green.update(
+                k for k, grade in json.load(f).items()
+                if all(grade.get(m) for m in ("rows_match", "schema_match", "hash_match"))
+            )
+    return frozenset(green)
 
-# Keys that most need a FRESH driver grade, pinned to the very front of
-# the head so the next ~50-key driver sample re-grades them:
-# (a) the three r9 driver-reds, repaired this round (canonical scalar
-#     serialization of array columns; DOUBLE x in embed_standardize);
-# (b) the r9 optimizer rewrites whose equivalence so far rests on the
-#     repo's own driver_verify + pytest, not on a driver grade
-#     (r9 VERDICT "Next round" item 2); a key drops OFF this list once
-#     a later CORRECTNESS_r{N}.json shows it green.
-_REGRADE_FIRST = (
-    "dedup_survivorship", "embed_quantize", "embed_standardize",
-    "psi_drift", "brand_loyalty", "table_diff", "part_pagerank",
-    "ship_latency_quantiles", "reorder_intervals", "markov_accuracy",
-    "curation_waterfall", "chi2_terms", "segment_migration",
-    "revenue_theil", "customer_pareto_overlap", "knn_reciprocity",
-    "pq_recall_eval", "price_index",
-    # r10 rewrites (bucketed cdf_between_lookup replaces the
-    # nested-loop inverse-CDF join)
-    "cube_hist_match", "quantile_normalize",
-)
+
+_DRIVER_GREEN = _driver_green()
 
 # Keys that deliberately carry NO DuckDB oracle (rows-only grade by
 # design — each is pinned by a numpy-twin/property pytest instead).
-# They sort AFTER never-graded oracle-able keys so the driver's
-# head-sample never burns a hard-evidence slot on a rows-only grade.
-_NO_ORACLE = frozenset({
-    "embed_pca_top", "approx_quantiles",
-    "approx_profile", "multimodal_features",
-})
+_NO_ORACLE = frozenset(_QUERIES.keys() - _ORACLES.keys())
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # _REGRADE_FIRST pins unconditionally: a rewritten key needs a fresh
-    # driver grade even when an OLD (pre-rewrite) grade sits in
-    # _DRIVER_GREEN.
-    front = {k: _QUERIES[k] for k in _REGRADE_FIRST if k in _QUERIES}
-    head = {
-        k: v for k, v in _QUERIES.items()
-        if k not in _DRIVER_GREEN and k not in _NO_ORACLE and k not in front
-    }
-    mid = {k: v for k, v in _QUERIES.items() if k in _NO_ORACLE}
-    tail = {
-        k: v for k, v in _QUERIES.items()
-        if k in _DRIVER_GREEN and k not in front
-    }
-    return {**front, **head, **mid, **tail}
+    # Never-graded oracle keys first, then the rows-only keys, then the
+    # driver-green keys, each tier in _QUERIES order.
+    def tier(k: str) -> int:
+        return 1 if k in _NO_ORACLE else 2 if k in _DRIVER_GREEN else 0
+
+    return {k: _QUERIES[k] for k in sorted(_QUERIES, key=tier)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -12,11 +12,12 @@ so the timed shots are steady-state (same convention as bench.py).
 from __future__ import annotations
 
 import argparse
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from icecube_spark.session import get_spark  # noqa: E402

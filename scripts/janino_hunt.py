@@ -1,7 +1,7 @@
 """Run suspect queries one at a time; report janino codegen failures + wall."""
-import io, sys, time, contextlib
+import io, os, sys, time, contextlib
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from icecube_spark.session import get_spark as get_session
 import __spark_entry__ as E
 

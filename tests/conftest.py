@@ -3,14 +3,19 @@
 from __future__ import annotations
 
 import os
+import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
+import __spark_entry__ as entry
 from icecube_spark.catalog import TABLES
 from icecube_spark.session import get_spark
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+import driver_verify  # noqa: E402  (the driver gate's comparator)
 
 SF_DIR = os.environ.get("ICECUBE_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -52,26 +57,22 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf
 
 
-def assert_matches_oracle(spark_df, oracle_con, sql: str, float_exact: bool = True):
-    got = normalize(spark_df.toPandas())
-    want = normalize(oracle_con.sql(sql).df())
-    assert list(got.columns) == list(want.columns), (
-        f"column mismatch: {list(got.columns)} vs {list(want.columns)}"
-    )
-    assert len(got) == len(want), f"row count {len(got)} vs {len(want)}"
-    for c in got.columns:
-        g, w = got[c], want[c]
-        if np.issubdtype(g.dtype, np.floating) or np.issubdtype(w.dtype, np.floating):
-            g = g.astype(float).to_numpy()
-            w = w.astype(float).to_numpy()
-            both_nan = np.isnan(g) & np.isnan(w)
-            if float_exact:
-                ok = (g == w) | both_nan
-            else:
-                ok = np.isclose(g, w, rtol=1e-9, atol=1e-12) | both_nan
-            assert ok.all(), f"float col {c}: max diff {np.nanmax(np.abs(g - w))}"
-        else:
-            pd.testing.assert_series_equal(
-                g.reset_index(drop=True), w.reset_index(drop=True),
-                check_dtype=False, check_names=False, obj=f"col {c}",
-            )
+# TPC-H queries whose parity ids live in test_pipeline_ops
+# (test_tpch_matches_oracle), not in test_analytics.
+TPCH_B = frozenset({
+    "q2_min_cost_supplier", "q7_volume_shipping", "q8_market_share",
+    "q9_product_profit", "q11_important_stock", "q12_ship_delay",
+    "q15_top_supplier", "q16_supplier_count", "q17_small_quantity",
+    "q19_disjunctive_revenue", "q20_excess_stock", "q21_waiting_supplier",
+    "q22_global_sales",
+})
+
+
+def assert_oracle_parity(spark, sf_dir, oracle, key: str):
+    """The registered query ``key`` matches its DuckDB twin under the
+    ``compare`` the driver gate and the benchmark use: sorted columns,
+    sorted rows, bit-equal floats, no dtype or float-width drift."""
+    got = entry.queries()[key](spark, sf_dir).toPandas()
+    want = oracle.sql(entry.oracle_sql()[key]).df()
+    ok, why = driver_verify.compare(got, want)
+    assert ok, why

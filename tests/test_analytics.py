@@ -1,69 +1,17 @@
-"""SURVEY §2 group B: analytics core vs DuckDB oracle (bit-exact)."""
+"""SURVEY §2 group B: analytics core vs DuckDB oracle (bit-exact),
+plus plan shapes and invariants."""
 
 import pytest
 
 from icecube_spark.queries import analytics
 from icecube_spark.queries.analytics_oracles import ORACLES
 
-from .conftest import assert_matches_oracle
-
-CASES = [
-    ("margin_waterfall", analytics.margin_waterfall),
-    ("cross_sell_matrix", analytics.cross_sell_matrix),
-    ("price_dispersion", analytics.price_dispersion),
-    ("priority_escalation_trend", analytics.priority_escalation_trend),
-    ("acctbal_spend_deciles", analytics.acctbal_spend_deciles),
-    ("return_rate_anomaly", analytics.return_rate_anomaly),
-    ("supply_risk", analytics.supply_risk),
-    ("nation_trade_balance", analytics.nation_trade_balance),
-    ("bulk_discount_curve", analytics.bulk_discount_curve),
-    ("lead_time_sla", analytics.lead_time_sla),
-    ("seasonality_index", analytics.seasonality_index),
-    ("reorder_intervals", analytics.reorder_intervals),
-    ("new_repeat_revenue", analytics.new_repeat_revenue),
-    ("revenue_theil", analytics.revenue_theil),
-    ("lorenz_curve", analytics.lorenz_curve),
-    ("weighted_median_price", analytics.weighted_median_price),
-    ("croston_forecast", analytics.croston_forecast),
-    ("abc_xyz_classes", analytics.abc_xyz_classes),
-    ("supplier_hhi", analytics.supplier_hhi),
-    ("price_index", analytics.price_index),
-    ("nation_affinity", analytics.nation_affinity),
-    ("supplier_scorecard", analytics.supplier_scorecard),
-    ("customer_churn", analytics.customer_churn),
-    ("price_elasticity", analytics.price_elasticity),
-    ("discount_uplift", analytics.discount_uplift),
-    ("order_gap_stats", analytics.order_gap_stats),
-    ("q1_pricing_summary", analytics.q1_pricing_summary),
-    ("q3_shipping_priority", analytics.q3_shipping_priority),
-    ("q5_local_supplier", analytics.q5_local_supplier),
-    ("q6_forecast_revenue", analytics.q6_forecast_revenue),
-    ("top_parts_by_revenue", analytics.top_parts_by_revenue),
-    ("q4_order_priority", analytics.q4_order_priority),
-    ("q10_returned_items", analytics.q10_returned_items),
-    ("q13_customer_distribution", analytics.q13_customer_distribution),
-    ("q14_promo_revenue", analytics.q14_promo_revenue),
-    ("q18_large_orders", analytics.q18_large_orders),
-    ("rfm_segments", analytics.rfm_segments),
-    ("revenue_growth", analytics.revenue_growth),
-    ("basket_pairs", analytics.basket_pairs),
-    ("brand_spearman", analytics.brand_spearman),
-    ("ship_latency_quantiles", analytics.ship_latency_quantiles),
-    ("basket_lift", analytics.basket_lift),
-    ("rollup_revenue", analytics.rollup_revenue),
-    ("sales_cube", analytics.sales_cube),
-    ("revenue_share_window", analytics.revenue_share_window),
-    ("cohort_ltv", analytics.cohort_ltv),
-    ("skyline_parts", analytics.skyline_parts),
-    ("part_triangles", analytics.part_triangles),
-    ("corr_matrix", analytics.corr_matrix),
-    ("segment_migration", analytics.segment_migration),
-]
+from .conftest import TPCH_B, assert_oracle_parity
 
 
-@pytest.mark.parametrize("name,fn", CASES, ids=[c[0] for c in CASES])
-def test_analytics_matches_oracle(spark, sf_dir, oracle, name, fn):
-    assert_matches_oracle(fn(spark, sf_dir), oracle, ORACLES[name])
+@pytest.mark.parametrize("key", sorted(ORACLES.keys() - TPCH_B))
+def test_analytics_matches_oracle(spark, sf_dir, oracle, key):
+    assert_oracle_parity(spark, sf_dir, oracle, key)
 
 
 def test_q1_plan_pushes_filter_and_prunes(spark, sf_dir):

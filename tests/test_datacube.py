@@ -9,62 +9,12 @@ from icecube_spark.functions import sar
 from icecube_spark.queries import datacube_queries as dq
 from icecube_spark.queries.datacube_oracles import ORACLES
 
-from .conftest import assert_matches_oracle
-
-CASES = [
-    ("cube_revisit_stats", dq.cube_revisit_stats),
-    ("cube_swath_coverage", dq.cube_swath_coverage),
-    ("cube_lbp_texture", dq.cube_lbp_texture),
-    ("cube_contour_bands", dq.cube_contour_bands),
-    ("cube_flow_direction", dq.cube_flow_direction),
-    ("cube_integral_image", dq.cube_integral_image),
-    ("cube_layover_shadow", dq.cube_layover_shadow),
-    ("cube_ruggedness", dq.cube_ruggedness),
-    ("cube_ring_stats", dq.cube_ring_stats),
-    ("cube_median_filter", dq.cube_median_filter),
-    ("cube_variogram", dq.cube_variogram),
-    ("cube_glcm_texture", dq.cube_glcm_texture),
-    ("cube_cfar_detect", dq.cube_cfar_detect),
-    ("cube_aspect_octant", dq.cube_aspect_octant),
-    ("cube_enl", dq.cube_enl),
-    ("cube_rgb_composite", dq.cube_rgb_composite),
-    ("cube_hist_match", dq.cube_hist_match),
-    ("cube_baseline_pairs", dq.cube_baseline_pairs),
-    ("cube_hillshade", dq.cube_hillshade),
-    ("cube_mask_components", dq.cube_mask_components),
-    ("cube_local_moran", dq.cube_local_moran),
-    ("cube_lee_filter", dq.cube_lee_filter),
-    ("cube_otsu_threshold", dq.cube_otsu_threshold),
-    ("cube_morph_open", dq.cube_morph_open),
-    ("cube_coherence", dq.cube_coherence),
-    ("metadata_summary", dq.metadata_summary),
-    ("cube_config_filter", dq.cube_config_filter),
-    ("cube_temporal_dedup", dq.cube_temporal_dedup),
-    ("cube_resample_gapfill", dq.cube_resample_gapfill),
-    ("cube_resample_interpolate", dq.cube_resample_interpolate),
-    ("cube_completeness", dq.cube_completeness),
-    ("cube_pivot", dq.cube_pivot),
-    ("metadata_concat", dq.metadata_concat),
-    ("spatial_overlap_1d", dq.spatial_overlap_1d),
-    ("labels_align", dq.labels_align),
-    ("labels_vector_align", dq.labels_vector_align),
-    ("cube_merge", dq.cube_merge),
-    ("sar_band_math", dq.sar_band_math),
-    ("spatial_bbox_join", dq.spatial_bbox_join),
-    ("cube_composite", dq.cube_composite),
-    ("zonal_stats", dq.zonal_stats),
-    ("cube_downsample", dq.cube_downsample),
-    ("focal_mean", dq.focal_mean),
-    ("cube_gradient", dq.cube_gradient),
-    ("cube_coregister", dq.cube_coregister),
-    ("cube_hist_equalize", dq.cube_hist_equalize),
-    ("cube_band_index", dq.cube_band_index),
-]
+from .conftest import assert_oracle_parity
 
 
-@pytest.mark.parametrize("name,fn", CASES, ids=[c[0] for c in CASES])
-def test_datacube_matches_oracle(spark, sf_dir, oracle, name, fn):
-    assert_matches_oracle(fn(spark, sf_dir), oracle, ORACLES[name])
+@pytest.mark.parametrize("key", sorted(ORACLES))
+def test_datacube_matches_oracle(spark, sf_dir, oracle, key):
+    assert_oracle_parity(spark, sf_dir, oracle, key)
 
 
 def test_resample_has_gap_rows(spark, sf_dir):

@@ -5,122 +5,13 @@ import pytest
 from icecube_spark.queries import llm_queries as lq
 from icecube_spark.queries.llm_oracles import ORACLES
 
-from .conftest import assert_matches_oracle
-
-CASES = [
-    ("source_coherence", lq.source_coherence),
-    ("quantization_sweep", lq.quantization_sweep),
-    ("cosine_label_pr_curve", lq.cosine_label_pr_curve),
-    ("term_burstiness", lq.term_burstiness),
-    ("media_frame_entropy", lq.media_frame_entropy),
-    ("dup_transitivity_audit", lq.dup_transitivity_audit),
-    ("char_trigram_logprob", lq.char_trigram_logprob),
-    ("media_loudness", lq.media_loudness),
-    ("dedup_sorted_neighborhood", lq.dedup_sorted_neighborhood),
-    ("knn_margin", lq.knn_margin),
-    ("mattr_diversity", lq.mattr_diversity),
-    ("embed_isotropy", lq.embed_isotropy),
-    ("burrows_delta", lq.burrows_delta),
-    ("dot_cosine_rank_corr", lq.dot_cosine_rank_corr),
-    ("dedup_winnowing", lq.dedup_winnowing),
-    ("topk_coverage_curve", lq.topk_coverage_curve),
-    ("bucket_label_ari", lq.bucket_label_ari),
-    ("char_entropy_docs", lq.char_entropy_docs),
-    ("media_audio_silence", lq.media_audio_silence),
-    ("doc_stitch_pairs", lq.doc_stitch_pairs),
-    ("rp_recall", lq.rp_recall),
-    ("knn_reciprocity", lq.knn_reciprocity),
-    ("normalization_impact", lq.normalization_impact),
-    ("media_scene_cuts", lq.media_scene_cuts),
-    ("uncertainty_sampling", lq.uncertainty_sampling),
-    ("bbit_minhash_eval", lq.bbit_minhash_eval),
-    ("label_silhouette", lq.label_silhouette),
-    ("license_notice_rate", lq.license_notice_rate),
-    ("rake_keywords", lq.rake_keywords),
-    ("readability_scores", lq.readability_scores),
-    ("hamming_recall", lq.hamming_recall),
-    ("boilerplate_prefixes", lq.boilerplate_prefixes),
-    ("matryoshka_recall", lq.matryoshka_recall),
-    ("translation_pairs", lq.translation_pairs),
-    ("mojibake_score", lq.mojibake_score),
-    ("stupid_backoff_logprob", lq.stupid_backoff_logprob),
-    ("tfidf_cosine_pairs", lq.tfidf_cosine_pairs),
-    ("repeated_substrings", lq.repeated_substrings),
-    ("label_noise_knn", lq.label_noise_knn),
-    ("bpe_merge_candidates", lq.bpe_merge_candidates),
-    ("hard_negatives", lq.hard_negatives),
-    ("lsh_bucket_profile", lq.lsh_bucket_profile),
-    ("blocklist_fuzzy", lq.blocklist_fuzzy),
-    ("perplexity_buckets", lq.perplexity_buckets),
-    ("media_frame_dedup", lq.media_frame_dedup),
-    ("pq_recall_eval", lq.pq_recall_eval),
-    ("tokenizer_fertility", lq.tokenizer_fertility),
-    ("bigram_logprob", lq.bigram_logprob),
-    ("heaps_fit", lq.heaps_fit),
-    ("code_detect", lq.code_detect),
-    ("stopword_profile", lq.stopword_profile),
-    ("pq_adc_topk", lq.pq_adc_topk),
-    ("embed_drift", lq.embed_drift),
-    ("cosine_adjacent_hist", lq.cosine_adjacent_hist),
-    ("dedup_exact", lq.dedup_exact),
-    ("dedup_minhash_lsh", lq.dedup_minhash_lsh),
-    ("dedup_ngram_jaccard", lq.dedup_ngram_jaccard),
-    ("dedup_simhash", lq.dedup_simhash),
-    ("dedup_embedding_cosine", lq.dedup_embedding_cosine),
-    ("embed_cosine_topk", lq.embed_cosine_topk),
-    ("embed_knn_label", lq.embed_knn_label),
-    ("embed_ann_lsh", lq.embed_ann_lsh),
-    ("lang_id", lq.lang_id),
-    ("quality_score", lq.quality_score),
-    ("token_count", lq.token_count),
-    ("doc_fingerprint", lq.doc_fingerprint),
-    ("repetition_stats", lq.repetition_stats),
-    ("gopher_quality", lq.gopher_quality),
-    ("term_commonness", lq.term_commonness),
-    ("vocab_stats", lq.vocab_stats),
-    ("embed_label_centroids", lq.embed_label_centroids),
-    ("bigram_lift", lq.bigram_lift),
-    ("embed_quantize", lq.embed_quantize),
-    ("centroid_similarity", lq.centroid_similarity),
-    ("embed_dim_stats", lq.embed_dim_stats),
-    ("embed_norm_outliers", lq.embed_norm_outliers),
-    ("dedup_containment", lq.dedup_containment),
-    ("fuzzy_name_pairs", lq.fuzzy_name_pairs),
-    ("doc_top_tfidf", lq.doc_top_tfidf),
-    ("langid_confusion", lq.langid_confusion),
-    ("sentence_stats", lq.sentence_stats),
-    ("char_profile", lq.char_profile),
-    ("embed_top_dims", lq.embed_top_dims),
-    ("multimodal_meta", lq.multimodal_meta),
-    ("unigram_logprob", lq.unigram_logprob),
-    ("zipf_fit", lq.zipf_fit),
-    ("chunk_dedup", lq.chunk_dedup),
-    ("multimodal_tiles", lq.multimodal_tiles),
-    ("minhash_accuracy", lq.minhash_accuracy),
-    ("kmeans_refine", lq.kmeans_refine),
-    ("near_dup_diff", lq.near_dup_diff),
-    ("dedup_threshold_curve", lq.dedup_threshold_curve),
-    ("mi_lang_source", lq.mi_lang_source),
-    ("chi2_terms", lq.chi2_terms),
-    ("media_prefix_dedup", lq.media_prefix_dedup),
-    ("bm25_topk", lq.bm25_topk),
-    ("entropy_by_source", lq.entropy_by_source),
-    ("minhash_eval_f1", lq.minhash_eval_f1),
-    ("embed_pq_codes", lq.embed_pq_codes),
-    ("blocklist_filter", lq.blocklist_filter),
-    ("media_chunk_windows", lq.media_chunk_windows),
-    ("embed_bucket_stats", lq.embed_bucket_stats),
-    ("label_agreement", lq.label_agreement),
-    ("vocab_coverage", lq.vocab_coverage),
-    ("pq_code_balance", lq.pq_code_balance),
-    ("dedup_incremental", lq.dedup_incremental),
-    ("js_divergence_langs", lq.js_divergence_langs),
-]
+from .conftest import assert_oracle_parity
 
 
-@pytest.mark.parametrize("name,fn", CASES, ids=[c[0] for c in CASES])
-def test_llm_matches_oracle(spark, sf_dir, oracle, name, fn):
-    assert_matches_oracle(fn(spark, sf_dir), oracle, ORACLES[name])
+# multimodal_frames has its own test, test_multimodal_frames_fanout
+@pytest.mark.parametrize("key", sorted(ORACLES.keys() - {"multimodal_frames"}))
+def test_llm_matches_oracle(spark, sf_dir, oracle, key):
+    assert_oracle_parity(spark, sf_dir, oracle, key)
 
 
 def test_minhash_finds_planted_neardups(spark, sf_dir):
@@ -164,9 +55,7 @@ def test_multimodal_batches_are_real_arrow(spark, sf_dir):
 
 def test_multimodal_frames_fanout(spark, sf_dir, oracle):
     """G2: 1→N frame fanout matches the deterministic oracle."""
-    assert_matches_oracle(
-        lq.multimodal_frames(spark, sf_dir), oracle, ORACLES["multimodal_frames"]
-    )
+    assert_oracle_parity(spark, sf_dir, oracle, "multimodal_frames")
 
 
 def test_multimodal_features_deterministic(spark, sf_dir):

@@ -4,90 +4,22 @@ can't express (split stability, component well-formedness)."""
 
 import pytest
 
-from icecube_spark.queries import analytics
 from icecube_spark.queries import pipeline_queries as pq
-from icecube_spark.queries.analytics_oracles import ORACLES as B_ORACLES
-from icecube_spark.queries.pipeline_oracles import ORACLES as P_ORACLES
+from icecube_spark.queries.pipeline_oracles import ORACLES
 
-from .conftest import assert_matches_oracle
+from .conftest import TPCH_B, assert_oracle_parity
 
-P_CASES = [
-    ("oov_rate_by_source", pq.oov_rate_by_source),
-    ("retention_policy_matrix", pq.retention_policy_matrix),
-    ("split_stratification_check", pq.split_stratification_check),
-    ("sample_size_planner", pq.sample_size_planner),
-    ("cross_shard_dup_rate", pq.cross_shard_dup_rate),
-    ("length_filter_tuning", pq.length_filter_tuning),
-    ("token_budget_sample", pq.token_budget_sample),
-    ("dedup_cost_model", pq.dedup_cost_model),
-    ("quality_reliability", pq.quality_reliability),
-    ("packing_curve", pq.packing_curve),
-    ("cms_heavy_hitters", pq.cms_heavy_hitters),
-    ("erasure_impact", pq.erasure_impact),
-    ("k_anonymity", pq.k_anonymity),
-    ("table_diff", pq.table_diff),
-    ("stratified_kfold", pq.stratified_kfold),
-    ("bloom_filter_eval", pq.bloom_filter_eval),
-    ("quantile_normalize", pq.quantile_normalize),
-    ("zorder_plan", pq.zorder_plan),
-    ("mann_whitney", pq.mann_whitney),
-    ("dsir_weights", pq.dsir_weights),
-    ("quality_length_corr", pq.quality_length_corr),
-    ("split_leakage_check", pq.split_leakage_check),
-    ("epoch_plan", pq.epoch_plan),
-    ("truncation_loss", pq.truncation_loss),
-    ("shard_skew_report", pq.shard_skew_report),
-    ("train_test_split", pq.train_test_split),
-    ("stratified_sample", pq.stratified_sample),
-    ("pii_redact", pq.pii_redact),
-    ("topk_terms", pq.topk_terms),
-    ("doc_length_stats", pq.doc_length_stats),
-    ("dedup_clusters", pq.dedup_clusters),
-    ("source_mix", pq.source_mix),
-    ("topk_terms_per_lang", pq.topk_terms_per_lang),
-    ("length_histogram", pq.length_histogram),
-    ("dup_cluster_sizes", pq.dup_cluster_sizes),
-    ("sample_per_group", pq.sample_per_group),
-    ("profile_table", pq.profile_table),
-    ("corpus_matrix", pq.corpus_matrix),
-    ("source_balance_gini", pq.source_balance_gini),
-    ("length_deciles", pq.length_deciles),
-    ("feature_binning", pq.feature_binning),
-    ("quota_rebalance", pq.quota_rebalance),
-    ("mix_drift", pq.mix_drift),
-    ("shard_checksums", pq.shard_checksums),
-    ("curation_waterfall", pq.curation_waterfall),
-    ("user_features", pq.user_features),
-    ("skew_report", pq.skew_report),
-    ("curriculum_shards", pq.curriculum_shards),
-    ("dup_rate_by_source", pq.dup_rate_by_source),
-]
-
-B_CASES = [
-    ("q7_volume_shipping", analytics.q7_volume_shipping),
-    ("q8_market_share", analytics.q8_market_share),
-    ("q12_ship_delay", analytics.q12_ship_delay),
-    ("q15_top_supplier", analytics.q15_top_supplier),
-    ("q17_small_quantity", analytics.q17_small_quantity),
-    ("q19_disjunctive_revenue", analytics.q19_disjunctive_revenue),
-    ("q21_waiting_supplier", analytics.q21_waiting_supplier),
-    ("q22_global_sales", analytics.q22_global_sales),
-    ("q2_min_cost_supplier", analytics.q2_min_cost_supplier),
-    ("q9_product_profit", analytics.q9_product_profit),
-    ("q11_important_stock", analytics.q11_important_stock),
-    ("q16_supplier_count", analytics.q16_supplier_count),
-    ("q20_excess_stock", analytics.q20_excess_stock),
-]
+CONTAMINATION = ["dup_ngram_fraction", "decontaminate"]
 
 
-@pytest.mark.parametrize("name,fn", P_CASES, ids=[c[0] for c in P_CASES])
-def test_pipeline_matches_oracle(spark, sf_dir, oracle, name, fn):
-    assert_matches_oracle(fn(spark, sf_dir), oracle, P_ORACLES[name])
+@pytest.mark.parametrize("key", sorted(ORACLES.keys() - set(CONTAMINATION)))
+def test_pipeline_matches_oracle(spark, sf_dir, oracle, key):
+    assert_oracle_parity(spark, sf_dir, oracle, key)
 
 
-@pytest.mark.parametrize("name,fn", B_CASES, ids=[c[0] for c in B_CASES])
-def test_tpch_matches_oracle(spark, sf_dir, oracle, name, fn):
-    assert_matches_oracle(fn(spark, sf_dir), oracle, B_ORACLES[name])
+@pytest.mark.parametrize("key", sorted(TPCH_B))
+def test_tpch_matches_oracle(spark, sf_dir, oracle, key):
+    assert_oracle_parity(spark, sf_dir, oracle, key)
 
 
 def test_split_fractions_and_stability(spark, sf_dir):
@@ -125,14 +57,9 @@ def test_dedup_clusters_well_formed(spark, sf_dir):
     assert all(mapped[r] == r for r in reps)
 
 
-@pytest.mark.parametrize(
-    "name,fn",
-    [("dup_ngram_fraction", pq.dup_ngram_fraction),
-     ("decontaminate", pq.decontaminate)],
-    ids=["dup_ngram_fraction", "decontaminate"],
-)
-def test_contamination_matches_oracle(spark, sf_dir, oracle, name, fn):
-    assert_matches_oracle(fn(spark, sf_dir), oracle, P_ORACLES[name])
+@pytest.mark.parametrize("key", CONTAMINATION)
+def test_contamination_matches_oracle(spark, sf_dir, oracle, key):
+    assert_oracle_parity(spark, sf_dir, oracle, key)
 
 
 def test_dup_fraction_bounds(spark, sf_dir):

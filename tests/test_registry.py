@@ -1,8 +1,68 @@
 """Driver-contract invariants: the registry and oracle dict stay
 consistent (every oracle key registered, no stray oracles, callables
-importable) — catches wiring mistakes before the driver does."""
+importable), every oracle key has one parity test, and queries() keeps
+the driver's grading order — catches wiring mistakes before the driver
+does."""
+
+import glob
+import json
+import os
+import sys
 
 import __spark_entry__ as entry
+
+from . import (
+    test_analytics,
+    test_datacube,
+    test_llm_ops,
+    test_pipeline_ops,
+    test_timeseries,
+)
+
+ROOT = os.path.join(os.path.dirname(__file__), "..")
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
+import funnel_sweep as fs  # noqa: E402
+
+
+def test_every_oracle_key_has_one_parity_test():
+    """The family parity tests, each parametrized from its family's
+    oracle dict, check every oracle key exactly once, so no key goes
+    without a tier-1 parity test."""
+    keys = ["multimodal_frames"]  # test_multimodal_frames_fanout
+    for test in (
+        test_analytics.test_analytics_matches_oracle,
+        test_datacube.test_datacube_matches_oracle,
+        test_llm_ops.test_llm_matches_oracle,
+        test_pipeline_ops.test_pipeline_matches_oracle,
+        test_pipeline_ops.test_tpch_matches_oracle,
+        test_pipeline_ops.test_contamination_matches_oracle,
+        test_timeseries.test_timeseries_matches_oracle,
+    ):
+        (mark,) = [m for m in test.pytestmark if m.name == "parametrize"]
+        keys += mark.args[1]
+    assert sorted(keys) == sorted(entry.oracle_sql())
+
+
+def test_queries_order_contract():
+    """queries() lists never-graded oracle keys first, then the
+    rows-only keys, then the driver-green keys; the green set is the
+    union of fully green grades over the committed CORRECTNESS files."""
+    green = set()
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            for k, g in json.load(f).items():
+                if g["rows_match"] and g["schema_match"] and g["hash_match"]:
+                    green.add(k)
+    assert entry._DRIVER_GREEN == green
+    assert green <= set(entry._QUERIES)
+
+    def tier(k):
+        if k in entry._NO_ORACLE:
+            return 1
+        return 2 if k in green else 0
+
+    # stable sort: each tier keeps _QUERIES order
+    assert list(entry.queries()) == sorted(entry._QUERIES, key=tier)
 
 
 def test_every_oracle_key_is_registered():
@@ -26,9 +86,6 @@ def test_rows_only_keys_are_the_documented_set():
         "multimodal_features",
         "embed_pca_top",
     }, f"unexpected rows-only keys: {sorted(rows_only)}"
-    # every rows-only key must sit in the _NO_ORACLE tier so the
-    # driver's head sample never burns a hard-evidence slot on one
-    assert rows_only == set(entry._NO_ORACLE)
 
 
 def test_all_query_callables_are_callable():
@@ -46,10 +103,9 @@ def test_plans_audit_covers_every_registered_key():
     """PLANS.md (scripts/explain_audit.py output) must hold one plan
     section per registered query — the every-key explain-audit
     invariant (VERDICT r2 item 4)."""
-    import os
     import re
 
-    path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
+    path = os.path.join(ROOT, "PLANS.md")
     sections = set(re.findall(r"^## (\S+)", open(path).read(), re.M))
     registered = set(entry.queries())
     missing = registered - sections
@@ -63,10 +119,9 @@ def test_survey_status_counts_match_registry():
     numbers (VERDICT r7 item 7) — same pin pattern as the PLANS.md
     section-count test, so the header can never silently go stale
     again."""
-    import os
     import re
 
-    path = os.path.join(os.path.dirname(__file__), "..", "SURVEY.md")
+    path = os.path.join(ROOT, "SURVEY.md")
     text = open(path).read()
     m = re.search(r"STATUS: all (\d+) query keys", text)
     assert m, "SURVEY.md lost its STATUS sentence"
@@ -87,16 +142,7 @@ def test_fast_funnel_sweep_over_pinned_plans_is_clean():
     test_registry_wide_funnel_sweep) stays the round-close gate;
     this one makes plan smells surface on every pytest run without
     building 481 live plans."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(__file__), "..", "scripts"),
-    )
-    import funnel_sweep as fs
-
-    path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
+    path = os.path.join(ROOT, "PLANS.md")
     sections = fs._formatted_sections(open(path).read())
     registered = set(entry.queries())
     assert registered <= set(sections)

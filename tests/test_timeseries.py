@@ -5,86 +5,12 @@ import pytest
 from icecube_spark.queries import timeseries_queries as tq
 from icecube_spark.queries.timeseries_oracles import ORACLES
 
-from .conftest import assert_matches_oracle, normalize
+from .conftest import assert_oracle_parity, normalize
 
-CASES = [
-    ("seasonality_stability", tq.seasonality_stability),
-    ("dow_hour_interaction", tq.dow_hour_interaction),
-    ("burstiness_index", tq.burstiness_index),
-    ("transition_entropy", tq.transition_entropy),
-    ("weekly_profile_drift", tq.weekly_profile_drift),
-    ("ar1_halflife", tq.ar1_halflife),
-    ("spectral_entropy", tq.spectral_entropy),
-    ("cross_correlation", tq.cross_correlation),
-    ("hurst_exponent", tq.hurst_exponent),
-    ("seasonal_strength", tq.seasonal_strength),
-    ("intervention_impact", tq.intervention_impact),
-    ("drawdown_durations", tq.drawdown_durations_revenue),
-    ("turning_points", tq.turning_points_revenue),
-    ("runs_test", tq.runs_test_revenue),
-    ("ljung_box", tq.ljung_box_revenue),
-    ("interarrival_fit", tq.interarrival_fit),
-    ("kruskal_wallis", tq.kruskal_wallis),
-    ("value_at_risk", tq.value_at_risk),
-    ("multitouch_attribution", tq.multitouch_attribution),
-    ("markov_accuracy", tq.markov_accuracy),
-    ("haar_energy", tq.haar_energy),
-    ("diff_in_diff", tq.diff_in_diff),
-    ("period_detect", tq.period_detect),
-    ("sax_symbols", tq.sax_symbols),
-    ("window_funnel_strict", tq.window_funnel_strict),
-    ("psi_drift", tq.psi_drift),
-    ("active_streaks", tq.active_streaks),
-    ("mean_shift_split", tq.mean_shift_split),
-    ("dow_anova", tq.dow_anova),
-    ("theil_sen_trend", tq.theil_sen_trend),
-    ("ks_drift", tq.ks_drift),
-    ("benford_deviation", tq.benford_deviation),
-    ("record_days", tq.record_days),
-    ("asof_join", tq.asof_join_orders),
-    ("sessionize", tq.sessionize_events),
-    ("window_tumbling", tq.window_tumbling),
-    ("rolling_daily_revenue", tq.rolling_daily_revenue),
-    ("range_join_clicks", tq.range_join_clicks),
-    ("asof_join_forward", tq.asof_join_forward),
-    ("asof_join_nearest", tq.asof_join_nearest),
-    ("hypertable_rollup", tq.hypertable_rollup),
-    ("ohlc_bars", tq.ohlc_bars),
-    ("anomaly_zscore", tq.anomaly_zscore),
-    ("gap_stats", tq.gap_stats),
-    ("time_weighted_avg", tq.time_weighted_avg),
-    ("trend_slope", tq.trend_slope),
-    ("cohort_retention", tq.cohort_retention),
-    ("funnel_conversion", tq.funnel_conversion),
-    ("value_percentiles", tq.value_percentiles),
-    ("calendar_lag_features", tq.calendar_lag_features),
-    ("running_total", tq.running_total),
-    ("event_transitions", tq.event_transitions),
-    ("rolling_active_users", tq.rolling_active_users),
-    ("conversion_lag", tq.conversion_lag),
-    ("activity_heatmap", tq.activity_heatmap),
-    ("coverage_report", tq.coverage_report),
-    ("rapid_repeat_events", tq.rapid_repeat_events),
-    ("props_extract", tq.props_extract),
-    ("value_histogram", tq.value_histogram),
-    ("scd2_intervals", tq.scd2_intervals),
-    ("purchase_attribution", tq.purchase_attribution),
-    ("acf_daily_value", tq.acf_daily_value),
-    ("burst_detection", tq.burst_detection),
-    ("seasonal_decompose", tq.seasonal_decompose),
-    ("order_backlog", tq.order_backlog),
-    ("m4_downsample", tq.m4_downsample),
-    ("pit_join_orders", tq.pit_join_orders),
-    ("mad_outliers", tq.mad_outliers),
-    ("winsorize_values", tq.winsorize_values),
-    ("survival_km", tq.survival_km),
-    ("forecast_baseline_eval", tq.forecast_baseline_eval),
-    ("peak_detection", tq.peak_detection),
-    ("max_drawdown", tq.max_drawdown),
-    ("bollinger_bands", tq.bollinger_bands),
-    ("bounce_rate", tq.bounce_rate),
-    ("series_lead_lag", tq.series_lead_lag),
-]
+
+@pytest.mark.parametrize("key", sorted(ORACLES))
+def test_timeseries_matches_oracle(spark, sf_dir, oracle, key):
+    assert_oracle_parity(spark, sf_dir, oracle, key)
 
 
 def test_calendar_lags_single_exchange(spark, sf_dir):
@@ -129,11 +55,6 @@ def test_range_join_is_equi_join_not_nested_loop(spark, sf_dir):
     )
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-@pytest.mark.parametrize("name,fn", CASES, ids=[c[0] for c in CASES])
-def test_timeseries_matches_oracle(spark, sf_dir, oracle, name, fn):
-    assert_matches_oracle(fn(spark, sf_dir), oracle, ORACLES[name])
 
 
 def test_asof_join_single_shuffle(spark, sf_dir):
