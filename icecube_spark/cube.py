@@ -315,10 +315,10 @@ def create_cube_from_rasters(
 ) -> Datacube:
     """The reference's one-shot entry point —
     IceyeProcessGenerateCube.create_cube(raster_dir, config_fpath)
-    (generate_cube.py:36-80) — end-to-end on Spark: crawl GDAL
-    metadata + decode pixels from the binaryFile source (both
-    distributed Arrow maps, sources/raster.py), apply the CubeConfig
-    filters in reference order (date range on acquisition_date,
+    (generate_cube.py:36-80) — end-to-end on Spark: GDAL metadata and
+    pixels from ONE parse of each TIFF in the binaryFile source (a
+    distributed Arrow map, sources/raster.read_grd_layers), apply the
+    CubeConfig filters in reference order (date range on acquisition_date,
     incidence-angle range, temporal dedup), then resample onto the
     configured temporal grid: one slot per `temporal_resolution` days
     from start_date to end_date, empty slots = dummy layers with null
@@ -336,13 +336,11 @@ def create_cube_from_rasters(
 def _grd_cube(
     spark: SparkSession, bdf: DataFrame, config: CubeConfig
 ) -> Datacube:
-    """GRD crawl + decode, shared by the directory-crawl and
-    explicit-list entry points."""
-    from icecube_spark.sources.raster import crawl_iceye_metadata, decode_rasters
+    """GRD layers (one parse per TIFF), shared by the directory-crawl
+    and explicit-list entry points."""
+    from icecube_spark.sources.raster import read_grd_layers
 
-    meta = crawl_iceye_metadata(bdf)
-    layers = meta.join(decode_rasters(bdf).select("path", "pixels"), "path")
-    return _filter_and_grid(spark, layers, config, ["pixels"])
+    return _filter_and_grid(spark, read_grd_layers(bdf), config, ["pixels"])
 
 
 def _filter_and_grid(
@@ -350,7 +348,7 @@ def _filter_and_grid(
     band_cols: list[str],
 ) -> Datacube:
     """The config filters and temporal grid of every product family
-    (GRD and SLC differ only in crawl and decode), in reference order:
+    (GRD and SLC differ only in their layer reader), in reference order:
     date range on acquisition_date, incidence-angle range (a NULL
     angle passes), the latest acquisition_end_utc per date unless
     temporal_overlap, then — when temporal_resolution > 0 — one slot
@@ -410,9 +408,10 @@ def create_cube_from_slc(
 ) -> Datacube:
     """SLC twin of create_cube_from_rasters — the reference's
     SLCDatacube.create path (icecube/bin/sar_cube/slc_datacube.py:
-    102-162): crawl .h5 metadata + decode the s_i/s_q channels
-    (sources/hdf5.py, distributed Arrow maps; dependency-free for
-    contiguous AND chunked/gzip'd files, h5py when present), then the
+    102-162): .h5 metadata and the s_i/s_q channels from ONE parse
+    of each file (sources/hdf5.read_slc_layers, a distributed Arrow
+    map; dependency-free for contiguous AND chunked/gzip'd files,
+    h5py when present), then the
     same config filters and temporal grid as the GRD path. Bands
     follow the reference's naming: Real = s_i, Complex = s_q
     (datacube_variables.py:16-17).
@@ -433,19 +432,11 @@ def create_cube_from_slc(
 def _slc_cube(
     spark: SparkSession, bdf: DataFrame, config: CubeConfig, with_rpc: bool
 ) -> Datacube:
-    """SLC crawl + decode, shared by the directory-crawl and
-    explicit-list entry points."""
-    from icecube_spark.sources.hdf5 import crawl_slc_metadata, decode_slc
+    """SLC layers (one parse per .h5), shared by the directory-crawl
+    and explicit-list entry points."""
+    from icecube_spark.sources.hdf5 import read_slc_layers
 
-    meta = crawl_slc_metadata(bdf)
-    layers = meta.join(
-        decode_slc(bdf).select(
-            "path",
-            F.col("s_i").alias("Real"),
-            F.col("s_q").alias("Complex"),
-        ),
-        "path",
-    )
+    layers = read_slc_layers(bdf)
     if with_rpc:
         from icecube_spark.sources.rpc import crawl_rpc_metadata
 

@@ -12,14 +12,17 @@ Usage::
 Product family is sniffed from the directory contents exactly like the
 reference (all .tif/.tiff -> GRD, all .h5 -> SLC, anything mixed is an
 error). The build itself is the distributed create_cube_from_rasters /
-create_cube_from_slc plan; only the optional .nc export materializes
-on the driver (size-guarded in sources/netcdf3.py).
+create_cube_from_slc plan, persisted for the call so every action on
+it (dimensions, layer shape, export) reads one decode of each
+product; only the optional .nc export materializes on the driver
+(size-guarded, and an empty cube refused, in sources/netcdf3.py).
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+from contextlib import contextmanager
 
 
 def process_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -70,12 +73,47 @@ def process_args(argv: list[str] | None = None) -> argparse.Namespace:
     return parser.parse_args(argv)
 
 
+@contextmanager
+def _decoded_once(dc):
+    """Persist the cube's frame for the block and unpersist it on the
+    way out, raise or not: the dimensions, the layer-shape inference
+    and the export's count guard and ordered collect then all read
+    one decode of the products instead of one each."""
+    dc.df.persist()
+    try:
+        yield
+    finally:
+        dc.df.unpersist()
+
+
+def _save_cube(dc, path: str, height=None, width=None, format="netCDF4") -> str:
+    """Export `dc` as one netCDF file and return the format written.
+    A missing height/width is the largest layer's (None when no layer
+    has a shape, which the export refuses, as it does an empty cube).
+    An SLC cube exports its first band (Real) as the pixels."""
+    from pyspark.sql import functions as F
+
+    from icecube_spark.cube import Datacube
+    from icecube_spark.sources.netcdf3 import cube_to_file
+
+    if height is None or width is None:
+        row = dc.df.agg(
+            F.max("height").alias("h"), F.max("width").alias("w")
+        ).collect()[0]
+        height = row.h if height is None else height
+        width = row.w if width is None else width
+    if "pixels" not in dc.df.columns and dc.band_cols:
+        dc = Datacube(
+            dc.df.withColumn("pixels", F.col(dc.band_cols[0])),
+            dc.key_col, dc.ts_col, dc.band_cols,
+        )
+    return cube_to_file(dc, path, height=height, width=width, format=format)
+
+
 def cli(argv: list[str] | None = None, spark=None) -> "object":
     """Run the one-shot build; returns the Datacube (the subprocess
     entry ignores it, tests inspect it). Pass an existing SparkSession
     to reuse one; otherwise a local session is created and stopped."""
-    from pyspark.sql import functions as F
-
     from icecube_spark.cube import (
         Datacube,
         create_cube_from_rasters,
@@ -115,33 +153,17 @@ def cli(argv: list[str] | None = None, spark=None) -> "object":
                 dc.band_cols,
             )
 
-        print(f"Generated cube dimensions are: {dc.get_dimensions()}")
-
-        if args.cube_save is not None:
-            from icecube_spark.sources.netcdf3 import cube_to_file
-
-            h, w = args.height, args.width
-            if h is None or w is None:
-                row = dc.df.agg(
-                    F.max("height").alias("h"), F.max("width").alias("w")
-                ).collect()[0]
-                h = h if h is not None else int(row.h)
-                w = w if w is not None else int(row.w)
-            export = dc
-            if "pixels" not in dc.df.columns and dc.band_cols:
-                # SLC cubes carry Real/Complex; export the first band
-                export = Datacube(
-                    dc.df.withColumn("pixels", F.col(dc.band_cols[0])),
-                    dc.key_col, dc.ts_col, dc.band_cols,
+        with _decoded_once(dc):
+            print(f"Generated cube dimensions are: {dc.get_dimensions()}")
+            if args.cube_save is not None:
+                print(
+                    "Writing icecube to disk. This may take some time,"
+                    " please standby ..."
                 )
-            print(
-                "Writing icecube to disk. This may take some time,"
-                " please standby ..."
-            )
-            fmt = cube_to_file(
-                export, args.cube_save, height=h, width=w, format=args.format
-            )
-            print(f"Wrote {args.cube_save} ({fmt})")
+                fmt = _save_cube(
+                    dc, args.cube_save, args.height, args.width, args.format
+                )
+                print(f"Wrote {args.cube_save} ({fmt})")
         return dc
     finally:
         if own_session:
@@ -198,10 +220,7 @@ def sample_list_workflow(
     build a GRD cube from an EXPLICIT two-raster list
     (create_cube_from_list) and save it as netCDF. Returns the
     Datacube."""
-    from pyspark.sql import functions as F
-
     from icecube_spark.cube import create_cube_from_list
-    from icecube_spark.sources.netcdf3 import cube_to_file
 
     grd = os.path.join(resource_dir, "grd_stack")
     names = sorted(
@@ -215,10 +234,8 @@ def sample_list_workflow(
         spark = get_spark("icecube-sample-list-workflow")
     try:
         dc = create_cube_from_list(spark, list_path, None)
-        row = dc.df.agg(
-            F.max("height").alias("h"), F.max("width").alias("w")
-        ).collect()[0]
-        cube_to_file(dc, save_path, height=int(row.h), width=int(row.w))
+        with _decoded_once(dc):
+            _save_cube(dc, save_path)
         return dc
     finally:
         if own_session:

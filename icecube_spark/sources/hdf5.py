@@ -18,17 +18,19 @@ Two decode paths, best available wins:
   even in containers without h5py.
 
 Distributed entry points run inside Arrow-batched mapInPandas over
-the binaryFile source: payload bytes stay on executors, no shuffle,
-no driver IO — the same plan shape as sources/raster.py.
+the binaryFile source (sources/layers.py): payload bytes stay on
+executors, no shuffle, no driver IO — the same plan shape as
+sources/raster.py. The cube build reads each product once through
+read_slc_layers; crawl_slc_metadata and decode_slc are its metadata-
+only and pixels-only halves.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from icecube_spark.sources.layers import META_SCHEMA, map_products, meta_row
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -392,11 +394,14 @@ _META_WANT = {
     "number_of_range_samples",
 }
 
-SLC_META_SCHEMA = (
-    "path string, product_file string, acquisition_date date, "
-    "acquisition_end_utc string, incidence_center double, "
-    "orbit_direction string, width int, height int"
+SLC_META_SCHEMA = META_SCHEMA
+
+SLC_PIXELS_SCHEMA = (
+    "path string, width int, height int, "
+    "s_i array<double>, s_q array<double>"
 )
+
+SLC_LAYER_SCHEMA = META_SCHEMA + ", Real array<double>, Complex array<double>"
 
 
 def _scalar(h5, key):
@@ -408,70 +413,39 @@ def _scalar(h5, key):
     return v
 
 
+def _slc_row(path: str, data: bytes, meta: bool, bands=None) -> dict | None:
+    """One .h5 product, parsed once: its META_SCHEMA columns when
+    `meta`; when `bands` names two columns, the s_i and s_q channels
+    (flattened row-major) under those names. None drops the file: not
+    HDF5, undecodable, or — when `bands` — missing a channel."""
+    if data[:8] != _SIG:
+        return None
+    want = (_META_WANT if meta else set()) | ({"s_i", "s_q"} if bands else set())
+    try:
+        h5 = load_h5(data, want=want)
+        if bands:
+            si, sq = extract_complex_channels(h5)
+    except (NotImplementedError, ValueError, FileNotFoundError):
+        return None
+    if meta:
+        row = meta_row(path, lambda k: _scalar(h5, k))
+    else:
+        row = {"path": path, "height": si.shape[0], "width": si.shape[1]}
+    if bands:
+        row[bands[0]] = si.ravel().tolist()
+        row[bands[1]] = sq.ravel().tolist()
+    return row
+
+
 def crawl_slc_metadata(binary_df: DataFrame) -> DataFrame:
     """binaryFile rows → the metadata crawler's variables of interest
     for SLC products (metadata_crawler.py:140-210): acquisition_date
     from acquisition_end_utc, center incidence, orbit direction,
-    raster shape. Arrow-batched map; payloads never shuffle. Same
-    output schema as raster.crawl_iceye_metadata so GRD and SLC
-    stacks share the cube-assembly path."""
-    from datetime import datetime
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.split(" ")[0]: [] for k in SLC_META_SCHEMA.split(", ")}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                if data[:8] != _SIG:
-                    continue
-                try:
-                    h5 = load_h5(data, want=_META_WANT)
-                except (NotImplementedError, ValueError):
-                    continue
-                end_utc = _scalar(h5, "acquisition_end_utc")
-                acq = None
-                if end_utc:
-                    # tolerate missing fractional seconds / 'Z' suffix:
-                    # a malformed timestamp degrades to acq=None rather
-                    # than failing the whole crawl task
-                    for fmt in (
-                        "%Y-%m-%dT%H:%M:%S.%f",
-                        "%Y-%m-%dT%H:%M:%S.%fZ",
-                        "%Y-%m-%dT%H:%M:%S",
-                        "%Y-%m-%dT%H:%M:%SZ",
-                    ):
-                        try:
-                            acq = datetime.strptime(end_utc, fmt).date()
-                            break
-                        except ValueError:
-                            continue
-                inc = _scalar(h5, "incidence_center")
-                n_rg = _scalar(h5, "number_of_range_samples")
-                n_az = _scalar(h5, "number_of_azimuth_samples")
-                rows["path"].append(path)
-                rows["product_file"].append(
-                    _scalar(h5, "product_file") or path.rsplit("/", 1)[-1]
-                )
-                rows["acquisition_date"].append(acq)
-                rows["acquisition_end_utc"].append(end_utc)
-                rows["incidence_center"].append(
-                    float(inc) if inc is not None else None
-                )
-                rows["orbit_direction"].append(_scalar(h5, "orbit_direction"))
-                rows["width"].append(int(n_rg) if n_rg is not None else None)
-                rows["height"].append(int(n_az) if n_az is not None else None)
-            if rows["path"]:
-                yield pd.DataFrame(rows)
-
-    return binary_df.select("path", "content").mapInPandas(
-        run, schema=SLC_META_SCHEMA
+    raster shape. Same output schema as raster.crawl_iceye_metadata
+    so GRD and SLC stacks share the cube-assembly path."""
+    return map_products(
+        binary_df, lambda p, d: _slc_row(p, d, True), SLC_META_SCHEMA
     )
-
-
-SLC_PIXELS_SCHEMA = (
-    "path string, width int, height int, "
-    "s_i array<double>, s_q array<double>"
-)
 
 
 def decode_slc(binary_df: DataFrame) -> DataFrame:
@@ -479,32 +453,21 @@ def decode_slc(binary_df: DataFrame) -> DataFrame:
     height, s_i, s_q) with each channel flattened row-major — the
     layer-ingestion step of SLCDatacube.create (slc_datacube.py:
     102-162), as a distributed map. Non-HDF5 inputs are dropped."""
+    return map_products(
+        binary_df,
+        lambda p, d: _slc_row(p, d, False, ("s_i", "s_q")),
+        SLC_PIXELS_SCHEMA,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"path": [], "width": [], "height": [], "s_i": [], "s_q": []}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                if data[:8] != _SIG:
-                    continue
-                try:
-                    si, sq = extract_complex_channels(
-                        load_h5(data, want={"s_i", "s_q"})
-                    )
-                except (NotImplementedError, ValueError, FileNotFoundError):
-                    continue
-                rows["path"].append(path)
-                rows["height"].append(si.shape[0])
-                rows["width"].append(si.shape[1])
-                rows["s_i"].append(si.ravel().tolist())
-                rows["s_q"].append(sq.ravel().tolist())
-            if not rows["path"]:
-                continue
-            out = pd.DataFrame(rows)
-            out["s_i"] = out["s_i"].astype(object)
-            out["s_q"] = out["s_q"].astype(object)
-            yield out
 
-    return binary_df.select("path", "content").mapInPandas(
-        run, schema=SLC_PIXELS_SCHEMA
+def read_slc_layers(binary_df: DataFrame) -> DataFrame:
+    """binaryFile rows → one cube layer per SLC product: the
+    crawl_slc_metadata columns plus the Real (s_i) and Complex (s_q)
+    bands, from ONE parse of each file — the rows crawl_slc_metadata
+    joined with decode_slc on path would give, without the second
+    parse or the join."""
+    return map_products(
+        binary_df,
+        lambda p, d: _slc_row(p, d, True, ("Real", "Complex")),
+        SLC_LAYER_SCHEMA,
     )

@@ -202,16 +202,31 @@ def read_netcdf3(path: str):
     return dict(dims), variables, gattrs
 
 
-def _materialize_cube(dc, height: int, width: int, max_layers: int):
+def _materialize_cube(
+    dc, height: int | None, width: int | None, max_layers: int
+):
     """Driver-side materialization shared by every single-file export
     format (the same single-file step the reference's to_file
     performs), behind a cheap count() guard: exports above
     `max_layers` layers (or whose pixel payload would exceed driver
     memory) must go through the parquet/partitioned sinks instead of
-    silently OOMing the driver."""
+    silently OOMing the driver. The one place an empty cube (or one
+    with no layer shape) is refused: a netCDF-3 dim of length 0 is
+    the unlimited record dim, so a fixed `band`, `azimuth` or `range`
+    dim cannot be zero-length."""
     import numpy as np
 
     n_layers = dc.df.count()
+    if n_layers == 0:
+        raise ValueError(
+            "refusing netCDF export of an empty cube: the config keeps no"
+            " layer, and a netCDF-3 file cannot hold a zero-length band dim"
+        )
+    if not height or not width:
+        raise ValueError(
+            f"refusing netCDF export of layers sized {height}x{width}: no"
+            f" layer of the cube carries a shape; pass height and width"
+        )
     approx_bytes = n_layers * height * width * 8
     if n_layers > max_layers or approx_bytes > 4 << 30:
         raise ValueError(
@@ -251,10 +266,10 @@ def cube_to_netcdf(
 
     pix, names, date_strs = _materialize_cube(dc, height, width, max_layers)
     band = len(names)
-    name_len = max(1, max(len(n) for n in names))
+    encoded = [n.encode() for n in names]
+    name_len = max(1, max(map(len, encoded)))
     name_arr = np.zeros((band, name_len), dtype="S1")
-    for i, n in enumerate(names):
-        b = n.encode()
+    for i, b in enumerate(encoded):
         name_arr[i, : len(b)] = np.frombuffer(b, dtype="S1")
     dates = np.array(date_strs, dtype="S10").view("S1").reshape(band, 10)
     write_netcdf3(
@@ -306,12 +321,24 @@ def _read_netcdf4_vars(path: str):
     return pix, names, dates
 
 
+_REOPEN_SCHEMA = (
+    "height bigint, pixels array<double>, product_file string, "
+    "slot_date date, width bigint"
+)
+
+
 def netcdf_to_cube(spark, path: str):
     """Import a cube file back into a Datacube — reference read_cube
     (icecube/bin/datacube.py:30) parity: sniffs the magic bytes and
     opens classic netCDF-3 (CDF-1/CDF-2, bridge reader) and
-    HDF5-backed netCDF4 files transparently."""
+    HDF5-backed netCDF4 files transparently. The frame is built from
+    pandas with an explicit schema, so it crosses to the JVM over
+    Arrow with no Python worker and no schema inference; an all-NaN
+    layer reopens as a gap row (null pixels)."""
+    import datetime
+
     import numpy as np
+    import pandas as pd
 
     from icecube_spark.cube import Datacube
 
@@ -329,20 +356,20 @@ def netcdf_to_cube(spark, path: str):
         dates = [
             b"".join(row).decode() for row in variables["acquisition_date"][1]
         ]
-    rows = []
-    for i in range(pix.shape[0]):
-        layer = pix[i]
-        has = not np.isnan(layer).all()
-        rows.append(
-            {
-                "product_file": names[i] if names[i] != "None" else None,
-                "slot_date": __import__("datetime").date.fromisoformat(dates[i]),
-                "pixels": [float(x) for x in layer.ravel()] if has else None,
-                "height": int(layer.shape[0]),
-                "width": int(layer.shape[1]),
-            }
-        )
-    df = spark.createDataFrame(rows)
+    has = ~np.isnan(pix).all(axis=(1, 2))
+    pdf = pd.DataFrame(
+        {
+            "height": np.full(len(names), pix.shape[1], dtype="i8"),
+            "pixels": [
+                layer.ravel().tolist() if h else None
+                for layer, h in zip(pix, has)
+            ],
+            "product_file": [None if n == "None" else n for n in names],
+            "slot_date": [datetime.date.fromisoformat(d) for d in dates],
+            "width": np.full(len(names), pix.shape[2], dtype="i8"),
+        }
+    )
+    df = spark.createDataFrame(pdf, schema=_REOPEN_SCHEMA)
     return Datacube(df, "product_file", "slot_date", ["pixels"])
 
 

@@ -17,7 +17,10 @@ rasters is gated behind import-try. What IS real and dependency-free:
   analytics_IO.py:113) for the uncompressed path.
 
 Both run inside Arrow-batched mapInPandas over the binaryFile
-source: payloads stay on executors, no shuffle, no driver IO.
+source: payloads stay on executors, no shuffle, no driver IO. The
+cube build reads each TIFF once through read_grd_layers (metadata and
+pixels off one IFD parse); crawl_iceye_metadata and decode_rasters
+are its metadata-only and pixels-only halves.
 """
 
 from __future__ import annotations
@@ -27,6 +30,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from icecube_spark.sources.layers import META_SCHEMA, map_products, meta_row
 
 TAG_WIDTH = 256
 TAG_HEIGHT = 257
@@ -87,8 +92,10 @@ def parse_tiff_header(data: bytes) -> dict | None:
     """Parse width/height/bits from a classic TIFF (II/MM, magic 42).
     Returns None if `data` is not a TIFF."""
     parsed = _read_ifd(data)
-    if parsed is None:
-        return None
+    return None if parsed is None else _header(parsed)
+
+
+def _header(parsed) -> dict:
     endian, tags = parsed
     out: dict = {"endian": endian}
     for tag, key in (
@@ -108,11 +115,13 @@ def decode_tiff_pixels(data: bytes):
     compressed files (that path needs rasterio). Mirrors the
     reference's analytics_IO.load_tiff contract (icecube/utils/
     analytics_IO.py:113) for uncompressed rasters."""
+    parsed = _read_ifd(data)
+    return None if parsed is None else _pixels(data, parsed)
+
+
+def _pixels(data: bytes, parsed):
     import numpy as np
 
-    parsed = _read_ifd(data)
-    if parsed is None:
-        return None
     endian, tags = parsed
     compression = int(tags.get(TAG_COMPRESSION, [1])[0])
     if compression != 1:
@@ -163,6 +172,11 @@ def parse_gdal_metadata(data: bytes) -> dict[str, str]:
     the tag dict rasterio's .tags() exposes, keys lowercased like the
     reference's _correct_grd_metadata_key (grd_datacube.py). Empty
     dict for non-TIFFs / TIFFs without the tag."""
+    parsed = _read_ifd(data)
+    return {} if parsed is None else _gdal_metadata(parsed[1])
+
+
+def _gdal_metadata(tags: dict) -> dict[str, str]:
     global _GDAL_ITEM_RE
     import re
 
@@ -170,10 +184,6 @@ def parse_gdal_metadata(data: bytes) -> dict[str, str]:
         _GDAL_ITEM_RE = re.compile(
             r'<Item name="([^"]+)"[^>]*>(.*?)</Item>', re.DOTALL
         )
-    parsed = _read_ifd(data)
-    if parsed is None:
-        return {}
-    _, tags = parsed
     if TAG_GDAL_METADATA not in tags:
         return {}
     xml = tags[TAG_GDAL_METADATA][0].decode("utf-8", errors="replace")
@@ -210,11 +220,39 @@ def crawl_raster_metadata(binary_df: DataFrame) -> DataFrame:
     )
 
 
-ICEYE_META_SCHEMA = (
-    "path string, product_file string, acquisition_date date, "
-    "acquisition_end_utc string, incidence_center double, "
-    "orbit_direction string, width int, height int"
+ICEYE_META_SCHEMA = META_SCHEMA
+
+RASTER_PIXELS_SCHEMA = (
+    "path string, width int, height int, dtype string, pixels array<double>"
 )
+
+GRD_LAYER_SCHEMA = META_SCHEMA + ", pixels array<double>"
+
+
+def _grd_row(path: str, data: bytes, meta: bool, pixels: bool) -> dict | None:
+    """One GRD TIFF, its IFD parsed once: its META_SCHEMA columns
+    (GDAL metadata items, header shape as the fallback) when `meta`,
+    its pixels flattened row-major to float64 when `pixels`. None
+    drops a non-TIFF; a compressed TIFF raises when `pixels` (its
+    decode needs rasterio)."""
+    parsed = _read_ifd(data)
+    if parsed is None:
+        return None
+    if pixels:
+        arr = _pixels(data, parsed)
+    if meta:
+        md = _gdal_metadata(parsed[1])
+        hdr = _header(parsed)
+        row = meta_row(path, md.get, hdr.get("width"), hdr.get("height"))
+    else:
+        row = {
+            "path": path, "height": arr.shape[0], "width": arr.shape[1],
+            "dtype": str(arr.dtype),
+        }
+    if pixels:
+        # plain list: Arrow rejects a numpy ndarray cell here
+        row["pixels"] = arr.astype("float64").ravel().tolist()
+    return row
 
 
 def crawl_iceye_metadata(binary_df: DataFrame) -> DataFrame:
@@ -223,51 +261,9 @@ def crawl_iceye_metadata(binary_df: DataFrame) -> DataFrame:
     from acquisition_end_utc, center incidence angle, orbit direction,
     raster shape (header fallback when metadata lacks the sample
     counts). Arrow-batched map; payload bytes never shuffle."""
-    from datetime import datetime
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.split(" ")[0]: [] for k in ICEYE_META_SCHEMA.split(", ")}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                hdr = parse_tiff_header(data)
-                if hdr is None:
-                    continue
-                md = parse_gdal_metadata(data)
-                end_utc = md.get("acquisition_end_utc")
-                acq_date = None
-                if end_utc:
-                    acq_date = datetime.strptime(
-                        end_utc, "%Y-%m-%dT%H:%M:%S.%f"
-                    ).date()
-                inc = md.get("incidence_center")
-                rows["path"].append(path)
-                rows["product_file"].append(
-                    md.get("product_file") or path.rsplit("/", 1)[-1]
-                )
-                rows["acquisition_date"].append(acq_date)
-                rows["acquisition_end_utc"].append(end_utc)
-                rows["incidence_center"].append(
-                    float(inc) if inc is not None else None
-                )
-                rows["orbit_direction"].append(md.get("orbit_direction"))
-                rows["width"].append(
-                    int(md.get("number_of_range_samples", hdr.get("width")))
-                )
-                rows["height"].append(
-                    int(md.get("number_of_azimuth_samples", hdr.get("height")))
-                )
-            if rows["path"]:
-                yield pd.DataFrame(rows)
-
-    return binary_df.select("path", "content").mapInPandas(
-        run, schema=ICEYE_META_SCHEMA
+    return map_products(
+        binary_df, lambda p, d: _grd_row(p, d, True, False), ICEYE_META_SCHEMA
     )
-
-
-RASTER_PIXELS_SCHEMA = (
-    "path string, width int, height int, dtype string, pixels array<double>"
-)
 
 
 def decode_rasters(binary_df: DataFrame) -> DataFrame:
@@ -276,33 +272,19 @@ def decode_rasters(binary_df: DataFrame) -> DataFrame:
     the layer-ingestion step of the reference's create_cube
     (icecube/bin/generate_cube.py via analytics_IO.load_tiff), as a
     distributed map. Non-TIFF inputs are dropped; compressed TIFFs
-    raise (decode needs rasterio there). At scale each ~raster is one
-    row in an executor-local Arrow batch; downstream cube assembly
-    shuffles only (path, band) keys, never pixel payloads twice."""
+    raise (decode needs rasterio there)."""
+    return map_products(
+        binary_df, lambda p, d: _grd_row(p, d, False, True), RASTER_PIXELS_SCHEMA
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"path": [], "width": [], "height": [], "dtype": [], "pixels": []}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                arr = decode_tiff_pixels(bytes(blob))
-                if arr is None:
-                    continue
-                rows["path"].append(path)
-                rows["height"].append(arr.shape[0])
-                rows["width"].append(arr.shape[1])
-                rows["dtype"].append(str(arr.dtype))
-                # plain list: Arrow rejects a numpy ndarray cell here
-                rows["pixels"].append(arr.astype("float64").ravel().tolist())
-            if not rows["path"]:
-                # an empty float64 column can't arrow-cast to
-                # list<double>; emit nothing for all-junk batches
-                continue
-            out = pd.DataFrame(rows)
-            out["pixels"] = out["pixels"].astype(object)
-            yield out
 
-    return binary_df.select("path", "content").mapInPandas(
-        run, schema=RASTER_PIXELS_SCHEMA
+def read_grd_layers(binary_df: DataFrame) -> DataFrame:
+    """binaryFile rows → one cube layer per GRD product: the
+    crawl_iceye_metadata columns plus pixels, from ONE parse of each
+    TIFF — the rows crawl_iceye_metadata joined with decode_rasters
+    on path would give, without the second parse or the join."""
+    return map_products(
+        binary_df, lambda p, d: _grd_row(p, d, True, True), GRD_LAYER_SCHEMA
     )
 
 

@@ -1,0 +1,322 @@
+"""One parse per product: the fused GRD/SLC layer readers against the
+crawl ⨝ decode they replace, the cube plan shape, and the
+generate_cube CLI's single-decode export — all on stacks synthesized
+in the test, no reference fixtures needed."""
+
+import struct
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from icecube_spark.config import CubeConfig
+from icecube_spark.cube import _filter_and_grid, create_cube_from_slc
+from icecube_spark.sources.hdf5_write import write_h5
+from tests.test_scale_paths import _mk_tiff_full
+
+_SLC_DATES = {  # name -> (acquisition_end_utc, incidence_center)
+    "slc_a.h5": ("2021-03-01T08:00:00.000000", 25.0),
+    "slc_b.h5": ("2021-03-02T20:00:00Z", 30.0),
+    "slc_c.h5": ("2021-03-04T10:30:00", 41.0),  # dropped by the angle
+}
+_KEEP = {
+    "start_date": 20210301,
+    "end_date": 20210331,
+    "max_incidence_angle": 35.0,
+    "temporal_overlap": True,
+}
+
+
+def _slc_stack(path, names=_SLC_DATES, extras=True):
+    """An SLC stack written with write_h5; `extras` adds a non-HDF5
+    .h5 and an .h5 without s_q, which every reader must drop from the
+    cube. Returns {name: s_i}."""
+    rng = np.random.default_rng(11)
+    s_i = {}
+    for name, (end_utc, angle) in names.items():
+        s_i[name] = rng.normal(0, 300, (4, 5)).astype("i2")
+        (path / name).write_bytes(
+            write_h5(
+                {
+                    "s_i": s_i[name],
+                    "s_q": rng.normal(0, 300, (4, 5)).astype("i2"),
+                    "product_file": name,
+                    "acquisition_end_utc": end_utc,
+                    "incidence_center": np.array([angle], dtype="f8"),
+                    "orbit_direction": "ASCENDING",
+                    "number_of_azimuth_samples": np.array([4], dtype="i4"),
+                    "number_of_range_samples": np.array([5], dtype="i4"),
+                }
+            )
+        )
+    if extras:
+        (path / "junk.h5").write_bytes(b"not an HDF5 file at all")
+        (path / "no_sq.h5").write_bytes(
+            write_h5(
+                {
+                    "s_i": np.ones((4, 5), "i2"),
+                    "product_file": "no_sq.h5",
+                    "acquisition_end_utc": "2021-03-05T00:00:00.000000",
+                }
+            )
+        )
+    return s_i
+
+
+def _with_gdal_metadata(tiff: bytes, items: dict) -> bytes:
+    """Rewrite a little-endian `_mk_tiff_full` TIFF with a GDAL_METADATA
+    (42112) ASCII tag: a copy of its IFD plus that entry is appended
+    and the header points at it (the old entries' offsets stay
+    valid)."""
+    xml = "<GDALMetadata>" + "".join(
+        f'<Item name="{k}">{v}</Item>' for k, v in items.items()
+    ) + "</GDALMetadata>"
+    raw = xml.encode() + b"\x00"
+    (n,) = struct.unpack("<H", tiff[8:10])
+    body = tiff + b"\x00" * (len(tiff) % 2)
+    ifd_off = len(body)
+    data_off = ifd_off + 2 + 12 * (n + 1) + 4
+    ifd = (
+        struct.pack("<H", n + 1)
+        + tiff[10 : 10 + 12 * n]
+        + struct.pack("<HHII", 42112, 2, len(raw), data_off)
+        + struct.pack("<I", 0)
+    )
+    return b"II" + struct.pack("<HI", 42, ifd_off) + body[8:] + ifd + raw
+
+
+def _grd_stack(path):
+    rng = np.random.RandomState(3)
+    for i, (end_utc, angle) in enumerate(
+        [("2021-04-27T21:51:24.500000", 29.5), ("2021-04-28T21:51:24.500000", 31.0)]
+    ):
+        pix = rng.randint(0, 60000, size=(6, 7)).astype("uint16")
+        (path / f"grd_{i}.tif").write_bytes(
+            _with_gdal_metadata(
+                _mk_tiff_full(pix, 16, strips=2),
+                {
+                    "product_file": f"GRD_{i}",
+                    "acquisition_end_utc": end_utc,
+                    "incidence_center": angle,
+                    "orbit_direction": "DESCENDING",
+                    "number_of_range_samples": 7,
+                    "number_of_azimuth_samples": 6,
+                },
+            )
+        )
+    # no GDAL tag: the shape falls back to the TIFF header
+    (path / "bare.tif").write_bytes(
+        _mk_tiff_full(rng.randint(0, 255, size=(3, 2)).astype("uint8"), 8)
+    )
+    (path / "junk.tif").write_bytes(b"II not a tiff")
+
+
+def _rows(df):
+    return sorted(
+        (tuple(r) for r in df.collect()), key=lambda r: r[0]
+    )
+
+
+def _binary(spark, path):
+    return spark.read.format("binaryFile").load(str(path))
+
+
+def test_slc_reader_equals_crawl_join_decode(spark, tmp_path):
+    from icecube_spark.sources.hdf5 import (
+        crawl_slc_metadata,
+        decode_slc,
+        read_slc_layers,
+    )
+
+    s_i = _slc_stack(tmp_path)
+    bdf = _binary(spark, tmp_path)
+    old = crawl_slc_metadata(bdf).join(
+        decode_slc(bdf).select(
+            "path", F.col("s_i").alias("Real"), F.col("s_q").alias("Complex")
+        ),
+        "path",
+    )
+    new = read_slc_layers(bdf)
+    assert new.schema == old.schema
+    got = _rows(new)
+    assert got == _rows(old)
+    assert [r[1] for r in got] == sorted(_SLC_DATES)
+    by_name = {r.product_file: r for r in new.collect()}
+    assert by_name["slc_a.h5"].Real == list(s_i["slc_a.h5"].astype("f8").ravel())
+    # every acquisition_end_utc spelling parses to its date
+    assert {n: str(r.acquisition_date) for n, r in by_name.items()} == {
+        "slc_a.h5": "2021-03-01", "slc_b.h5": "2021-03-02",
+        "slc_c.h5": "2021-03-04",
+    }
+
+
+def test_grd_reader_equals_crawl_join_decode(spark, tmp_path):
+    from icecube_spark.sources.raster import (
+        crawl_iceye_metadata,
+        decode_rasters,
+        read_grd_layers,
+    )
+
+    _grd_stack(tmp_path)
+    bdf = _binary(spark, tmp_path)
+    old = crawl_iceye_metadata(bdf).join(
+        decode_rasters(bdf).select("path", "pixels"), "path"
+    )
+    new = read_grd_layers(bdf)
+    assert new.schema == old.schema
+    assert _rows(new) == _rows(old)
+    by_name = {r.product_file: r for r in new.collect()}
+    assert sorted(by_name) == ["GRD_0", "GRD_1", "bare.tif"]
+    assert (by_name["GRD_1"].incidence_center, by_name["GRD_1"].width) == (31.0, 7)
+    assert str(by_name["GRD_0"].acquisition_date) == "2021-04-27"
+    bare = by_name["bare.tif"]
+    assert (bare.height, bare.width, bare.acquisition_date) == (3, 2, None)
+
+
+@pytest.mark.parametrize("grid", [0, 1])
+def test_cube_schema_unchanged(spark, tmp_path, grid):
+    """Both families' cube frames keep the schema the crawl ⨝ decode
+    join gave them, with and without the temporal grid."""
+    from icecube_spark.cube import create_cube_from_rasters
+    from icecube_spark.sources.hdf5 import crawl_slc_metadata, decode_slc
+    from icecube_spark.sources.raster import crawl_iceye_metadata, decode_rasters
+
+    cfg = CubeConfig.from_dict({**_KEEP, "temporal_resolution": grid})
+    (tmp_path / "slc").mkdir()
+    (tmp_path / "grd").mkdir()
+    _slc_stack(tmp_path / "slc")
+    _grd_stack(tmp_path / "grd")
+    sdf = _binary(spark, tmp_path / "slc")
+    slc_join = crawl_slc_metadata(sdf).join(
+        decode_slc(sdf).select(
+            "path", F.col("s_i").alias("Real"), F.col("s_q").alias("Complex")
+        ),
+        "path",
+    )
+    gdf = _binary(spark, tmp_path / "grd")
+    grd_join = crawl_iceye_metadata(gdf).join(
+        decode_rasters(gdf).select("path", "pixels"), "path"
+    )
+    for dc, join, bands in (
+        (create_cube_from_slc(spark, str(tmp_path / "slc"), cfg), slc_join,
+         ["Real", "Complex"]),
+        (create_cube_from_rasters(spark, str(tmp_path / "grd"), cfg), grd_join,
+         ["pixels"]),
+    ):
+        want = _filter_and_grid(spark, join, cfg, bands)
+        assert dc.df.schema == want.df.schema
+        assert dc.ts_col == want.ts_col and dc.band_cols == bands
+
+
+def test_slc_cube_plan_parses_once(spark, tmp_path):
+    """The cube plan reads the products in one Python map, no join."""
+    _slc_stack(tmp_path)
+    df = create_cube_from_slc(
+        spark, str(tmp_path), CubeConfig.from_dict(_KEEP)
+    ).df
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan, plan
+    assert sorted(r.product_file for r in df.collect()) == ["slc_a.h5", "slc_b.h5"]
+
+
+def _config(tmp_path, cfg):
+    import json
+
+    p = tmp_path / "config.json"
+    p.write_text(json.dumps(cfg))
+    return str(p)
+
+
+def _persistent(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_cli_saves_kept_products_and_releases_cache(spark, tmp_path):
+    """`--cube-save` on a synthesized SLC stack writes the config's
+    products, in date order, with s_i as the pixels; the reopened
+    frame has the pandas-built schema and the CLI persists nothing
+    past its return."""
+    from icecube_spark.generate_cube import cli
+    from icecube_spark.sources.netcdf3 import netcdf_to_cube
+
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    s_i = _slc_stack(stack)
+    out = str(tmp_path / "cube.nc")
+    before = _persistent(spark)
+    dc = cli(
+        [str(stack), "--config", _config(tmp_path, _KEEP), "--cube-save", out],
+        spark=spark,
+    )
+    assert _persistent(spark) == before
+    assert dc.df.count() == 2
+    back = netcdf_to_cube(spark, out)
+    assert back.df.schema.simpleString() == (
+        "struct<height:bigint,pixels:array<double>,product_file:string,"
+        "slot_date:date,width:bigint>"
+    )
+    rows = back.df.orderBy("slot_date").collect()
+    assert [r.product_file for r in rows] == ["slc_a.h5", "slc_b.h5"]
+    assert [(r.height, r.width) for r in rows] == [(4, 5), (4, 5)]
+    for r in rows:
+        assert r.pixels == list(s_i[r.product_file].astype("f8").ravel())
+
+
+@pytest.mark.parametrize(
+    "grid, why", [(0, "empty cube"), (7, "no layer of the cube carries a shape")]
+)
+def test_cli_refuses_empty_cube_and_releases_cache(spark, tmp_path, grid, why):
+    """A config that keeps no product reaches the export's refusal
+    (not a crash in the layer-shape inference) — with a temporal grid
+    the cube holds only shapeless gap rows — and the cache is
+    released on that path too."""
+    from icecube_spark.generate_cube import cli
+
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    _slc_stack(stack, extras=False)
+    cfg = _config(
+        tmp_path,
+        {**_KEEP, "start_date": 20220101, "end_date": 20220131,
+         "temporal_resolution": grid},
+    )
+    before = _persistent(spark)
+    with pytest.raises(ValueError, match=why):
+        cli(
+            [str(stack), "--config", cfg, "--cube-save", str(tmp_path / "x.nc")],
+            spark=spark,
+        )
+    assert _persistent(spark) == before
+    assert not (tmp_path / "x.nc").exists()
+
+
+def test_cube_to_netcdf_refuses_empty_cube(spark, tmp_path):
+    from icecube_spark.sources.netcdf3 import cube_to_netcdf
+
+    _slc_stack(tmp_path, extras=False)
+    dc = create_cube_from_slc(
+        spark, str(tmp_path),
+        CubeConfig.from_dict({**_KEEP, "start_date": 20220101, "end_date": 20220131}),
+    )
+    dc.df = dc.df.withColumn("pixels", F.col("Real"))
+    with pytest.raises(ValueError, match="empty cube"):
+        cube_to_netcdf(dc, str(tmp_path / "empty.nc"), 4, 5)
+
+
+def test_non_ascii_product_name_round_trips(spark, tmp_path):
+    """strlen is sized in encoded bytes: a product name whose UTF-8
+    form is longer than its characters exports and reopens intact."""
+    from icecube_spark.generate_cube import cli
+    from icecube_spark.sources.netcdf3 import netcdf_to_cube
+
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    names = {"é.h5": _SLC_DATES["slc_a.h5"], "a.h5": _SLC_DATES["slc_b.h5"]}
+    s_i = _slc_stack(stack, names, extras=False)
+    out = str(tmp_path / "cube.nc")
+    cli([str(stack), "--config", _config(tmp_path, _KEEP), "--cube-save", out],
+        spark=spark)
+    rows = netcdf_to_cube(spark, out).df.orderBy("slot_date").collect()
+    assert [r.product_file for r in rows] == ["é.h5", "a.h5"]
+    assert rows[0].pixels == list(s_i["é.h5"].astype("f8").ravel())
