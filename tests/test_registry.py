@@ -7,9 +7,11 @@ does."""
 import glob
 import json
 import os
-import sys
+
+import pytest
 
 import __spark_entry__ as entry
+import plan_audit  # scripts/, put on sys.path by conftest.py
 
 from . import (
     test_analytics,
@@ -20,8 +22,6 @@ from . import (
 )
 
 ROOT = os.path.join(os.path.dirname(__file__), "..")
-sys.path.insert(0, os.path.join(ROOT, "scripts"))
-import funnel_sweep as fs  # noqa: E402
 
 
 def test_every_oracle_key_has_one_parity_test():
@@ -100,18 +100,12 @@ def test_oracle_sql_is_nonempty_select():
 
 
 def test_plans_audit_covers_every_registered_key():
-    """PLANS.md (scripts/explain_audit.py output) must hold one plan
-    section per registered query — the every-key explain-audit
+    """PLANS.md (scripts/plan_audit.py output) must hold exactly one
+    fingerprint line per registered query — the every-key plan-audit
     invariant (VERDICT r2 item 4)."""
-    import re
-
-    path = os.path.join(ROOT, "PLANS.md")
-    sections = set(re.findall(r"^## (\S+)", open(path).read(), re.M))
-    registered = set(entry.queries())
-    missing = registered - sections
-    stale = sections - registered
-    assert not missing, f"PLANS.md missing sections: {sorted(missing)}"
-    assert not stale, f"PLANS.md stale sections: {sorted(stale)}"
+    with open(os.path.join(ROOT, "PLANS.md")) as fh:
+        keys = [plan_audit.parse_line(ln)[0] for ln in fh if " | ops: " in ln]
+    assert sorted(keys) == sorted(entry.queries())
 
 
 def test_survey_status_counts_match_registry():
@@ -134,21 +128,118 @@ def test_survey_status_counts_match_registry():
 
 
 def test_fast_funnel_sweep_over_pinned_plans_is_clean():
-    """The sub-second plan-smell gate (funnel_sweep --plans): every
-    PLANS.md pinned formatted plan must scan clean — no
-    empty/low-cardinality window partition without a provable bound,
-    no CartesianProduct outside the broadcast-scalar idiom. The
+    """The plan-smell gate over PLANS.md: every pinned fingerprint must
+    read clean under the current rules — no empty/low-cardinality
+    window partition without a provable bound, no CartesianProduct.
+    The rules read the fingerprint's window sites, so a LOW_CARD_COLS
+    or WHITELIST edit applies here without regenerating. The
     live-plan twin (tests/test_scale_paths.py::
-    test_registry_wide_funnel_sweep) stays the round-close gate;
-    this one makes plan smells surface on every pytest run without
-    building 481 live plans."""
-    path = os.path.join(ROOT, "PLANS.md")
-    sections = fs._formatted_sections(open(path).read())
-    registered = set(entry.queries())
-    assert registered <= set(sections)
+    test_registry_wide_funnel_sweep) checks freshly built plans."""
+    plans = plan_audit.read_plans(os.path.join(ROOT, "PLANS.md"))
+    assert set(entry.queries()) <= set(plans)
     flagged, cartesians = [], []
-    for k in sorted(registered):
-        flagged.extend(fs.violations_formatted(k, sections[k]))
-        cartesians.extend(fs.join_smells(k, sections[k]))
+    for k, fp in sorted(plans.items()):
+        flagged.extend(plan_audit.violations(k, fp["windows"]))
+        cartesians.extend(plan_audit.join_smells(k, fp))
     assert not flagged, f"pinned-plan funnels: {flagged[:5]}"
     assert not cartesians, f"pinned-plan cartesians: {cartesians[:5]}"
+
+
+
+
+_SCAN = "FileScan parquet [lang#2,ts#1] PushedFilters: [], ReadSchema: struct<lang:string>"
+_WIN = (
+    "Window [row_number() windowspecdefinition({p}ts#1 ASC NULLS FIRST, "
+    "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS rn#5]"
+)
+_LOW, _GLOBAL = _WIN.format(p="lang#2, "), _WIN.format(p="")
+_EXCH = "Exchange hashpartitioning(lang#2, 32), ENSURE_REQUIREMENTS, [plan_id=1]"
+# toString layouts as Spark prints them: an executed AdaptiveSparkPlan
+# adds `== Final Plan ==` / `== Initial Plan ==` sections, and a cached
+# plan's sections restart the indentation
+_PLANS = {  # case: (plan, flagged partitions, CartesianProducts)
+    "low_card_over_exchange": (f"""\
+AdaptiveSparkPlan isFinalPlan=false
++- {_LOW}
+   +- {_EXCH}
+      +- {_SCAN}
+""", [["lang"]], 0),
+    "global_over_aggregate": (f"""\
+AdaptiveSparkPlan isFinalPlan=false
++- {_GLOBAL}
+   +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=2]
+      +- HashAggregate(keys=[ts#1], functions=[count(1)])
+         +- {_SCAN}
+""", [], 0),
+    "reused_exchange_on_aggregate": (f"""\
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   *(3) BroadcastHashJoin [ts#1], [ts#6], Inner, BuildRight, false
+   :- {_GLOBAL}
+   :  +- ShuffleQueryStage 0
+   :     +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=40]
+   :        +- *(1) HashAggregate(keys=[ts#1], functions=[count(1)])
+   :           +- {_SCAN}
+   +- BroadcastQueryStage 2
+      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, timestamp, true]),false), [plan_id=60]
+         +- {_GLOBAL}
+            +- ShuffleQueryStage 1
+               +- ReusedExchange [ts#6, n#7L], Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=40]
++- == Initial Plan ==
+   BroadcastHashJoin [ts#1], [ts#6], Inner, BuildRight, false
+""", [], 0),
+    "initial_plan_twin_only": (f"""\
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   LocalTableScan <empty>, [lang#2, ts#1, rn#5]
++- == Initial Plan ==
+   {_LOW}
+   +- {_EXCH}
+      +- {_SCAN}
+""", [], 0),
+    "cached_relation_funnel": (f"""\
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   *(1) Project [lang#2, rn#5]
+   +- TableCacheQueryStage 0
+      +- InMemoryTableScan [lang#2, rn#5]
+            +- InMemoryRelation [lang#2, rn#5], StorageLevel(disk, memory, 1 replicas)
+                  +- AdaptiveSparkPlan isFinalPlan=true
+                  +- == Final Plan ==
+                     {_LOW}
+                     +- ShuffleQueryStage 0
+                        +- {_EXCH}
+                           +- {_SCAN}
+                  +- == Initial Plan ==
+                     {_LOW}
+                     +- {_EXCH}
+                        +- {_SCAN}
++- == Initial Plan ==
+   Project [lang#2, rn#5]
+""", [["lang"]], 0),
+    "cartesian_product": (f"""\
+AdaptiveSparkPlan isFinalPlan=false
++- CartesianProduct (ts#1 < ts#8)
+   :- {_SCAN}
+   +- {_SCAN}
+""", [], 1),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PLANS))
+def test_plan_scanner_rules(case):
+    """The one scanner over executedPlan().toString() shapes: funnels
+    over raw exchanges are flagged, aggregate grain is credited through
+    a ReusedExchange, Initial Plan twins are skipped (nested cached ones
+    included), cached-relation plans are scanned, a CartesianProduct is
+    a join smell — and the fingerprint line round-trips."""
+    plan, funnels, n_cartesian = _PLANS[case]
+    fp = plan_audit.fingerprint(plan)
+    assert fp["windows"] == sorted(
+        plan_audit.scan_plan(plan), key=plan_audit.format_site
+    )
+    flagged = plan_audit.violations(case, fp["windows"])
+    assert [f["partition"] for f in flagged] == funnels
+    assert len(plan_audit.join_smells(case, fp)) == n_cartesian
+    line = plan_audit.format_line(case, fp)
+    assert plan_audit.parse_line(line) == (case, fp)

@@ -500,20 +500,10 @@ def test_registry_wide_funnel_sweep(spark, sf_dir):
     offset tables, an upstream aggregate in the input subtree
     (aggregate grain, not raw rows), or a WindowGroupLimit rewrite
     (rank<=k pruned map-side). Rules + whitelist live in
-    scripts/funnel_sweep.py; the r8 sweep caught and fixed
+    scripts/plan_audit.py; the r8 sweep caught and fixed
     conversion_lag, downsample_lttb, doc_length_stats,
     token_budget_sample, cube_hist_match, and markov_accuracy."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "funnel_sweep",
-        os.path.join(
-            os.path.dirname(__file__), "..", "scripts", "funnel_sweep.py"
-        ),
-    )
-    fs = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(fs)
+    import plan_audit
 
     import __spark_entry__ as entry_mod
 
@@ -532,12 +522,12 @@ def test_registry_wide_funnel_sweep(spark, sf_dir):
     flagged, cartesians, errs = [], [], {}
     for k in sorted(qs):
         try:
-            plan = (
+            fp = plan_audit.fingerprint(
                 qs[k](spark, sf_dir)
                 ._jdf.queryExecution().executedPlan().toString()
             )
-            flagged.extend(fs.violations(k, plan))
-            cartesians.extend(fs.join_smells(k, plan))
+            flagged.extend(plan_audit.violations(k, fp["windows"]))
+            cartesians.extend(plan_audit.join_smells(k, fp))
         except Exception as exc:  # pragma: no cover - plan build bug
             errs[k] = f"{type(exc).__name__}: {exc}"[:200]
     assert not errs, f"plans failed to build: {errs}"
