@@ -64,18 +64,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cluster row groups provide natural splits and this no-ops; tiny
     dimension tables are left alone so their broadcast stays cheap.
     Column pruning and predicate pushdown still reach the scan below
-    the exchange. Disable with SPARK_GRAFT_SCAN_FANOUT=0.
+    the exchange.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division: ns epochs exceed 2^53, double math would round
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") != "0":
-        cores = spark.sparkContext.defaultParallelism
-        row_groups, rows = _footer(path)
-        if rows >= _FANOUT_MIN_ROWS and 0 < row_groups < cores // 2:
-            df = df.repartition(cores)
+    cores = spark.sparkContext.defaultParallelism
+    row_groups, rows = _footer(path)
+    if rows >= _FANOUT_MIN_ROWS and 0 < row_groups < cores // 2:
+        df = df.repartition(cores)
     return df
 
 

@@ -90,18 +90,18 @@ class Datacube:
             )
         return arr.reshape(height, width)
 
+    def layers(self) -> DataFrame:
+        """The layers in the cube's ONE layer order: time, then product
+        name, so two products on one date keep a fixed order. The
+        product accessors, get_index_values and the netCDF export all
+        read it, so tied timestamps can never make them disagree (the
+        reference indexes one stored attrs list and cannot diverge
+        either)."""
+        return self.df.orderBy(self.ts_col, self.key_col)
+
     def _product_list(self) -> list:
-        """Time-ordered product names with a deterministic tiebreak
-        (ts, then name) — the ONE ordering get_all_products and
-        get_product_index both read, so tied timestamps can never
-        make the two accessors disagree (the reference indexes one
-        stored attrs list and cannot diverge either)."""
-        return [
-            r[0]
-            for r in self.df.orderBy(self.ts_col, self.key_col)
-            .select(self.key_col)
-            .collect()
-        ]
+        """Product names in layer order (``layers``)."""
+        return [r[0] for r in self.layers().select(self.key_col).collect()]
 
     def get_all_products(self) -> list:
         """Reference Datacube.get_all_products (datacube.py:86): every
@@ -179,12 +179,10 @@ class Datacube:
 
     def get_index_values(self, index: str) -> list:
         """Reference get_index_values (datacube.py:161): one column's
-        values across layers in time order."""
+        values across layers in layer order (``layers``)."""
         if index not in self.df.columns:
             raise KeyError(f"no column {index!r} in cube")
-        return [
-            r[0] for r in self.df.orderBy(self.ts_col).select(index).collect()
-        ]
+        return [r[0] for r in self.layers().select(index).collect()]
 
     def visualize(self, path: str | None = None,
                   width: int = 720, height: int = 240) -> str:

@@ -36,7 +36,3 @@ def phase(re: Column, im: Column) -> Column:
 def to_db(intensity_col: Column) -> Column:
     """Linear intensity → decibels."""
     return 10.0 * F.log10(intensity_col)
-
-
-def amplitude_to_db(amp: Column) -> Column:
-    return 20.0 * F.log10(amp)

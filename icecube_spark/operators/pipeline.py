@@ -41,6 +41,80 @@ def _range_partitions(df: DataFrame, num_ranges: int | None = None) -> int:
     return max(1, n)
 
 
+def _range_pass(
+    df: DataFrame,
+    order_cols: list,
+    keys: list[str],
+    local: dict,
+    per_range: list,
+    num_ranges: int | None,
+    handoff: bool = False,
+) -> DataFrame:
+    """The range pass under every distributed window primitive (rank,
+    NTILE, running sum, depth cuts, lag): exact windows over a total
+    order, per key, without funnelling a key through one task.
+
+    RANGE-repartition on (keys, order) and tag each row with its
+    range id ``__pid``; add the ``local`` columns, each a function of
+    the window over (``__pid``, keys) in order; aggregate ``per_range``
+    per (``__pid``, key) into a tiny table (≤ |keys|·num_ranges rows)
+    and broadcast it back onto the rows with a null-safe keyed join (a
+    name-join would drop null-key rows that groupBy kept as a group).
+    Each per-range column ``c`` arrives as ``c_off``, its sum over the
+    key's earlier ranges (0 for the first), and ``c_all``, its sum over
+    the whole key. With ``handoff`` the per-range row goes instead,
+    unsummed, to the key's NEXT non-empty range (left join: the first
+    range gets nulls). Not blindly ``__pid + 1``: duplicate sampled
+    bounds can leave interior ranges empty.
+
+    The local rows are materialized ONCE, before the rows branch and
+    the table branch split: both must see the SAME range bounds —
+    spark_partition_id is nondeterministic and the range sampler can
+    pick different bounds per subtree evaluation when the input's own
+    row order is nondeterministic (e.g. a join), silently corrupting
+    the offsets (at 100 TB this is a reliable checkpoint, same as the
+    iterative operators).
+    """
+    p = df.repartitionByRange(
+        _range_partitions(df, num_ranges), *keys, *order_cols
+    ).withColumn("__pid", F.spark_partition_id())
+    wloc = Window.partitionBy("__pid", *keys).orderBy(*order_cols)
+    loc = p.select(
+        "*", *[fn(wloc).alias(c) for c, fn in local.items()]
+    ).transform(materialize)
+    agg = loc.groupBy("__pid", *keys).agg(*per_range)
+    names = agg.columns[len(keys) + 1:]
+    wkey = Window.partitionBy(*keys).orderBy("__pid")
+    if handoff:
+        nxt = F.lead("__pid").over(wkey).alias("__pid")
+        tab = agg.select(nxt, *keys, *names).where(F.col("__pid").isNotNull())
+    else:
+        before = wkey.rowsBetween(Window.unboundedPreceding, -1)
+        whole = Window.partitionBy(*keys).rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        tab = agg.select(
+            "__pid",
+            *keys,
+            *[
+                F.coalesce(F.sum(c).over(before), F.lit(0)).alias(f"{c}_off")
+                for c in names
+            ],
+            *[F.sum(c).over(whole).alias(f"{c}_all") for c in names],
+        )
+    tab = tab.select(
+        F.col("__pid").alias("__opid"),
+        *[F.col(k).alias(f"__k_{k}") for k in keys],
+        *tab.columns[len(keys) + 1:],
+    )
+    cond = F.col("__pid") == F.col("__opid")
+    for k in keys:
+        cond = cond & F.col(k).eqNullSafe(F.col(f"__k_{k}"))
+    return loc.join(F.broadcast(tab), cond, "left" if handoff else "inner").drop(
+        "__opid", *[f"__k_{k}" for k in keys]
+    )
+
+
 def _bucket(id_col: str, n: int = 100) -> F.Column:
     """Deterministic bucket in [0, n): md5 of the id, first 60 bits.
     Same text formula evaluates identically in DuckDB, so assignment
@@ -1027,8 +1101,7 @@ def pagerank(
     ranks = nodes.select(
         "node", F.lit(int(math.floor(1e12 / n_nodes))).cast("bigint").alias("qr")
     )
-    prev_cached = None
-    for it in range(1, iterations + 1):
+    for _ in range(iterations):
         # per-edge contributions reduce on dst — the ONE |edges|-scale
         # shuffle of the iteration. The shuffle_hash hint makes ranks
         # the hash build side (|nodes|/partitions rows per task), so
@@ -1072,23 +1145,17 @@ def pagerank(
                 ).cast("bigint").alias("qr"),
             )
         )
-        # Materialization cadence. With a dangling set, ranks is read
-        # TWICE next pass (edge join + mass scalar), so every
-        # iteration must end in a barrier or each consumer re-runs the
-        # pass (the r9 "wall time triples" failure). Sink-free graphs
-        # read ranks ONCE per pass, so a barrier every 2nd iteration
-        # executes the identical work in half the blocking jobs (the
-        # unbarriered pass is planned once, inside its consumer's
-        # job). The barrier itself is a hash-partitioned PERSIST +
-        # count, not a localCheckpoint: the cached relation keeps its
-        # hashpartitioning(node) (canChangeCachedPlanOutputPartitioning
-        # stays at its false default), so the next pass's shuffle-hash
-        # ranks join reuses the partitioning instead of re-exchanging
-        # — and lineage survives, so a lost cache block recomputes
-        # instead of killing the query (better cluster story than the
-        # unreplicated localCheckpoint blocks this replaced).
-        if n_dangling or it % 2 == 0 or it == iterations:
-            ranks = ranks.transform(materialize)
+        # Every iteration ends in a barrier: materialize(), under the
+        # default backend an eager localCheckpoint
+        # (functions/materialize.py). The next pass reads the stored
+        # ranks, so its consumers (the edge join, plus the mass scalar
+        # when the graph has sinks) never re-run this pass and the plan
+        # does not grow with the iteration count. The checkpoint cuts
+        # lineage: its blocks are unreplicated, so a lost executor fails
+        # the query unless the reliable or persist backend is set. A
+        # barrier on every 2nd iteration only (sink-free graphs) timed
+        # no faster beyond run-to-run spread, so it was dropped.
+        ranks = ranks.transform(materialize)
     out = ranks.select(
         "node", (F.col("qr").cast("double") / F.lit(1e12)).alias("rank")
     )
@@ -1106,63 +1173,53 @@ def distributed_depth_cuts(
     without a single-partition window: the distributed prefix-sum
     pattern. length_deciles' exact-histogram trick assumes few
     distinct values; with ~1 distinct value per row its cumulative
-    window would funnel the whole column through one task. Here:
-    (1) value histogram (one shuffle; no-op compression on
-    continuous data but harmless), (2) RANGE-repartition by value,
-    local cumsums within each sorted range, (3) per-partition totals
-    (tiny) prefix-summed and broadcast back as offsets — global
-    cumulative counts with no global sort. Cut d = min value whose
-    global running count reaches ceil(d·N/bins); integer counts make
-    the cuts engine-exact regardless of partitioning.
+    window would funnel the whole column through one task. Here the
+    value histogram (one shuffle; no-op compression on continuous
+    data but harmless) goes through the range pass (``_range_pass``)
+    ordered by value: local cumulative counts plus each range's
+    offset give the global cumulative count with no global sort. Cut
+    d = min value whose global running count reaches ceil(d·N/bins);
+    integer counts make the cuts engine-exact regardless of
+    partitioning.
 
     Returns a 1-row DataFrame with `cut_list` (n_bins-1 ascending
     values) for broadcast assignment. With ``with_stats=True`` the
-    row also carries `vmin`/`vmax` (read off the same histogram —
-    saves consumers a separate min/max scan of the column).
+    row also carries `vmin`/`vmax` (the cuts at d = 0 and d = bins
+    of the same pass — saves consumers a separate min/max scan of the
+    column).
     """
     h = df.groupBy(F.col(value_col).alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    hp = h.repartitionByRange(_range_partitions(df, num_ranges), "v").withColumn(
-        "pid", F.spark_partition_id()
+    lcum = F.sum("cnt")
+    cum = _range_pass(
+        h,
+        ["v"],
+        [],
+        {"__lcum": lambda w: lcum.over(w.rowsBetween(Window.unboundedPreceding, 0))},
+        [lcum.alias("__ptot")],
+        num_ranges,
+    ).withColumn("cum", F.col("__lcum") + F.col("__ptot_off"))
+    # with stats, d = 0 and d = n_bins add the min and the max value
+    ends = int(with_stats)
+    ds = df.sparkSession.range(1 - ends, n_bins + ends).select(
+        F.col("id").alias("d")
     )
-    wloc = Window.partitionBy("pid").orderBy("v")
-    # materialize ONCE before branching: the cum branch and the ptot
-    # branch must see the same range bounds (spark_partition_id is
-    # nondeterministic; see distributed_ntile below for the failure
-    # mode this prevents)
-    hl = hp.withColumn(
-        "lcum", F.sum("cnt").over(wloc.rowsBetween(Window.unboundedPreceding, 0))
-    ).transform(materialize)
-    ptot = hl.groupBy("pid").agg(F.sum("cnt").alias("ptot"))
-    woff = Window.partitionBy().orderBy("pid")
-    off = ptot.select(
-        "pid",
-        F.coalesce(
-            F.sum("ptot").over(woff.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("off"),
-        F.sum("ptot").over(
-            Window.partitionBy().rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n_total"),
-    )
-    cum = hl.join(F.broadcast(off), "pid").withColumn(
-        "cum", F.col("lcum") + F.col("off")
-    )
-    ds = df.sparkSession.range(1, n_bins).select(F.col("id").alias("d"))
     cuts = (
         cum.crossJoin(F.broadcast(ds))
-        .where(F.col("cum") >= F.ceil(F.col("d") * F.col("n_total") / n_bins))
+        .where(F.col("cum") >= F.ceil(F.col("d") * F.col("__ptot_all") / n_bins))
         .groupBy("d")
         .agg(F.min("v").alias("cut"))
     )
-    out = cuts.agg(F.sort_array(F.collect_list("cut")).alias("cut_list"))
+    d, cut = F.col("d"), F.col("cut")
+    inner = F.when(d.between(1, n_bins - 1), cut)
+    out = [F.sort_array(F.collect_list(inner)).alias("cut_list")]
     if with_stats:
-        stats = hl.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"))
-        out = out.crossJoin(F.broadcast(stats))
-    return out
+        out += [
+            F.min(F.when(d == 0, cut)).alias("vmin"),
+            F.max(F.when(d == n_bins, cut)).alias("vmax"),
+        ]
+    return cuts.agg(*out)
 
 
 def feature_binning(
@@ -3053,21 +3110,19 @@ def distributed_rank(
     num_ranges: int | None = None,
 ) -> DataFrame:
     """Exact ROW_NUMBER over a TOTAL order without a single-partition
-    window: RANGE-repartition on the order columns, local row_numbers
-    within each sorted range, per-partition counts (tiny) prefix-summed
-    and broadcast back as offsets → the global rank. Bit-identical to
-    ``F.row_number().over(Window.orderBy(*cols))`` (which is what the
-    SQL oracles keep using) but the data never funnels through one
-    task — the 100 TB shape of a global rank.
+    window: the range pass (``_range_pass``) with local row_numbers
+    and per-range row counts as offsets → the global rank.
+    Bit-identical to ``F.row_number().over(Window.orderBy(*cols))``
+    (which is what the SQL oracles keep using) but the data never
+    funnels through one task — the 100 TB shape of a global rank.
 
-    With ``key_cols`` (plain column names, non-null), the rank is
-    per key — bit-identical to ``row_number().over(Window.partitionBy(
+    With ``key_cols`` (plain column names), the rank is per key —
+    bit-identical to ``row_number().over(Window.partitionBy(
     *key_cols).orderBy(*order_cols))`` — but WITHOUT the low-cardinality
     funnel: a plain keyed window sorts each key's entire corpus-grain
     slice in ONE task, so parallelism == |keys| no matter the cluster;
-    here the range partitioner splits big keys across many tasks and the
-    per-(key, partition) offset table (≤ |keys|·num_ranges rows)
-    broadcasts back. ``n_col`` then attaches the per-key row count.
+    here the range partitioner splits big keys across many tasks.
+    ``n_col`` then attaches the per-key row count.
 
     ``order_cols`` must be a total order within each key (include a
     unique id) so the rank is unambiguous in any engine.
@@ -3075,64 +3130,17 @@ def distributed_rank(
     ``num_ranges`` defaults to ``spark.sql.shuffle.partitions`` (output
     is bit-identical at any count — only parallelism changes).
     """
-    keys = list(key_cols or [])
-    p = df.repartitionByRange(
-        _range_partitions(df, num_ranges), *keys, *order_cols
-    ).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = Window.partitionBy("__pid", *keys).orderBy(*order_cols)
-    # materialize ONCE: the offsets branch and the rows branch below
-    # must see the SAME range bounds — spark_partition_id is
-    # nondeterministic and the range sampler can pick different bounds
-    # per subtree evaluation when the input's own row order is
-    # nondeterministic (e.g. a join), silently corrupting the offsets
-    # (at 100 TB this is a reliable-checkpoint, same as the iterative
-    # operators)
-    loc = p.withColumn("__lrn", F.row_number().over(wloc)).transform(materialize)
-    ptot = loc.groupBy("__pid", *keys).agg(F.count(F.lit(1)).alias("__ptot"))
-    woff = Window.partitionBy(*keys).orderBy("__pid")
-    wall = Window.partitionBy(*keys).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    off = ptot.select(
-        "__pid",
-        *keys,
-        F.coalesce(
-            F.sum("__ptot").over(
-                woff.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("__off"),
-        F.sum("__ptot").over(wall).alias("__ntot"),
-    )
-    if keys:
-        # null-safe manual join: a name-join would silently drop
-        # null-key rows that groupBy kept as their own group
-        o = F.broadcast(
-            off.select(
-                F.col("__pid").alias("__opid"),
-                *[F.col(k).alias(f"__k_{k}") for k in keys],
-                "__off",
-                "__ntot",
-            )
-        )
-        cond = F.col("__pid") == F.col("__opid")
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-        out = loc.join(o, cond).drop(
-            "__opid", *[f"__k_{k}" for k in keys]
-        )
-    else:
-        out = loc.join(F.broadcast(off), "__pid")
-    out = out.withColumn(rank_col, F.col("__lrn") + F.col("__off"))
-    if n_col is not None and n_col != "__ntot":
-        out = out.withColumn(n_col, F.col("__ntot"))
-    temps = [
-        c for c in ("__pid", "__lrn", "__off", "__ntot")
-        if c not in (rank_col, n_col)
-    ]
-    return out.drop(*temps)
+    out = _range_pass(
+        df,
+        order_cols,
+        list(key_cols or []),
+        {"__lrn": lambda w: F.row_number().over(w)},
+        [F.count(F.lit(1)).alias("__ptot")],
+        num_ranges,
+    ).withColumn(rank_col, F.col("__lrn") + F.col("__ptot_off"))
+    if n_col is not None:
+        out = out.withColumn(n_col, F.col("__ptot_all"))
+    return out.drop("__pid", "__lrn", "__ptot_off", "__ptot_all")
 
 
 def distributed_ntile(
@@ -3175,9 +3183,8 @@ def distributed_cumsum(
     num_ranges: int | None = None,
 ) -> DataFrame:
     """Exact running total over a TOTAL order without a single-
-    partition window: RANGE-repartition on the order columns, local
-    cumulative sums within each sorted range, per-partition value
-    totals (tiny) prefix-summed and broadcast back as offsets.
+    partition window: the range pass (``_range_pass``) with local
+    cumulative sums and per-range value totals as offsets.
     Bit-identical to ``F.sum(v).over(Window.orderBy(*cols).rowsBetween
     (unboundedPreceding, 0))`` for exact (integer/decimal) values —
     which is what the SQL oracles keep using — but the data never
@@ -3196,78 +3203,31 @@ def distributed_cumsum(
     both the running total and the sequence number (e.g. OHLC bars).
     ``num_ranges`` defaults to ``spark.sql.shuffle.partitions``.
     """
-    keys = list(key_cols or [])
-    p = df.repartitionByRange(
-        _range_partitions(df, num_ranges), *keys, *order_cols
+    local = {
+        "__lcum": lambda w: F.sum(value_col).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        )
+    }
+    if rank_col is not None:
+        local["__lrn"] = lambda w: F.row_number().over(w)
+    out = _range_pass(
+        df,
+        order_cols,
+        list(key_cols or []),
+        local,
+        [F.sum(value_col).alias("__ptot"), F.count(F.lit(1)).alias("__pcnt")],
+        num_ranges,
     ).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = (
-        Window.partitionBy("__pid", *keys)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # materialize ONCE before branching (see distributed_rank)
-    loc = p.withColumn("__lcum", F.sum(value_col).over(wloc))
-    if rank_col is not None:
-        loc = loc.withColumn(
-            "__lrn",
-            F.row_number().over(
-                Window.partitionBy("__pid", *keys).orderBy(*order_cols)
-            ),
-        )
-    loc = loc.transform(materialize)
-    ptot = loc.groupBy("__pid", *keys).agg(
-        F.sum(value_col).alias("__ptot"),
-        F.count(F.lit(1)).alias("__pcnt"),
-    )
-    woff = Window.partitionBy(*keys).orderBy("__pid")
-    wall = Window.partitionBy(*keys).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    off = ptot.select(
-        "__pid",
-        *keys,
-        F.coalesce(
-            F.sum("__ptot").over(
-                woff.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("__off"),
-        F.sum("__ptot").over(wall).alias("__tot"),
-        F.coalesce(
-            F.sum("__pcnt").over(
-                woff.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("__coff"),
-    )
-    if keys:
-        o = F.broadcast(
-            off.select(
-                F.col("__pid").alias("__opid"),
-                *[F.col(k).alias(f"__k_{k}") for k in keys],
-                "__off",
-                "__tot",
-                "__coff",
-            )
-        )
-        cond = F.col("__pid") == F.col("__opid")
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-        out = loc.join(o, cond).drop(
-            "__opid", *[f"__k_{k}" for k in keys]
-        )
-    else:
-        out = loc.join(F.broadcast(off), "__pid")
-    out = out.withColumn(
-        cum_col, F.coalesce(F.col("__lcum"), F.lit(0)) + F.col("__off")
+        cum_col, F.coalesce(F.col("__lcum"), F.lit(0)) + F.col("__ptot_off")
     )
     if rank_col is not None:
-        out = out.withColumn(rank_col, F.col("__lrn") + F.col("__coff"))
+        out = out.withColumn(rank_col, F.col("__lrn") + F.col("__pcnt_off"))
     if total_col is not None:
-        out = out.withColumn(total_col, F.col("__tot"))
-    return out.drop("__pid", "__lcum", "__lrn", "__off", "__tot", "__coff")
+        out = out.withColumn(total_col, F.col("__ptot_all"))
+    return out.drop(
+        "__pid", "__lcum", "__lrn", "__ptot_off", "__ptot_all",
+        "__pcnt_off", "__pcnt_all",
+    )
 
 
 def distributed_lag(
@@ -3279,12 +3239,12 @@ def distributed_lag(
     num_ranges: int | None = None,
 ) -> DataFrame:
     """Exact LAG(value, 1) over a total order without the keyed-window
-    funnel: RANGE-repartition on (key, order), local lag within each
-    sorted range, then each range's FIRST row of a key takes the
-    previous range's LAST value of the same key from a tiny
-    (partitions x keys) boundary table broadcast back. Bit-identical
-    to ``F.lag(v).over(Window.partitionBy(*keys).orderBy(*order))``
-    — which is what the SQL oracles keep using — but a handful-valued
+    funnel: the range pass (``_range_pass``) with a local lag, then
+    each range's FIRST row of a key takes the LAST value of the key's
+    previous non-empty range, handed over by the pass's boundary
+    table. Bit-identical to
+    ``F.lag(v).over(Window.partitionBy(*keys).orderBy(*order))`` —
+    which is what the SQL oracles keep using — but a handful-valued
     key no longer serializes its whole corpus-grain slice into one
     task. ``order_cols`` must be plain ascending column names forming
     a total order within each key (the boundary pick uses max_by over
@@ -3297,46 +3257,19 @@ def distributed_lag(
             "their struct; a desc()/expression order would silently "
             "hand the WRONG boundary value across partitions)"
         )
-    keys = list(key_cols or [])
-    p = df.repartitionByRange(
-        _range_partitions(df, num_ranges), *keys, *order_cols
+    out = _range_pass(
+        df,
+        order_cols,
+        list(key_cols or []),
+        {
+            "__llag": lambda w: F.lag(value_col).over(w),
+            "__lrn": lambda w: F.row_number().over(w),
+        },
+        [F.max_by(F.col(value_col), F.struct(*order_cols)).alias("__last")],
+        num_ranges,
+        handoff=True,
     ).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = Window.partitionBy("__pid", *keys).orderBy(*order_cols)
-    # materialize ONCE before branching (see distributed_rank)
-    loc = (
-        p.withColumn("__llag", F.lag(value_col).over(wloc))
-        .withColumn("__lrn", F.row_number().over(wloc))
-        .transform(materialize)
-    )
-    bnd = loc.groupBy("__pid", *keys).agg(
-        F.max_by(F.col(value_col), F.struct(*order_cols)).alias("__last")
-    )
-    # hand each partition's last value to the NEXT partition that
-    # actually holds rows of the same key (lead over the tiny boundary
-    # table) — NOT blindly __pid + 1: the range partitioner can emit
-    # empty interior partitions under duplicate sampled bounds, and a
-    # one-deep handoff would silently drop the lag across the gap
-    wnext = Window.partitionBy(*keys).orderBy("__pid")
-    o = F.broadcast(
-        bnd.select(
-            F.lead("__pid").over(wnext).alias("__opid"),
-            *[F.col(k).alias(f"__k_{k}") for k in keys],
-            "__last",
-        ).where(F.col("__opid").isNotNull())
-    )
-    cond = F.col("__pid") == F.col("__opid")
-    for k in keys:
-        cond = cond & F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-    out = (
-        loc.join(o, cond, "left")
-        .withColumn(
-            lag_col,
-            F.when(F.col("__lrn") == 1, F.col("__last")).otherwise(
-                F.col("__llag")
-            ),
-        )
-        .drop("__opid", *[f"__k_{k}" for k in keys])
+        lag_col,
+        F.when(F.col("__lrn") == 1, F.col("__last")).otherwise(F.col("__llag")),
     )
     return out.drop("__pid", "__llag", "__lrn", "__last")

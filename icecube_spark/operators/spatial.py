@@ -45,19 +45,6 @@ def overlap_with_primary_1d(
     )
 
 
-def bbox_intersects(
-    xmin_a: Column, ymin_a: Column, xmax_a: Column, ymax_a: Column,
-    xmin_b: Column, ymin_b: Column, xmax_b: Column, ymax_b: Column,
-) -> Column:
-    """2-D axis-aligned bounding-box intersection predicate."""
-    return (
-        (xmin_a <= xmax_b)
-        & (xmin_b <= xmax_a)
-        & (ymin_a <= ymax_b)
-        & (ymin_b <= ymax_a)
-    )
-
-
 # ---------------------------------------------------------------------------
 # True 2-D polygon intersection (SURVEY §2 A14) — the reference's
 # actual footprint semantics: select_overlapping_rasters uses shapely

@@ -235,7 +235,7 @@ def _materialize_cube(
             f"driver-materialized; raise max_layers explicitly or use "
             f"the distributed parquet sink for cubes this large"
         )
-    rows = dc.df.orderBy(dc.ts_col).collect()
+    rows = dc.layers().collect()
     band = len(rows)
     pix = np.full((band, height, width), np.nan)
     names = []

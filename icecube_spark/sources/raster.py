@@ -167,15 +167,6 @@ TAG_GDAL_METADATA = 42112
 _GDAL_ITEM_RE = None
 
 
-def parse_gdal_metadata(data: bytes) -> dict[str, str]:
-    """GDAL per-item metadata from a TIFF's GDAL_METADATA XML tag —
-    the tag dict rasterio's .tags() exposes, keys lowercased like the
-    reference's _correct_grd_metadata_key (grd_datacube.py). Empty
-    dict for non-TIFFs / TIFFs without the tag."""
-    parsed = _read_ifd(data)
-    return {} if parsed is None else _gdal_metadata(parsed[1])
-
-
 def _gdal_metadata(tags: dict) -> dict[str, str]:
     global _GDAL_ITEM_RE
     import re
@@ -286,28 +277,6 @@ def read_grd_layers(binary_df: DataFrame) -> DataFrame:
     return map_products(
         binary_df, lambda p, d: _grd_row(p, d, True, True), GRD_LAYER_SCHEMA
     )
-
-
-def load_raster_pixels(path: str):
-    """Single-file pixel decode. Uncompressed TIFFs decode
-    dependency-free (decode_tiff_pixels); anything else needs
-    rasterio/h5py, which this container does not ship."""
-    with open(path, "rb") as f:
-        data = f.read()
-    try:
-        return decode_tiff_pixels(data)
-    except NotImplementedError:
-        pass
-    try:
-        import rasterio  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "compressed-raster decode needs rasterio/h5py; this container "
-            "ships neither — uncompressed TIFFs and metadata crawling work "
-            "without them"
-        ) from e
-    with rasterio.open(path) as src:  # pragma: no cover
-        return src.read()
 
 
 def save_metadata_table_as_csv(metadata_df: DataFrame, folder: str) -> None:

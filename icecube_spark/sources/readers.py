@@ -1,9 +1,9 @@
 """Source connectors (SURVEY §2 group H).
 
 Parquet is the primary format (catalog.py); these add CSV, JSON,
-binary-file (raster payloads), and a partitioned parquet sink.
-Everything returns lazy DataFrames; schemas are explicit where
-inference would cost a pass over the data.
+binary-file (raster payloads) and ORC, plus parquet compaction and
+snapshot upserts. Everything returns lazy DataFrames; schemas are
+explicit where inference would cost a pass over the data.
 """
 
 from __future__ import annotations
@@ -46,13 +46,6 @@ def read_binary_files(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def write_partitioned_parquet(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Partitioned sink: downstream scans prune on partition_cols."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def compact_parquet(

@@ -320,3 +320,37 @@ def test_non_ascii_product_name_round_trips(spark, tmp_path):
     rows = netcdf_to_cube(spark, out).df.orderBy("slot_date").collect()
     assert [r.product_file for r in rows] == ["é.h5", "a.h5"]
     assert rows[0].pixels == list(s_i["é.h5"].astype("f8").ravel())
+
+
+def test_export_layer_order_matches_accessors(spark, tmp_path):
+    """Two kept products on one date: the exported product_file order
+    is the cube's one (time, product) layer order, the same list
+    get_all_products and get_index_values return. The longer-named
+    product is the bigger file, so Spark's read order (files by size,
+    descending) lists it first; a sort on the date alone would keep
+    that order."""
+    from icecube_spark.generate_cube import cli
+    from icecube_spark.sources.netcdf3 import read_netcdf3
+
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    names = {
+        "slc_a.h5": ("2021-03-02T08:00:00.000000", 25.0),
+        "slc_b_with_a_longer_name.h5": ("2021-03-02T20:00:00Z", 30.0),
+        "slc_c.h5": ("2021-03-01T08:00:00.000000", 28.0),
+    }
+    _slc_stack(stack, names, extras=False)
+    out = str(tmp_path / "cube.nc")
+    dc = cli(
+        [str(stack), "--config", _config(tmp_path, _KEEP), "--cube-save", out],
+        spark=spark,
+    )
+    _, variables, _ = read_netcdf3(out)
+    exported = [
+        b"".join(row).decode().rstrip("\x00")
+        for row in variables["product_file"][1]
+    ]
+    want = ["slc_c.h5", "slc_a.h5", "slc_b_with_a_longer_name.h5"]
+    assert exported == want
+    assert dc.get_all_products() == want
+    assert dc.get_index_values("product_file") == want

@@ -467,6 +467,44 @@ def test_keyed_primitives_edge_shapes(spark):
     assert got == want
 
 
+def test_distributed_depth_cuts_matches_histogram_cuts(spark):
+    """distributed_depth_cuts must equal the single-partition form it
+    replaces: a cumulative window over the value histogram, cut d being
+    the minimum v whose running count reaches ceil(d*N/bins). Covers a
+    tie-heavy, a near-continuous and a one-value column; with_stats
+    adds the column's min and max to the same row."""
+    import math
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from icecube_spark.operators.pipeline import distributed_depth_cuts
+
+    bins = 10
+    df = spark.range(1000).select(
+        (F.col("id") % 3).alias("ties"),
+        (F.col("id") * 7919 % 100003).alias("cont"),
+        F.lit(5).cast("bigint").alias("one"),
+    ).repartition(16)
+    for col in ("ties", "cont", "one"):
+        hist = df.groupBy(F.col(col).alias("v")).agg(F.count(F.lit(1)).alias("c"))
+        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+        rows = hist.select("v", F.sum("c").over(w).alias("cum")).collect()
+        n = max(r.cum for r in rows)
+        want = sorted(
+            min(r.v for r in rows if r.cum >= math.ceil(d * n / bins))
+            for d in range(1, bins)
+        )
+        got = distributed_depth_cuts(df, col, n_bins=bins).collect()[0]
+        assert list(got.cut_list) == want, col
+        stats = distributed_depth_cuts(
+            df, col, n_bins=bins, with_stats=True
+        ).collect()[0]
+        lo, hi = df.agg(F.min(col), F.max(col)).collect()[0]
+        assert list(stats.cut_list) == want, col
+        assert (stats.vmin, stats.vmax) == (lo, hi), col
+
+
 def test_primitives_partition_count_invariant(spark):
     """The distributed primitives must be bit-identical at ANY range
     count — 8, 32, 64 — and, with num_ranges unset, must derive the
