@@ -63,6 +63,12 @@ def read_labels_json(
     """Parse a reference-schema labels JSON into one row per labeled
     object: (product_file, class, xmin, ymin, xmax, ymax).
 
+    A product whose ``objects`` list is empty (or missing) yields one
+    row with all object columns null (``explode_outer``): that row
+    keeps the product in the labeled set that
+    prune_metadata_rows_for_labels matches on, and build_labels_df
+    drops it again, so the product rebuilds as ``"objects": []``.
+
     Layout auto-detection (overridable via `multiline`): the
     reference writes ONE pretty-printed array document (needs
     multiLine=true, which parses each file as a single document);
@@ -108,10 +114,18 @@ def build_labels_df(flat: DataFrame) -> DataFrame:
     """Inverse of read_labels_json: reassemble the nested reference
     document (one row per product_file) from flat object rows. The
     object list is sorted (class, bbox) so the build is deterministic
-    under any partitioning."""
-    obj = F.struct(
-        F.col("obj_class").alias("class"),
-        F.struct("xmin", "ymin", "xmax", "ymax").alias("bbox"),
+    under any partitioning.
+
+    A row with no class and no bbox field set is the placeholder
+    read_labels_json emits for a product with no objects; it becomes a
+    null object, which collect_list skips, so the product rebuilds as
+    ``"objects": []``. A bbox whose four fields are all null is built
+    as a null bbox, not as an empty struct."""
+    has_bbox = F.coalesce("xmin", "ymin", "xmax", "ymax").isNotNull()
+    bbox = F.when(has_bbox, F.struct("xmin", "ymin", "xmax", "ymax"))
+    obj = F.when(
+        F.col("obj_class").isNotNull() | has_bbox,
+        F.struct(F.col("obj_class").alias("class"), bbox.alias("bbox")),
     )
     return (
         flat.select("product_file", obj.alias("o"))

@@ -1,7 +1,9 @@
-"""Shared fixtures: one SparkSession per test run, DuckDB oracle harness."""
+"""Shared fixtures: one SparkSession per test run, DuckDB oracle harness,
+the vector-labels document."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -18,6 +20,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 import driver_verify  # noqa: E402  (the driver gate's comparator)
 
 SF_DIR = os.environ.get("ICECUBE_TEST_SF_DIR", "/root/testdata/sf0.001")
+REF_LABELS = "/root/reference/tests/resources/labels/dummy_vector_labels.json"
 
 
 @pytest.fixture(scope="session")
@@ -30,6 +33,40 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def labels_json(tmp_path_factory):
+    """Path of a vector-labels document of the reference's
+    create_json_labels.py schema (sources/labels.py docstring).
+
+    The reference's own dummy_vector_labels.json where it is present;
+    otherwise a seeded synthesized document of the same shape, written
+    as the reference writes it: one pretty-printed JSON array. Each
+    product is a bare ``.tif`` basename with at least one object; each
+    object has a ``rand-<n>`` class and an integer bbox with
+    xmax >= xmin and ymax >= ymin."""
+    if os.path.exists(REF_LABELS):
+        return REF_LABELS
+    rng = np.random.default_rng(18)
+    doc = []
+    for p in range(4):
+        objects = []
+        for _ in range(int(rng.integers(1, 5))):
+            xmin, ymin = (int(v) for v in rng.integers(0, 512, 2))
+            w, h = (int(v) for v in rng.integers(0, 64, 2))
+            objects.append({
+                "class": f"rand-{int(rng.integers(0, 3))}",
+                "bbox": {"xmin": xmin, "ymin": ymin,
+                         "xmax": xmin + w, "ymax": ymin + h},
+            })
+        doc.append({
+            "product_file": f"SYNTH_GRD_{p:02d}.tif",
+            "labels": {"objects": objects},
+        })
+    path = tmp_path_factory.mktemp("labels") / "vector_labels.json"
+    path.write_text(json.dumps(doc, indent=4))
+    return str(path)
 
 
 @pytest.fixture(scope="session")

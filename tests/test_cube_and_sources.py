@@ -188,19 +188,17 @@ def test_orc_scan_prunes_and_pushes(spark, sf_dir, tmp_path):
     assert "PushedFilters: [" in plan and "user_id" in plan
 
 
-REF_LABELS = "/root/reference/tests/resources/labels/dummy_vector_labels.json"
-
-
-def test_labels_json_reads_reference_fixture(spark):
+def test_labels_json_reads_reference_fixture(spark, labels_json):
     """A18: the labels source parses the reference's own vector-labels
-    fixture (create_json_labels.py schema) — object counts per product
-    match the raw document."""
+    fixture (create_json_labels.py schema; a synthesized document of
+    that schema where the fixture is absent) — object counts per
+    product match the raw document."""
     import json
 
     from icecube_spark.sources import labels as L
 
-    flat = L.read_labels_json(spark, REF_LABELS).toPandas()
-    raw = json.load(open(REF_LABELS))
+    flat = L.read_labels_json(spark, labels_json).toPandas()
+    raw = json.load(open(labels_json))
     want = {r["product_file"]: len(r["labels"]["objects"]) for r in raw}
     got = flat.groupby("product_file").size().to_dict()
     assert got == want
@@ -208,11 +206,11 @@ def test_labels_json_reads_reference_fixture(spark):
     assert flat["obj_class"].str.startswith("rand-").all()
 
 
-def test_labels_json_round_trip(spark, tmp_path):
+def test_labels_json_round_trip(spark, tmp_path, labels_json):
     """A18: flat -> nested JSON -> flat is lossless."""
     from icecube_spark.sources import labels as L
 
-    flat = L.read_labels_json(spark, REF_LABELS)
+    flat = L.read_labels_json(spark, labels_json)
     out = str(tmp_path / "labels_out")
     L.write_labels_json(flat, out)
     back = L.read_labels_json(spark, out)
@@ -221,7 +219,38 @@ def test_labels_json_round_trip(spark, tmp_path):
     assert a.equals(b)
 
 
-def test_prune_metadata_rows_for_labels(spark):
+def test_labels_json_empty_objects_round_trip(spark, tmp_path):
+    """A18: a labeled product with ``"objects": []`` reads as one
+    null-object row and rebuilds, after a write and a read back, as
+    ``"objects": []``, not as one invented empty object."""
+    import json
+
+    from icecube_spark.sources import labels as L
+
+    doc = [
+        {"product_file": "a.tif", "labels": {"objects": [
+            {"class": "rand-1",
+             "bbox": {"xmin": 1, "ymin": 2, "xmax": 3, "ymax": 4}},
+        ]}},
+        {"product_file": "empty.tif", "labels": {"objects": []}},
+    ]
+    src = tmp_path / "labels.json"
+    src.write_text(json.dumps(doc, indent=4))
+    out = str(tmp_path / "labels_out")
+    L.write_labels_json(L.read_labels_json(spark, str(src)), out)
+    back = L.build_labels_df(L.read_labels_json(spark, out))
+    got = {
+        r.product_file: [o.asDict(recursive=True) for o in r.labels.objects]
+        for r in back.collect()
+    }
+    assert got == {
+        "a.tif": [{"class": "rand-1",
+                   "bbox": {"xmin": 1, "ymin": 2, "xmax": 3, "ymax": 4}}],
+        "empty.tif": [],
+    }
+
+
+def test_prune_metadata_rows_for_labels(spark, labels_json):
     """A18: prune_metadata_rows_for_labels mirrors the reference
     (labels_datacube.py:160) — null-path gap rows stay, labeled rows
     stay (matched on basename vs product_file), everything else is
@@ -230,7 +259,7 @@ def test_prune_metadata_rows_for_labels(spark):
 
     from icecube_spark.sources import labels as L
 
-    raw = json.load(open(REF_LABELS))
+    raw = json.load(open(labels_json))
     labeled_files = [r["product_file"] for r in raw]
     assert len(labeled_files) >= 2
     meta = spark.createDataFrame(
@@ -243,7 +272,7 @@ def test_prune_metadata_rows_for_labels(spark):
         ],
         "product_fpath string, tag string",
     )
-    flat = L.read_labels_json(spark, REF_LABELS)
+    flat = L.read_labels_json(spark, labels_json)
     out = L.prune_metadata_rows_for_labels(meta, flat)
     got = sorted(r.tag for r in out.collect())
     assert got == ["a", "b", "gap1", "gap2"]
