@@ -13,9 +13,10 @@ Product family is sniffed from the directory contents exactly like the
 reference (all .tif/.tiff -> GRD, all .h5 -> SLC, anything mixed is an
 error). The build itself is the distributed create_cube_from_rasters /
 create_cube_from_slc plan, persisted for the call so every action on
-it (dimensions, layer shape, export) reads one decode of each
-product; only the optional .nc export materializes on the driver
-(size-guarded, and an empty cube refused, in sources/netcdf3.py).
+it (the dimensions print, the export's guard aggregate and its one
+collect) reads one decode of each product; only the optional .nc
+export materializes on the driver. Its layer shape, band choice and
+size guard live in sources/netcdf3.py (cube_to_file).
 """
 
 from __future__ import annotations
@@ -76,38 +77,15 @@ def process_args(argv: list[str] | None = None) -> argparse.Namespace:
 @contextmanager
 def _decoded_once(dc):
     """Persist the cube's frame for the block and unpersist it on the
-    way out, raise or not: the dimensions, the layer-shape inference
-    and the export's count guard and ordered collect then all read
-    one decode of the products instead of one each."""
+    way out, raise or not: the dimensions print, the export's one
+    guard aggregate (layer count, largest height and width) and its
+    ordered collect of key, time and band then all read one decode of
+    the products instead of one each."""
     dc.df.persist()
     try:
         yield
     finally:
         dc.df.unpersist()
-
-
-def _save_cube(dc, path: str, height=None, width=None, format="netCDF4") -> str:
-    """Export `dc` as one netCDF file and return the format written.
-    A missing height/width is the largest layer's (None when no layer
-    has a shape, which the export refuses, as it does an empty cube).
-    An SLC cube exports its first band (Real) as the pixels."""
-    from pyspark.sql import functions as F
-
-    from icecube_spark.cube import Datacube
-    from icecube_spark.sources.netcdf3 import cube_to_file
-
-    if height is None or width is None:
-        row = dc.df.agg(
-            F.max("height").alias("h"), F.max("width").alias("w")
-        ).collect()[0]
-        height = row.h if height is None else height
-        width = row.w if width is None else width
-    if "pixels" not in dc.df.columns and dc.band_cols:
-        dc = Datacube(
-            dc.df.withColumn("pixels", F.col(dc.band_cols[0])),
-            dc.key_col, dc.ts_col, dc.band_cols,
-        )
-    return cube_to_file(dc, path, height=height, width=width, format=format)
 
 
 def cli(argv: list[str] | None = None, spark=None) -> "object":
@@ -119,6 +97,7 @@ def cli(argv: list[str] | None = None, spark=None) -> "object":
         create_cube_from_rasters,
         create_cube_from_slc,
     )
+    from icecube_spark.sources.netcdf3 import cube_to_file
 
     args = process_args(argv)
     own_session = spark is None
@@ -160,7 +139,7 @@ def cli(argv: list[str] | None = None, spark=None) -> "object":
                     "Writing icecube to disk. This may take some time,"
                     " please standby ..."
                 )
-                fmt = _save_cube(
+                fmt = cube_to_file(
                     dc, args.cube_save, args.height, args.width, args.format
                 )
                 print(f"Wrote {args.cube_save} ({fmt})")
@@ -221,6 +200,7 @@ def sample_list_workflow(
     (create_cube_from_list) and save it as netCDF. Returns the
     Datacube."""
     from icecube_spark.cube import create_cube_from_list
+    from icecube_spark.sources.netcdf3 import cube_to_file
 
     grd = os.path.join(resource_dir, "grd_stack")
     names = sorted(
@@ -235,7 +215,7 @@ def sample_list_workflow(
     try:
         dc = create_cube_from_list(spark, list_path, None)
         with _decoded_once(dc):
-            _save_cube(dc, save_path)
+            cube_to_file(dc, save_path)
         return dc
     finally:
         if own_session:

@@ -394,8 +394,6 @@ _META_WANT = {
     "number_of_range_samples",
 }
 
-SLC_META_SCHEMA = META_SCHEMA
-
 SLC_PIXELS_SCHEMA = (
     "path string, width int, height int, "
     "s_i array<double>, s_q array<double>"
@@ -444,7 +442,7 @@ def crawl_slc_metadata(binary_df: DataFrame) -> DataFrame:
     raster shape. Same output schema as raster.crawl_iceye_metadata
     so GRD and SLC stacks share the cube-assembly path."""
     return map_products(
-        binary_df, lambda p, d: _slc_row(p, d, True), SLC_META_SCHEMA
+        binary_df, lambda p, d: _slc_row(p, d, True), META_SCHEMA
     )
 
 

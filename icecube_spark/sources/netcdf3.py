@@ -158,7 +158,8 @@ def read_netcdf3(path: str):
     attrs)."""
     import numpy as np
 
-    buf = open(path, "rb").read()
+    with open(path, "rb") as f:
+        buf = f.read()
     if buf[:3] != b"CDF" or buf[3] not in (1, 2):
         raise ValueError("not a classic netCDF-3 file")
     off_fmt = ">i" if buf[3] == 1 else ">q"
@@ -203,20 +204,35 @@ def read_netcdf3(path: str):
 
 
 def _materialize_cube(
-    dc, height: int | None, width: int | None, max_layers: int
+    dc, height: int | None = None, width: int | None = None,
+    max_layers: int = 4096,
 ):
-    """Driver-side materialization shared by every single-file export
-    format (the same single-file step the reference's to_file
-    performs), behind a cheap count() guard: exports above
-    `max_layers` layers (or whose pixel payload would exceed driver
-    memory) must go through the parquet/partitioned sinks instead of
-    silently OOMing the driver. The one place an empty cube (or one
-    with no layer shape) is refused: a netCDF-3 dim of length 0 is
-    the unlimited record dim, so a fixed `band`, `azimuth` or `range`
-    dim cannot be zero-length."""
+    """The driver-side step of every single-file export (the same
+    single-file step the reference's to_file performs), and the one
+    place its decisions live. The band is `pixels` when the cube has
+    that column, else its first band (Real for SLC). One aggregate
+    gives the layer count and the largest layer's height and width,
+    which fill a `height` or `width` left None. Before any pixel
+    leaves the executors it refuses, in this order: an empty cube
+    and one with no layer shape (a netCDF-3 dim of length 0 is the
+    unlimited record dim, so a fixed `band`, `azimuth` or `range`
+    dim cannot be zero-length), then a cube above `max_layers`
+    layers or whose dense pixels exceed min(4 GiB,
+    spark.driver.maxResultSize), which must go through the
+    parquet/partitioned sinks instead of aborting the collect or
+    OOMing the driver. Then one Arrow collect of key, time and band
+    in the cube's layer order (`Datacube.layers`). Returns the
+    (layers, height, width) float64 array, gap layers NaN, with the
+    product names and the dates."""
     import numpy as np
+    from pyspark.sql import functions as F
 
-    n_layers = dc.df.count()
+    band = "pixels" if "pixels" in dc.df.columns else dc.band_cols[0]
+    n_layers, max_h, max_w = dc.df.agg(
+        F.count(F.lit(1)), F.max("height"), F.max("width")
+    ).collect()[0]
+    height = max_h if height is None else height
+    width = max_w if width is None else width
     if n_layers == 0:
         raise ValueError(
             "refusing netCDF export of an empty cube: the config keeps no"
@@ -228,31 +244,43 @@ def _materialize_cube(
             f" layer of the cube carries a shape; pass height and width"
         )
     approx_bytes = n_layers * height * width * 8
-    if n_layers > max_layers or approx_bytes > 4 << 30:
+    limit = dc.df.sparkSession._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g"
+    )
+    budget = min(4 << 30, limit or 4 << 30)  # 0: Spark sets no limit
+    if n_layers > max_layers or approx_bytes > budget:
         raise ValueError(
             f"refusing single-file netCDF export of {n_layers} layers "
-            f"(~{approx_bytes / 2**30:.1f} GiB dense): the format is "
-            f"driver-materialized; raise max_layers explicitly or use "
-            f"the distributed parquet sink for cubes this large"
+            f"(~{approx_bytes / 2**30:.1f} GiB dense; the budget is "
+            f"{budget >> 20} MiB, the lesser of 4 GiB and "
+            f"spark.driver.maxResultSize): the format is "
+            f"driver-materialized; raise max_layers or "
+            f"spark.driver.maxResultSize explicitly or use the "
+            f"distributed parquet sink for cubes this large"
         )
-    rows = dc.layers().collect()
-    band = len(rows)
-    pix = np.full((band, height, width), np.nan)
-    names = []
-    for i, r in enumerate(rows):
-        p = getattr(r, "pixels", None)
-        if p is not None:
-            pix[i] = np.asarray(p, dtype="f8").reshape(height, width)
-        names.append(getattr(r, dc.key_col) or "None")
-    dates = [str(getattr(r, dc.ts_col)) for r in rows]
+    table = dc.layers().select(dc.key_col, dc.ts_col, band).toArrow()
+    col = table.column(band).combine_chunks()
+    has = col.is_valid().to_numpy(zero_copy_only=False)
+    sizes = col.value_lengths().fill_null(height * width).to_numpy()
+    bad = sizes[sizes != height * width]
+    if bad.size:
+        raise ValueError(
+            f"cannot export a layer of {bad[0]} pixels as {height}x{width}"
+        )
+    pix = np.full((len(has), height, width), np.nan)
+    pix[has] = col.flatten().to_numpy(zero_copy_only=False).reshape(
+        -1, height, width
+    )
+    names = [k or "None" for k in table.column(dc.key_col).to_pylist()]
+    dates = [str(t) for t in table.column(dc.ts_col).to_pylist()]
     return pix, names, dates
 
 
 def cube_to_netcdf(
     dc,
     path: str,
-    height: int,
-    width: int,
+    height: int | None = None,
+    width: int | None = None,
     max_layers: int = 4096,
     version: int = 1,
 ) -> None:
@@ -261,21 +289,19 @@ def cube_to_netcdf(
     file the reference's read_cube/xarray can open: intensity
     (band, azimuth, range) + per-band product/date coordinate vars —
     the to_file parity surface (datacube.py:203). `version` 2 writes
-    the CDF-2 (64-bit-offset) variant, i.e. NETCDF3_64BIT."""
+    the CDF-2 (64-bit-offset) variant, i.e. NETCDF3_64BIT. A None
+    height or width is the largest layer's (`_materialize_cube`)."""
     import numpy as np
 
     pix, names, date_strs = _materialize_cube(dc, height, width, max_layers)
-    band = len(names)
-    encoded = [n.encode() for n in names]
-    name_len = max(1, max(map(len, encoded)))
-    name_arr = np.zeros((band, name_len), dtype="S1")
-    for i, b in enumerate(encoded):
-        name_arr[i, : len(b)] = np.frombuffer(b, dtype="S1")
+    band, height, width = pix.shape
+    # byte strings padded with NULs to the longest UTF-8 name
+    name_arr = np.array([n.encode() for n in names]).view("S1").reshape(band, -1)
     dates = np.array(date_strs, dtype="S10").view("S1").reshape(band, 10)
     write_netcdf3(
         path,
-        dims={"band": band, "azimuth": height, "range": width, "strlen": name_len,
-              "datelen": 10},
+        dims={"band": band, "azimuth": height, "range": width,
+              "strlen": name_arr.shape[1], "datelen": 10},
         variables={
             "intensity": (("band", "azimuth", "range"), pix,
                           {"long_name": "Intensity"}),
@@ -376,8 +402,8 @@ def netcdf_to_cube(spark, path: str):
 def cube_to_file(
     dc,
     path: str,
-    height: int,
-    width: int,
+    height: int | None = None,
+    width: int | None = None,
     format: str = "netCDF4",
     max_layers: int = 4096,
 ) -> str:
@@ -391,32 +417,28 @@ def cube_to_file(
     dependency-free classic netCDF-3 bridge (same variables and
     coordinates — any netCDF reader, including xarray, opens that
     too). NETCDF3_64BIT always writes a true CDF-2 (64-bit-offset)
-    file via the bridge — no library needed. Returns the format
-    actually written so callers can tell.
+    file via the bridge — no library needed. A None height or width
+    is the largest layer's. Returns the format actually written so
+    callers can tell.
     """
     fmt = format.upper().replace("-", "")
     if fmt not in {"NETCDF4", "NETCDF4_CLASSIC", "NETCDF3_64BIT", "NETCDF3_CLASSIC"}:
         raise ValueError(f"unknown netCDF format {format!r}")
-    if fmt == "NETCDF3_CLASSIC":
-        cube_to_netcdf(dc, path, height, width, max_layers=max_layers)
-        return "NETCDF3_CLASSIC"
-    if fmt == "NETCDF3_64BIT":
-        cube_to_netcdf(
-            dc, path, height, width, max_layers=max_layers, version=2
-        )
-        return "NETCDF3_64BIT"
-    try:
-        import netCDF4  # noqa: F401
-    except ImportError:
-        cube_to_netcdf(dc, path, height, width, max_layers=max_layers)
-        return "NETCDF3_CLASSIC"
+    if fmt.startswith("NETCDF4"):
+        try:
+            import netCDF4
+        except ImportError:
+            fmt = "NETCDF3_CLASSIC"
+    if fmt.startswith("NETCDF3"):
+        version = 2 if fmt == "NETCDF3_64BIT" else 1
+        cube_to_netcdf(dc, path, height, width, max_layers, version)
+        return fmt
 
     pix, names, dates = _materialize_cube(dc, height, width, max_layers)
     ds = netCDF4.Dataset(path, "w", format=fmt)
     try:
-        ds.createDimension("band", len(names))
-        ds.createDimension("azimuth", height)
-        ds.createDimension("range", width)
+        for dim, n in zip(("band", "azimuth", "range"), pix.shape):
+            ds.createDimension(dim, n)
         v = ds.createVariable("intensity", "f8", ("band", "azimuth", "range"))
         v.long_name = "Intensity"
         v[:] = pix

@@ -211,8 +211,6 @@ def crawl_raster_metadata(binary_df: DataFrame) -> DataFrame:
     )
 
 
-ICEYE_META_SCHEMA = META_SCHEMA
-
 RASTER_PIXELS_SCHEMA = (
     "path string, width int, height int, dtype string, pixels array<double>"
 )
@@ -253,7 +251,7 @@ def crawl_iceye_metadata(binary_df: DataFrame) -> DataFrame:
     raster shape (header fallback when metadata lacks the sample
     counts). Arrow-batched map; payload bytes never shuffle."""
     return map_products(
-        binary_df, lambda p, d: _grd_row(p, d, True, False), ICEYE_META_SCHEMA
+        binary_df, lambda p, d: _grd_row(p, d, True, False), META_SCHEMA
     )
 
 

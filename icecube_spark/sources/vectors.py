@@ -59,7 +59,8 @@ def load_kml(source) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     elif isinstance(source, str) and source.lstrip().startswith("<"):
         text = source
     else:
-        text = open(source, encoding="utf-8").read()
+        with open(source, encoding="utf-8") as f:
+            text = f.read()
     coords = _find_coordinates(ET.fromstring(text))
     if coords is None:
         raise ValueError("KML has no Polygon outerBoundaryIs coordinates")
@@ -121,7 +122,11 @@ def load_dem(source) -> dict:
     contract)."""
     from icecube_spark.sources.raster import _read_ifd, decode_tiff_pixels
 
-    data = source if isinstance(source, bytes) else open(source, "rb").read()
+    if isinstance(source, bytes):
+        data = source
+    else:
+        with open(source, "rb") as f:
+            data = f.read()
     arr = decode_tiff_pixels(data)
     if arr is None:
         raise ValueError("not a TIFF DEM")

@@ -304,6 +304,97 @@ def test_cube_to_netcdf_refuses_empty_cube(spark, tmp_path):
         cube_to_netcdf(dc, str(tmp_path / "empty.nc"), 4, 5)
 
 
+def _export_collects(spark, monkeypatch):
+    """Record the columns of every frame the export collects."""
+    DataFrame = type(spark.range(0))
+    shipped, to_arrow = [], DataFrame.toArrow
+
+    def recording(self):
+        shipped.append(self.columns)
+        return to_arrow(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", recording)
+    return shipped
+
+
+@pytest.mark.parametrize(
+    "height, width, max_layers",
+    # 2 layers of 8192x8200 float64 are 1.001 GiB dense: under the 4 GiB
+    # cap, over the session's default 1 GiB spark.driver.maxResultSize
+    [(None, None, 1), (8192, 8200, 4096)],
+    ids=["max_layers", "max_result_size"],
+)
+def test_export_guard_refuses_before_collect(
+    spark, tmp_path, monkeypatch, height, width, max_layers
+):
+    """A cube over the layer budget, or whose dense pixels pass
+    spark.driver.maxResultSize, is refused before any pixel is
+    collected: no file, and the CLI's persisted decode is released."""
+    from icecube_spark.generate_cube import _decoded_once
+    from icecube_spark.sources.netcdf3 import cube_to_file
+
+    _slc_stack(tmp_path)
+    dc = create_cube_from_slc(spark, str(tmp_path), CubeConfig.from_dict(_KEEP))
+    shipped = _export_collects(spark, monkeypatch)
+    out = tmp_path / "x.nc"
+    before = _persistent(spark)
+    with pytest.raises(ValueError, match="refusing single-file"):
+        with _decoded_once(dc):
+            cube_to_file(dc, str(out), height, width, max_layers=max_layers)
+    assert shipped == []
+    assert _persistent(spark) == before
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("case", ["grid", "netcdf3_64bit", "labels"])
+def test_cli_export_round_trip(spark, tmp_path, monkeypatch, case):
+    """The CLI's export inputs beyond the plain stack: a gridded cube,
+    whose gap slots reopen as null pixels and product; the CDF-2
+    format; and a labels join, whose column the export never ships.
+    Every export collects only key, time and band (Real)."""
+    import json
+
+    from icecube_spark.generate_cube import cli
+    from icecube_spark.sources.netcdf3 import netcdf_to_cube
+
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    s_i = _slc_stack(stack, extras=False)
+    cfg = {**_KEEP, "temporal_resolution": 1} if case == "grid" else _KEEP
+    out = str(tmp_path / "cube.nc")
+    argv = [str(stack), "--config", _config(tmp_path, cfg), "--cube-save", out]
+    if case == "netcdf3_64bit":
+        argv += ["--format", "NETCDF3_64BIT"]
+    if case == "labels":
+        labels = tmp_path / "labels.json"
+        labels.write_text(json.dumps([
+            {"product_file": name, "labels": {"objects": [
+                {"class": "ship",
+                 "bbox": {"xmin": 0, "ymin": 1, "xmax": 2, "ymax": 3}}]}}
+            for name in ("slc_a.h5", "slc_b.h5")
+        ]))
+        argv += ["--labels-fpath", str(labels)]
+    shipped = _export_collects(spark, monkeypatch)
+    dc = cli(argv, spark=spark)
+    assert shipped == [["product_file", dc.ts_col, "Real"]]
+    assert ("labels" in dc.df.columns) == (case == "labels")
+    if case == "netcdf3_64bit":
+        with open(out, "rb") as f:
+            assert f.read(4) == b"CDF\x02"
+    rows = netcdf_to_cube(spark, out).df.orderBy("slot_date").collect()
+    kept = [(r.product_file, r.pixels) for r in rows if r.pixels is not None]
+    assert kept == [
+        (name, list(s_i[name].astype("f8").ravel()))
+        for name in ("slc_a.h5", "slc_b.h5")
+    ]
+    if case == "grid":
+        assert [str(r.slot_date) for r in rows[:3]] == [
+            "2021-03-01", "2021-03-02", "2021-03-03"
+        ]
+        assert len(rows) == 31
+        assert all(r.product_file is None for r in rows[2:])
+
+
 def test_non_ascii_product_name_round_trips(spark, tmp_path):
     """strlen is sized in encoded bytes: a product name whose UTF-8
     form is longer than its characters exports and reopens intact."""
