@@ -90,14 +90,22 @@ class Datacube:
             )
         return arr.reshape(height, width)
 
-    def layers(self) -> DataFrame:
-        """The layers in the cube's ONE layer order: time, then product
-        name, so two products on one date keep a fixed order. The
-        product accessors, get_index_values and the netCDF export all
-        read it, so tied timestamps can never make them disagree (the
+    @property
+    def layer_order(self) -> tuple[str, str]:
+        """The sort keys of the cube's ONE layer order: time, then
+        product name, so two products on one date keep a fixed order;
+        both ascending with nulls first (Spark's ascending default),
+        names compared as UTF-8 bytes. ``layers`` sorts by them in
+        Spark and the netCDF export sorts its collect by them on the
+        driver, so tied timestamps can never make the product
+        accessors, get_index_values and the export disagree (the
         reference indexes one stored attrs list and cannot diverge
         either)."""
-        return self.df.orderBy(self.ts_col, self.key_col)
+        return (self.ts_col, self.key_col)
+
+    def layers(self) -> DataFrame:
+        """The layers in the cube's layer order (``layer_order``)."""
+        return self.df.orderBy(*self.layer_order)
 
     def _product_list(self) -> list:
         """Product names in layer order (``layers``)."""
@@ -202,7 +210,7 @@ class Datacube:
         rows = (
             self.df.groupBy(self.key_col, self.ts_col)
             .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(self.ts_col, self.key_col)
+            .orderBy(*self.layer_order)
             .collect()
         )
         pad, lane_h = 36, 0

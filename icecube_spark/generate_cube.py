@@ -12,10 +12,14 @@ Usage::
 Product family is sniffed from the directory contents exactly like the
 reference (all .tif/.tiff -> GRD, all .h5 -> SLC, anything mixed is an
 error). The build itself is the distributed create_cube_from_rasters /
-create_cube_from_slc plan, persisted for the call so every action on
-it (the dimensions print, the export's guard aggregate and its one
-collect) reads one decode of each product; only the optional .nc
-export materializes on the driver. Its layer shape, band choice and
+create_cube_from_slc plan, persisted for the call. Two collects read
+that one decode of each product, and on a stack with no grid or
+labels join they are the call's only Spark jobs: one metadata collect
+(key, time, height and width per layer) that gives the printed
+dimensions and the export's layer shape and size guard, and, with
+--cube-save, one unordered collect of key, time and band that the
+driver sorts into layer order. Only the optional .nc export
+materializes pixels on the driver. Its layer shape, band choice and
 size guard live in sources/netcdf3.py (cube_to_file).
 """
 
@@ -77,10 +81,10 @@ def process_args(argv: list[str] | None = None) -> argparse.Namespace:
 @contextmanager
 def _decoded_once(dc):
     """Persist the cube's frame for the block and unpersist it on the
-    way out, raise or not: the dimensions print, the export's one
-    guard aggregate (layer count, largest height and width) and its
-    ordered collect of key, time and band then all read one decode of
-    the products instead of one each."""
+    way out, raise or not: the metadata collect (dimensions, layer
+    count, largest height and width) and the export's pixel collect
+    of key, time and band then read one decode of the products
+    instead of one each."""
     dc.df.persist()
     try:
         yield
@@ -97,7 +101,7 @@ def cli(argv: list[str] | None = None, spark=None) -> "object":
         create_cube_from_rasters,
         create_cube_from_slc,
     )
-    from icecube_spark.sources.netcdf3 import cube_to_file
+    from icecube_spark.sources.netcdf3 import cube_to_file, summarize_layers
 
     args = process_args(argv)
     own_session = spark is None
@@ -133,14 +137,16 @@ def cli(argv: list[str] | None = None, spark=None) -> "object":
             )
 
         with _decoded_once(dc):
-            print(f"Generated cube dimensions are: {dc.get_dimensions()}")
+            summary = summarize_layers(dc)
+            print(f"Generated cube dimensions are: {summary.dims}")
             if args.cube_save is not None:
                 print(
                     "Writing icecube to disk. This may take some time,"
                     " please standby ..."
                 )
                 fmt = cube_to_file(
-                    dc, args.cube_save, args.height, args.width, args.format
+                    dc, args.cube_save, args.height, args.width, args.format,
+                    summary=summary,
                 )
                 print(f"Wrote {args.cube_save} ({fmt})")
         return dc

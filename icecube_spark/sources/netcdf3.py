@@ -18,6 +18,7 @@ interchange with reference-produced cubes; partitioned parquet
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 NC_BYTE, NC_CHAR, NC_SHORT, NC_INT, NC_FLOAT, NC_DOUBLE = 1, 2, 3, 4, 5, 6
 _NC_DIMENSION, _NC_VARIABLE, _NC_ATTRIBUTE = 0x0A, 0x0B, 0x0C
@@ -28,6 +29,9 @@ _DTYPES = {
 }
 _NP_TO_NC = {"i1": NC_BYTE, "i2": NC_SHORT, "i4": NC_INT,
              "f4": NC_FLOAT, "f8": NC_DOUBLE}
+
+
+_WRITE_SLICE = 1 << 17  # values converted per write: 1 MiB of doubles
 
 
 def _pad(b: bytes) -> bytes:
@@ -72,7 +76,10 @@ def write_netcdf3(
     """Write a classic netCDF-3 file. `variables` maps name ->
     (dim_names, numpy array, attrs). No record (unlimited) dims —
     cubes are fixed-shape. `version` 1 = CDF-1 (classic), 2 = CDF-2
-    (64-bit data offsets, the NETCDF3_64BIT on-disk format)."""
+    (64-bit data offsets, the NETCDF3_64BIT on-disk format). The
+    header goes to the file first, then each variable's data,
+    converted to big-endian a slice at a time, so the write never
+    holds a second copy of a cube."""
     import numpy as np
 
     if version not in (1, 2):
@@ -86,40 +93,43 @@ def write_netcdf3(
     )
     header += _attr_list(global_attrs or {})
 
-    # lay out variables: compute each var's vsize and byte offset
-    entries = []
+    # lay out variables: each var's data, type and unpadded byte size
+    entries, var_headers = [], []
     for vname, (vdims, arr, attrs) in variables.items():
         arr = np.asarray(arr)
         if arr.dtype.kind in ("U", "S"):
             nct = NC_CHAR
-            arr = np.char.encode(arr.astype("U"), "utf-8") if arr.dtype.kind == "U" else arr
-            data = arr.tobytes()
+            if arr.dtype.kind == "U":
+                arr = np.char.encode(arr.astype("U"), "utf-8")
+            nbytes = arr.nbytes
         else:
             nct = _NP_TO_NC.get(arr.dtype.str[1:]) or (
                 NC_DOUBLE if arr.dtype.kind == "f" else NC_INT
             )
-            data = arr.astype(_DTYPES[nct][0]).tobytes()
-        entries.append((vname, vdims, attrs, nct, _pad(data)))
-
-    var_headers = []
-    for vname, vdims, attrs, nct, data in entries:
+            nbytes = arr.size * _DTYPES[nct][1]
+        entries.append((arr, nct, nbytes))
         vh = _name(vname) + struct.pack(">i", len(vdims))
         vh += b"".join(struct.pack(">i", dim_ids[d]) for d in vdims)
         vh += _attr_list(attrs or {})
-        vh += struct.pack(">ii", nct, len(data))
+        vh += struct.pack(">ii", nct, nbytes + -nbytes % 4)
         var_headers.append(vh)
 
     # var_list tag (8 bytes) + each var header + its begin offset
-    base = len(header) + 8 + sum(len(vh) + off_size for vh in var_headers)
-    out = header + struct.pack(">ii", _NC_VARIABLE if entries else 0, len(entries))
-    offset = base
-    blobs = []
-    for (vname, vdims, attrs, nct, data), vh in zip(entries, var_headers):
-        out += vh + struct.pack(off_fmt, offset)
-        blobs.append(data)
-        offset += len(data)
+    offset = len(header) + 8 + sum(len(vh) + off_size for vh in var_headers)
+    header += struct.pack(">ii", _NC_VARIABLE if entries else 0, len(entries))
+    for (_, _, nbytes), vh in zip(entries, var_headers):
+        header += vh + struct.pack(off_fmt, offset)
+        offset += nbytes + -nbytes % 4
     with open(path, "wb") as f:
-        f.write(out + b"".join(blobs))
+        f.write(header)
+        for arr, nct, nbytes in entries:
+            if nct == NC_CHAR:
+                f.write(arr.tobytes())
+            else:
+                flat = arr.reshape(-1)
+                for i in range(0, flat.size, _WRITE_SLICE):
+                    f.write(flat[i : i + _WRITE_SLICE].astype(_DTYPES[nct][0]))
+            f.write(b"\x00" * (-nbytes % 4))
 
 
 def _read_name(buf: bytes, pos: int) -> tuple[str, int]:
@@ -203,36 +213,56 @@ def read_netcdf3(path: str):
     return dict(dims), variables, gattrs
 
 
+class LayerSummary(NamedTuple):
+    """What one metadata collect tells about a cube: the sizes the
+    CLI prints (distinct non-null product names and times, as
+    ``Datacube.get_dimensions`` counts them), the layer count, and
+    the largest layer height and width (None when no layer has one)."""
+
+    dims: dict
+    n_layers: int
+    height: int | None
+    width: int | None
+
+
+def summarize_layers(dc) -> LayerSummary:
+    """The metadata step of an export, and the CLI's dimensions: one
+    collect of key, time, height and width, one row per layer and no
+    pixel."""
+    rows = dc.df.select(dc.key_col, dc.ts_col, "height", "width").collect()
+    keys, times, heights, widths = zip(*rows) if rows else ((),) * 4
+    return LayerSummary(
+        {dc.key_col: len(set(keys) - {None}), dc.ts_col: len(set(times) - {None})},
+        len(rows),
+        max((h for h in heights if h is not None), default=None),
+        max((w for w in widths if w is not None), default=None),
+    )
+
+
 def _materialize_cube(
     dc, height: int | None = None, width: int | None = None,
-    max_layers: int = 4096,
+    max_layers: int = 4096, summary: LayerSummary | None = None,
 ):
     """The driver-side step of every single-file export (the same
     single-file step the reference's to_file performs), and the one
-    place its decisions live. The band is `pixels` when the cube has
-    that column, else its first band (Real for SLC). One aggregate
-    gives the layer count and the largest layer's height and width,
-    which fill a `height` or `width` left None. Before any pixel
-    leaves the executors it refuses, in this order: an empty cube
-    and one with no layer shape (a netCDF-3 dim of length 0 is the
-    unlimited record dim, so a fixed `band`, `azimuth` or `range`
-    dim cannot be zero-length), then a cube above `max_layers`
-    layers or whose dense pixels exceed min(4 GiB,
-    spark.driver.maxResultSize), which must go through the
-    parquet/partitioned sinks instead of aborting the collect or
-    OOMing the driver. Then one Arrow collect of key, time and band
-    in the cube's layer order (`Datacube.layers`). Returns the
-    (layers, height, width) float64 array, gap layers NaN, with the
-    product names and the dates."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    band = "pixels" if "pixels" in dc.df.columns else dc.band_cols[0]
-    n_layers, max_h, max_w = dc.df.agg(
-        F.count(F.lit(1)), F.max("height"), F.max("width")
-    ).collect()[0]
-    height = max_h if height is None else height
-    width = max_w if width is None else width
+    place its decisions live. The metadata step is `summary`, or one
+    `summarize_layers` collect: its largest layer height and width
+    fill a `height` or `width` left None. Before any pixel leaves the
+    executors it refuses, in this order: an empty cube and one with
+    no layer shape (a netCDF-3 dim of length 0 is the unlimited
+    record dim, so a fixed `band`, `azimuth` or `range` dim cannot be
+    zero-length), then a cube above `max_layers` layers or whose
+    dense pixels exceed min(4 GiB, spark.driver.maxResultSize), which
+    must go through the parquet/partitioned sinks instead of aborting
+    the collect or OOMing the driver. Then the pixel step
+    (`_collect_layers`) ships the band: `pixels` when the cube has
+    that column, else its first band (Real for SLC). Returns the
+    (layers, height, width) float64 array in the cube's layer order,
+    gap layers NaN, with the product names and the dates."""
+    summary = summary or summarize_layers(dc)
+    n_layers = summary.n_layers
+    height = summary.height if height is None else height
+    width = summary.width if width is None else width
     if n_layers == 0:
         raise ValueError(
             "refusing netCDF export of an empty cube: the config keeps no"
@@ -258,21 +288,45 @@ def _materialize_cube(
             f"spark.driver.maxResultSize explicitly or use the "
             f"distributed parquet sink for cubes this large"
         )
-    table = dc.layers().select(dc.key_col, dc.ts_col, band).toArrow()
-    col = table.column(band).combine_chunks()
-    has = col.is_valid().to_numpy(zero_copy_only=False)
-    sizes = col.value_lengths().fill_null(height * width).to_numpy()
-    bad = sizes[sizes != height * width]
-    if bad.size:
-        raise ValueError(
-            f"cannot export a layer of {bad[0]} pixels as {height}x{width}"
-        )
-    pix = np.full((len(has), height, width), np.nan)
-    pix[has] = col.flatten().to_numpy(zero_copy_only=False).reshape(
-        -1, height, width
-    )
-    names = [k or "None" for k in table.column(dc.key_col).to_pylist()]
-    dates = [str(t) for t in table.column(dc.ts_col).to_pylist()]
+    band = "pixels" if "pixels" in dc.df.columns else dc.band_cols[0]
+    return _collect_layers(dc, band, height, width)
+
+
+def _collect_layers(dc, band: str, height: int, width: int):
+    """The pixel step: one unordered Arrow collect of key, time and
+    `band`, placed on the driver in the cube's layer order
+    (``Datacube.layer_order``). The rows are sorted by index only,
+    and each Arrow batch's pixels are scattered straight into their
+    slots of the dense array, so the pixel list column is never
+    copied by a sort or a concat."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    table = dc.df.select(dc.key_col, dc.ts_col, band).toArrow()
+    perm = pc.sort_indices(
+        table,
+        sort_keys=[(c, "ascending") for c in dc.layer_order],
+        null_placement="at_start",
+    ).to_numpy()
+    slot = np.empty_like(perm)
+    slot[perm] = np.arange(len(perm))
+    pix = np.full((len(perm), height, width), np.nan)
+    start = 0
+    for chunk in table.column(band).chunks:
+        rows, start = slot[start : start + len(chunk)], start + len(chunk)
+        has = chunk.is_valid().to_numpy(zero_copy_only=False)
+        sizes = chunk.value_lengths().fill_null(height * width).to_numpy()
+        bad = sizes[sizes != height * width]
+        if bad.size:
+            raise ValueError(
+                f"cannot export a layer of {bad[0]} pixels as {height}x{width}"
+            )
+        pix[rows[has]] = chunk.flatten().to_numpy(
+            zero_copy_only=False
+        ).reshape(-1, height, width)
+    ordered = table.select([dc.key_col, dc.ts_col]).take(perm)
+    names = [k or "None" for k in ordered.column(0).to_pylist()]
+    dates = [str(t) for t in ordered.column(1).to_pylist()]
     return pix, names, dates
 
 
@@ -283,6 +337,7 @@ def cube_to_netcdf(
     width: int | None = None,
     max_layers: int = 4096,
     version: int = 1,
+    summary: LayerSummary | None = None,
 ) -> None:
     """Export a raster Datacube (one pixels-array layer per time
     slot, cube.create_cube_from_rasters shape) to a classic netCDF-3
@@ -293,7 +348,9 @@ def cube_to_netcdf(
     height or width is the largest layer's (`_materialize_cube`)."""
     import numpy as np
 
-    pix, names, date_strs = _materialize_cube(dc, height, width, max_layers)
+    pix, names, date_strs = _materialize_cube(
+        dc, height, width, max_layers, summary
+    )
     band, height, width = pix.shape
     # byte strings padded with NULs to the longest UTF-8 name
     name_arr = np.array([n.encode() for n in names]).view("S1").reshape(band, -1)
@@ -406,6 +463,7 @@ def cube_to_file(
     width: int | None = None,
     format: str = "netCDF4",
     max_layers: int = 4096,
+    summary: LayerSummary | None = None,
 ) -> str:
     """Reference `Datacube.to_file(output_fpath, format="netCDF4")`
     parity (icecube/bin/datacube.py:203): format one of
@@ -418,8 +476,10 @@ def cube_to_file(
     coordinates — any netCDF reader, including xarray, opens that
     too). NETCDF3_64BIT always writes a true CDF-2 (64-bit-offset)
     file via the bridge — no library needed. A None height or width
-    is the largest layer's. Returns the format actually written so
-    callers can tell.
+    is the largest layer's. Pass the cube's `summarize_layers` as
+    `summary` when the caller already holds it, and the export runs
+    one Spark job, its pixel collect. Returns the format actually
+    written so callers can tell.
     """
     fmt = format.upper().replace("-", "")
     if fmt not in {"NETCDF4", "NETCDF4_CLASSIC", "NETCDF3_64BIT", "NETCDF3_CLASSIC"}:
@@ -431,10 +491,10 @@ def cube_to_file(
             fmt = "NETCDF3_CLASSIC"
     if fmt.startswith("NETCDF3"):
         version = 2 if fmt == "NETCDF3_64BIT" else 1
-        cube_to_netcdf(dc, path, height, width, max_layers, version)
+        cube_to_netcdf(dc, path, height, width, max_layers, version, summary)
         return fmt
 
-    pix, names, dates = _materialize_cube(dc, height, width, max_layers)
+    pix, names, dates = _materialize_cube(dc, height, width, max_layers, summary)
     ds = netCDF4.Dataset(path, "w", format=fmt)
     try:
         for dim, n in zip(("band", "azimuth", "range"), pix.shape):

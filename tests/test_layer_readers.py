@@ -1,7 +1,7 @@
 """One parse per product: the fused GRD/SLC layer readers against the
 crawl ⨝ decode they replace, the cube plan shape, and the
-generate_cube CLI's single-decode export — all on stacks synthesized
-in the test, no reference fixtures needed."""
+generate_cube CLI's single-decode export and its netCDF writer — all
+on stacks synthesized in the test, no reference fixtures needed."""
 
 import struct
 
@@ -445,3 +445,183 @@ def test_export_layer_order_matches_accessors(spark, tmp_path):
     assert exported == want
     assert dc.get_all_products() == want
     assert dc.get_index_values("product_file") == want
+
+
+@pytest.mark.parametrize("save, jobs", [(True, 2), (False, 1)],
+                         ids=["cube_save", "dimensions_only"])
+def test_cli_job_count(spark, tmp_path, save, jobs):
+    """One CLI call runs one metadata collect over the persisted cube
+    (the printed dimensions, the layer shape and the export guard)
+    and, with --cube-save, one unordered pixel collect: 2 Spark jobs,
+    1 without an export. Counted in the call's job group, so the
+    count does not depend on the host."""
+    from icecube_spark.generate_cube import cli
+
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    _slc_stack(stack)
+    argv = [str(stack), "--config", _config(tmp_path, _KEEP)]
+    if save:
+        argv += ["--cube-save", str(tmp_path / "cube.nc")]
+    sc = spark.sparkContext
+    group = f"cli-job-count-{save}"
+    sc.setJobGroup(group, group)
+    try:
+        cli(argv, spark=spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    assert (tmp_path / "cube.nc").exists() == save
+
+
+def test_export_layer_order_at_corner_cases(spark, tmp_path):
+    """The export sorts its unordered collect on the driver; that sort
+    must agree with Spark's orderBy. A 1-day grid has gap slots with a
+    null product_file, and three kept products share a date. Their
+    names order differently as UTF-8 bytes (Spark's string order) and
+    as UTF-16 units: U+FF5E comes before U+1F600 only in the first.
+    The exported product and date order is the one Datacube.layers()
+    and get_index_values give."""
+    from icecube_spark.generate_cube import cli
+    from icecube_spark.sources.netcdf3 import read_netcdf3
+
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    names = {
+        "slc_\U0001F600.h5": ("2021-03-02T09:00:00Z", 28.0),
+        "slc_z.h5": ("2021-03-02T08:00:00.000000", 25.0),
+        "slc_～.h5": ("2021-03-02T20:00:00Z", 30.0),
+        "slc_a.h5": ("2021-03-01T08:00:00.000000", 28.0),
+    }
+    _slc_stack(stack, names, extras=False)
+    out = str(tmp_path / "cube.nc")
+    dc = cli(
+        [str(stack), "--config",
+         _config(tmp_path, {**_KEEP, "temporal_resolution": 1}),
+         "--cube-save", out],
+        spark=spark,
+    )
+    _, variables, _ = read_netcdf3(out)
+    exported = [
+        (b"".join(n).decode().rstrip("\x00"), b"".join(d).decode())
+        for n, d in zip(
+            variables["product_file"][1], variables["acquisition_date"][1]
+        )
+    ]
+    in_spark = [
+        (k or "None", str(t))
+        for k, t in dc.layers().select(dc.key_col, dc.ts_col).collect()
+    ]
+    by_index = [
+        (k or "None", str(t))
+        for k, t in zip(
+            dc.get_index_values(dc.key_col), dc.get_index_values(dc.ts_col)
+        )
+    ]
+    assert exported == in_spark == by_index
+    assert exported[:4] == [
+        ("slc_a.h5", "2021-03-01"), ("slc_z.h5", "2021-03-02"),
+        ("slc_～.h5", "2021-03-02"), ("slc_\U0001F600.h5", "2021-03-02"),
+    ]
+    assert len(exported) == 33
+    assert all(n == "None" for n, _ in exported[4:])
+
+
+def test_netcdf4_writer_branch(spark, tmp_path, monkeypatch):
+    """With a netCDF4 library importable, cube_to_file writes through
+    its Dataset API. A stub module records what it is handed: the
+    same pixels, product names and dates the CDF-1 export holds."""
+    import sys
+    import types
+
+    from icecube_spark.sources.netcdf3 import cube_to_file, read_netcdf3
+
+    class Variable:
+        def __init__(self, dtype, dims):
+            self.dtype, self.dims, self.items = dtype, dims, {}
+
+        def __setitem__(self, index, value):
+            self.items[index if isinstance(index, int) else "all"] = value
+
+    class Dataset:
+        opened = []
+
+        def __init__(self, path, mode, format):
+            self.path, self.mode, self.format = path, mode, format
+            self.dims, self.vars, self.closed = {}, {}, False
+            Dataset.opened.append(self)
+
+        def createDimension(self, name, size):
+            self.dims[name] = size
+
+        def createVariable(self, name, dtype, dims):
+            self.vars[name] = Variable(dtype, dims)
+            return self.vars[name]
+
+        def close(self):
+            self.closed = True
+
+    monkeypatch.setitem(
+        sys.modules, "netCDF4", types.SimpleNamespace(Dataset=Dataset)
+    )
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    _slc_stack(stack, extras=False)
+    dc = create_cube_from_slc(
+        spark, str(stack),
+        CubeConfig.from_dict({**_KEEP, "temporal_resolution": 1}),
+    )
+    p4, p3 = str(tmp_path / "cube4.nc"), str(tmp_path / "cube3.nc")
+    assert cube_to_file(dc, p4, format="NETCDF4") == "NETCDF4"
+    assert cube_to_file(dc, p3, format="NETCDF3_CLASSIC") == "NETCDF3_CLASSIC"
+    (ds,) = Dataset.opened
+    assert (ds.path, ds.mode, ds.format, ds.closed) == (p4, "w", "NETCDF4", True)
+    assert (ds.source, ds.Conventions) == ("icecube_spark", "CF-1.6")
+    dims, variables, _ = read_netcdf3(p3)
+    assert ds.dims == {k: dims[k] for k in ("band", "azimuth", "range")}
+    assert sorted(ds.vars) == ["acquisition_date", "intensity", "product_file"]
+    v = ds.vars["intensity"]
+    assert (v.dtype, v.dims, v.long_name) == (
+        "f8", ("band", "azimuth", "range"), "Intensity"
+    )
+    np.testing.assert_array_equal(v.items["all"], variables["intensity"][1])
+    for name in ("product_file", "acquisition_date"):
+        var = ds.vars[name]
+        assert (var.dtype, var.dims) == (str, ("band",))
+        assert [var.items[i] for i in range(dims["band"])] == [
+            b"".join(row).decode().rstrip("\x00")
+            for row in variables[name][1]
+        ]
+
+
+def test_write_netcdf3_streams_to_file(tmp_path):
+    """The writer sends the header and then each variable to the file
+    a slice at a time: writing a 32 MiB (16, 512, 512) float64 cube
+    allocates at most about 1.1x its bytes (building the whole file
+    in memory took 3x), and the cube reads back exactly."""
+    import tracemalloc
+
+    from icecube_spark.sources.netcdf3 import read_netcdf3, write_netcdf3
+
+    p = str(tmp_path / "big.nc")
+    a = np.random.default_rng(5).random((16, 512, 512))
+    names = np.array([f"p{i:02d}".encode() for i in range(16)])
+    tracemalloc.start()
+    try:
+        write_netcdf3(
+            p,
+            dims={"band": 16, "y": 512, "x": 512, "strlen": 3},
+            variables={
+                "intensity": (("band", "y", "x"), a, {}),
+                "name": (("band", "strlen"), names.view("S1").reshape(16, 3), {}),
+            },
+        )
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= 1.1 * a.nbytes, peak
+    _, variables, _ = read_netcdf3(p)
+    assert (variables["intensity"][1] == a).all()
+    assert variables["name"][1].tobytes() == names.tobytes()
