@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -29,22 +30,40 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# (path) -> (num_row_groups, num_rows); parquet footers are immutable here
-_FOOTER_CACHE: dict[str, tuple[int, int]] = {}
+# path -> ((size, mtime), (num_row_groups, num_rows, Spark schema)):
+# what a load reads of a file once, kept while the file's stat holds
+_FOOTER_CACHE: dict[str, tuple[tuple[int, int], tuple]] = {}
 
 _FANOUT_MIN_ROWS = 1000
 
 
-def _footer(path: str) -> tuple[int, int]:
-    if path not in _FOOTER_CACHE:
+def _footer(
+    spark: SparkSession, path: str
+) -> tuple[int, int, StructType | None]:
+    """Row groups, rows and Spark's schema of one parquet file, read
+    on its first load and again only after the file changes (a new
+    size or mtime). The schema is what ``spark.read.parquet`` infers,
+    which costs a Spark job per read; handing it back to the reader
+    makes every later load of the file jobless. A path this process
+    cannot stat (absent, or not on a local filesystem) gets no entry:
+    its reader infers the schema, and reports a missing path, itself."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return 0, 0, None
+    stamp = (st.st_size, st.st_mtime_ns)
+    hit = _FOOTER_CACHE.get(path)
+    if hit is None or hit[0] != stamp:
+        schema = spark.read.parquet(path).schema
         try:
             import pyarrow.parquet as pq
 
             f = pq.ParquetFile(path)
-            _FOOTER_CACHE[path] = (f.num_row_groups, f.metadata.num_rows)
+            shape = (f.num_row_groups, f.metadata.num_rows)
         except Exception:
-            _FOOTER_CACHE[path] = (0, 0)
-    return _FOOTER_CACHE[path]
+            shape = (0, 0)
+        hit = _FOOTER_CACHE[path] = (stamp, (*shape, schema))
+    return hit[1]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,14 +84,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     dimension tables are left alone so their broadcast stays cheap.
     Column pruning and predicate pushdown still reach the scan below
     the exchange.
+
+    The reader gets the schema Spark inferred on the file's first load
+    (``_footer``), so a repeated load runs no Spark job.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    row_groups, rows, schema = _footer(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division: ns epochs exceed 2^53, double math would round
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     cores = spark.sparkContext.defaultParallelism
-    row_groups, rows = _footer(path)
     if rows >= _FANOUT_MIN_ROWS and 0 < row_groups < cores // 2:
         df = df.repartition(cores)
     return df

@@ -14,7 +14,7 @@ row once with no shuffle at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from icecube_spark.functions.hashing import spark_hex2int
@@ -309,43 +309,39 @@ def connected_components(
     smallest label among itself and its neighbors; converges in
     O(component diameter) rounds — near-dup components are tiny
     (pairs of variants), so 2-3 rounds in practice. Each round is one
-    distributed join + one aggregate; the driver only checks a scalar
-    convergence sum, so nothing collects. At 100 TB this is the
-    standard large-graph CC pattern (GraphFrames does the same joins
-    underneath).
+    distributed join + one aggregate, stored by the ``materialize()``
+    barrier; the convergence flag is observed while that barrier
+    runs, so nothing collects and no round runs a job of its own for
+    it. Every shuffle is sized to the data by AQE (no hand-picked
+    partition count), and the barriers' blocks are freed once no
+    frame reads them, so a call persists nothing past its return. At
+    100 TB this is the standard large-graph CC pattern (GraphFrames
+    does the same joins underneath).
     """
-    sym = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
-        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-    )
     # the pair-mining pipeline above is the expensive part, and its
     # lineage is the expensive PLAN: every iteration re-analyzes the
     # whole mining tree unless it is severed here. localCheckpoint
     # materializes the edge list once and gives each round a
     # leaf-sized plan (the same driver-time blowup
-    # connected_components_fast truncates per-round). Then size every
-    # iteration's shuffle to the DATA, not the session default: each
-    # round is a join + aggregate whose per-task overhead dominates on
-    # a near-empty 32-way shuffle, and a 100 TB pair graph scales the
-    # partition count back up (one scalar count decides).
-    raw = sym.transform(materialize)
-    n_edges = raw.count()
-    parts = max(1, min(32, n_edges // 100_000 + 1))
-    sym = raw.repartition(parts, "src")
-    sym.persist()
+    # connected_components_fast truncates per-round).
+    sym = (
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        .transform(materialize)
+    )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     # self-loops make each round a single join + single aggregate: the
     # (n, n) row carries n's own label through the neighbor join, so
     # min() covers self+neighbors and the old label rides along for the
     # convergence flag — no second labels join per round. Duplicate
     # edges are harmless under min(), so no distinct() pass is needed.
-    edges = sym.union(nodes.select("node", "node"))
+    edges = sym.union(nodes.select("node", "node")).transform(materialize)
     labels = nodes.withColumn("label", F.col("node"))
-    edges.persist()
-    cached = None
     for _ in range(max_iter):
-        joined = edges.join(labels, edges.dst == labels.node)
+        flag = Observation()
         stepped = (
-            joined.groupBy("src")
+            edges.join(labels, edges.dst == labels.node)
+            .groupBy("src")
             .agg(
                 F.min("label").alias("label"),
                 F.max(
@@ -353,17 +349,12 @@ def connected_components(
                 ).alias("old"),
             )
             .select(F.col("src").alias("node"), "label", "old")
+            .observe(flag, F.max(F.col("label") < F.col("old")).alias("changed"))
+            .transform(materialize)
         )
-        stepped.persist()
-        changed = stepped.where(F.col("label") < F.col("old")).limit(1).count()
-        if cached is not None:
-            cached.unpersist()
-        cached = stepped
         labels = stepped.select("node", "label")
-        if changed == 0:
+        if not flag.get["changed"]:
             break
-    edges.unpersist()
-    sym.unpersist()
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     ).orderBy("doc_id")

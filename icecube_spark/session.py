@@ -3,8 +3,11 @@
 Single place where execution knobs live so every entrypoint (tests,
 bench, driver) gets the same scale-ready defaults: AQE (runtime
 re-planning + skew-join splitting), Arrow for the few pandas-exchange
-operators, and a shuffle-partition count sized for the local harness
-(on a real cluster AQE coalesces the 32 default up/down as needed).
+operators, and 32 shuffle partitions that AQE coalesces to the size
+of the data. That coalescing covers cached plans too, so a persisted
+or staged table is stored in partitions sized to its rows, not in the
+32 of the plan that built it. ``SPARK_GRAFT_CONF`` overrides any
+setting.
 """
 
 from __future__ import annotations
@@ -23,6 +26,14 @@ def get_spark(app_name: str = "icecube-spark", master: str | None = None) -> Spa
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce a cached plan's output like any other
+        # shuffle (Spark's default is false). Otherwise every persisted
+        # or staged table keeps the 32 partitions of the plan that
+        # built it, and each read of a 28-row staged table runs 32
+        # near-empty tasks; with it, a table is stored in partitions
+        # sized to its data (1 for a tiny one, about one per core for
+        # a large one).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "32m")
         .config("spark.sql.session.timeZone", "UTC")

@@ -33,6 +33,12 @@ _NP_TO_NC = {"i1": NC_BYTE, "i2": NC_SHORT, "i4": NC_INT,
 
 _WRITE_SLICE = 1 << 17  # values converted per write: 1 MiB of doubles
 
+# The largest variable a netCDF-3 header can size: `vsize` is 32 bits,
+# signed in CDF-1 and unsigned in CDF-2 (the format spec's 2 GiB - 4
+# and 4 GiB - 4 byte limits). CDF-1's begin offsets are signed 32
+# bits too, so no CDF-1 variable may start past 2 GiB - 1.
+MAX_VAR_BYTES = {1: 2**31 - 4, 2: 2**32 - 4}
+
 
 def _pad(b: bytes) -> bytes:
     return b + b"\x00" * (-len(b) % 4)
@@ -79,7 +85,9 @@ def write_netcdf3(
     (64-bit data offsets, the NETCDF3_64BIT on-disk format). The
     header goes to the file first, then each variable's data,
     converted to big-endian a slice at a time, so the write never
-    holds a second copy of a cube."""
+    holds a second copy of a cube. A variable over its version's
+    `MAX_VAR_BYTES`, or a CDF-1 variable that would start past 2 GiB,
+    raises ValueError before the file is opened."""
     import numpy as np
 
     if version not in (1, 2):
@@ -107,17 +115,29 @@ def write_netcdf3(
                 NC_DOUBLE if arr.dtype.kind == "f" else NC_INT
             )
             nbytes = arr.size * _DTYPES[nct][1]
+        vsize = nbytes + -nbytes % 4
+        if vsize > MAX_VAR_BYTES[version]:
+            raise ValueError(
+                f"netCDF-3 variable {vname!r} is {nbytes} bytes: a CDF-{version}"
+                f" variable holds at most {MAX_VAR_BYTES[version]} bytes"
+            )
         entries.append((arr, nct, nbytes))
         vh = _name(vname) + struct.pack(">i", len(vdims))
         vh += b"".join(struct.pack(">i", dim_ids[d]) for d in vdims)
         vh += _attr_list(attrs or {})
-        vh += struct.pack(">ii", nct, nbytes + -nbytes % 4)
+        vh += struct.pack(">iI", nct, vsize)
         var_headers.append(vh)
 
     # var_list tag (8 bytes) + each var header + its begin offset
     offset = len(header) + 8 + sum(len(vh) + off_size for vh in var_headers)
     header += struct.pack(">ii", _NC_VARIABLE if entries else 0, len(entries))
     for (_, _, nbytes), vh in zip(entries, var_headers):
+        if version == 1 and offset > 2**31 - 1:
+            raise ValueError(
+                f"netCDF-3 variable starts at byte {offset}: CDF-1 offsets"
+                f" are 32-bit, so its variables must start below 2 GiB;"
+                f" write CDF-2 (version=2)"
+            )
         header += vh + struct.pack(off_fmt, offset)
         offset += nbytes + -nbytes % 4
     with open(path, "wb") as f:
@@ -194,7 +214,7 @@ def read_netcdf3(path: str):
         vdim_ids = struct.unpack(f">{ndims}i", buf[pos : pos + 4 * ndims])
         pos += 4 * ndims
         vattrs, pos = _read_attrs(buf, pos)
-        nct, vsize = struct.unpack(">ii", buf[pos : pos + 8])
+        nct, vsize = struct.unpack(">iI", buf[pos : pos + 8])
         pos += 8
         (begin,) = struct.unpack(off_fmt, buf[pos : pos + off_size])
         pos += off_size
@@ -242,6 +262,7 @@ def summarize_layers(dc) -> LayerSummary:
 def _materialize_cube(
     dc, height: int | None = None, width: int | None = None,
     max_layers: int = 4096, summary: LayerSummary | None = None,
+    max_var_bytes: int | None = None,
 ):
     """The driver-side step of every single-file export (the same
     single-file step the reference's to_file performs), and the one
@@ -252,9 +273,11 @@ def _materialize_cube(
     no layer shape (a netCDF-3 dim of length 0 is the unlimited
     record dim, so a fixed `band`, `azimuth` or `range` dim cannot be
     zero-length), then a cube above `max_layers` layers or whose
-    dense pixels exceed min(4 GiB, spark.driver.maxResultSize), which
-    must go through the parquet/partitioned sinks instead of aborting
-    the collect or OOMing the driver. Then the pixel step
+    dense pixels exceed min(4 GiB, spark.driver.maxResultSize,
+    `max_var_bytes`), which must go through the parquet/partitioned
+    sinks instead of aborting the collect, OOMing the driver or
+    overflowing the file format's variable size (a netCDF-3 export
+    passes its version's `MAX_VAR_BYTES`). Then the pixel step
     (`_collect_layers`) ships the band: `pixels` when the cube has
     that column, else its first band (Real for SLC). Returns the
     (layers, height, width) float64 array in the cube's layer order,
@@ -277,16 +300,17 @@ def _materialize_cube(
     limit = dc.df.sparkSession._jsc.sc().conf().getSizeAsBytes(
         "spark.driver.maxResultSize", "1g"
     )
-    budget = min(4 << 30, limit or 4 << 30)  # 0: Spark sets no limit
+    # limit 0: Spark sets no limit; max_var_bytes None: no format limit
+    budget = min(4 << 30, limit or 4 << 30, max_var_bytes or 4 << 30)
     if n_layers > max_layers or approx_bytes > budget:
         raise ValueError(
             f"refusing single-file netCDF export of {n_layers} layers "
             f"(~{approx_bytes / 2**30:.1f} GiB dense; the budget is "
-            f"{budget >> 20} MiB, the lesser of 4 GiB and "
-            f"spark.driver.maxResultSize): the format is "
-            f"driver-materialized; raise max_layers or "
-            f"spark.driver.maxResultSize explicitly or use the "
-            f"distributed parquet sink for cubes this large"
+            f"{budget >> 20} MiB, the least of 4 GiB, "
+            f"spark.driver.maxResultSize and the format's largest "
+            f"variable): the format is driver-materialized; raise "
+            f"max_layers or spark.driver.maxResultSize explicitly or "
+            f"use the distributed parquet sink for cubes this large"
         )
     band = "pixels" if "pixels" in dc.df.columns else dc.band_cols[0]
     return _collect_layers(dc, band, height, width)
@@ -349,7 +373,7 @@ def cube_to_netcdf(
     import numpy as np
 
     pix, names, date_strs = _materialize_cube(
-        dc, height, width, max_layers, summary
+        dc, height, width, max_layers, summary, MAX_VAR_BYTES.get(version)
     )
     band, height, width = pix.shape
     # byte strings padded with NULs to the longest UTF-8 name

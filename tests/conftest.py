@@ -30,6 +30,31 @@ def spark():
     spark.stop()
 
 
+def run_in_job_group(spark, fn, group: str) -> tuple[int, int]:
+    """Run ``fn()`` in a Spark job group of its own and return the
+    (jobs, tasks) it ran, the tasks of skipped stages left out. The
+    counts do not depend on the host."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    stages = {
+        sid for job in jobs for sid in sc.statusTracker().getJobInfo(job).stageIds
+    }
+    tasks = sum(
+        store.lastStageAttempt(sid).numTasks()
+        for sid in stages
+        if str(store.lastStageAttempt(sid).status()) != "SKIPPED"
+    )
+    return len(jobs), tasks
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -8,6 +8,7 @@ from icecube_spark import catalog
 from icecube_spark.config import CubeConfig
 from icecube_spark.cube import Datacube, build_cube
 from icecube_spark.sources import readers
+from tests.conftest import run_in_job_group
 
 
 def _events_cube(spark, sf_dir, cfg=None):
@@ -458,3 +459,38 @@ def test_slc_cube_dedups_same_date_and_grids_gaps(spark, tmp_path):
     ]
     assert rows[0].Real == list(s_i["slc_b.h5"].astype("f8").ravel())
     assert all(r.Real is None and r.Complex is None for r in rows if r.product_file is None)
+
+
+def test_catalog_load_reuses_inferred_schema(spark, sf_dir):
+    """A table's first load infers its schema (one Spark job); every
+    later load hands that schema to the reader and runs no job, with
+    the same schema and rows (events' timestamp column included)."""
+    for name in ("documents", "events"):
+        first = catalog.load(spark, sf_dir, name)
+        again = []
+        jobs, _ = run_in_job_group(
+            spark,
+            lambda: again.append(catalog.load(spark, sf_dir, name)),
+            f"reload-{name}",
+        )
+        assert jobs == 0
+        assert again[0].schema == first.schema
+        assert again[0].count() == first.count()
+
+
+def test_catalog_load_sees_rewritten_file(spark, tmp_path):
+    """A table rewritten in place (another size and mtime) is read
+    afresh: the next load has the new columns and rows, not the
+    schema kept from the first load."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2, 3]}), path)
+    assert catalog.load(spark, str(tmp_path), "documents").count() == 3
+    pq.write_table(
+        pa.table({"doc_id": [7, 8], "text": ["a b", "c"]}), path
+    )
+    df = catalog.load(spark, str(tmp_path), "documents")
+    assert df.columns == ["doc_id", "text"]
+    assert sorted(tuple(r) for r in df.collect()) == [(7, "a b"), (8, "c")]

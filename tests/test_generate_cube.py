@@ -23,7 +23,8 @@ ORDER_BY_ACQ = [
     "ICEYE_GRD_54549_20210427T215124_hollow_10x10pixels_fake_2.tif",
 ]
 
-pytestmark = pytest.mark.skipif(
+# on the tests that read the reference's fixtures; the rest run anywhere
+needs_ref = pytest.mark.skipif(
     not glob.glob(os.path.join(GRD, "*.tif")), reason="reference fixtures absent"
 )
 
@@ -32,6 +33,7 @@ def _cfg(name):
     return os.path.join(CFG, f"config_use_case{name}.json")
 
 
+@needs_ref
 def test_default_config_full_stack(spark):
     """Default config: natural timeline, all 3 rasters, 10x10 pixels
     (reference test_with_default_config dims azimuth=10, band=3,
@@ -49,6 +51,7 @@ def test_default_config_full_stack(spark):
         assert list(want.astype("float64").ravel()) == list(r.pixels)
 
 
+@needs_ref
 def test_use_case1_filters_everything(spark):
     """use_case1: date window ends 20210420, before every acquisition
     — plus incidence [20, 21] — keeps no real layers; with
@@ -60,6 +63,7 @@ def test_use_case1_filters_everything(spark):
     assert all(r.product_file is None for r in rows)
 
 
+@needs_ref
 def test_use_case2_unknown_keys_warn(spark):
     with pytest.warns(UserWarning):
         cfg = CubeConfig.load(_cfg(2))
@@ -67,11 +71,13 @@ def test_use_case2_unknown_keys_warn(spark):
     assert dc.df.count() == 0  # same 2020-04..2021-04-20 window
 
 
+@needs_ref
 def test_use_case3_fractional_resolution_rejected():
     with pytest.raises(ValueError):
         CubeConfig.load(_cfg(3))
 
 
+@needs_ref
 def test_use_case4_single_day_grid(spark):
     """use_case4: start=end=20210427, res=1 day -> exactly one slot,
     holding fake_1 (acquisition_end 2021-04-27)."""
@@ -82,6 +88,7 @@ def test_use_case4_single_day_grid(spark):
     assert rows[0].incidence_center == 29.5
 
 
+@needs_ref
 def test_use_case5_six_day_grid(spark):
     """use_case5: 20210425..20210430 daily -> 6 slots; fake_1 on the
     27th, fake_0 on the 28th, the rest dummy layers."""
@@ -96,6 +103,7 @@ def test_use_case5_six_day_grid(spark):
     assert all(r.pixels is None for r in rows if r.product_file is None)
 
 
+@needs_ref
 def test_use_case6_natural_timeline_window(spark):
     """use_case6: same window, no temporal resolution -> 2 layers on
     the natural timeline."""
@@ -104,6 +112,7 @@ def test_use_case6_natural_timeline_window(spark):
     assert [r.product_file for r in rows] == ORDER_BY_ACQ[:2]
 
 
+@needs_ref
 def test_dummy_grid_33_days(spark):
     """The reference's test_dummy_data: res=1 over 20210426..20210528
     -> 33 slots with acquisitions at indices 1, 2 and 31; every other
@@ -159,6 +168,7 @@ def test_netcdf3_roundtrip_raw(tmp_path):
     assert (variables["idx"][1] == b).all()
 
 
+@needs_ref
 def test_netcdf3_cube_bridge(spark, tmp_path):
     """create_cube_from_rasters -> netCDF-3 -> re-import: products,
     slots, and pixel layers survive the round trip (reference
@@ -181,6 +191,7 @@ def test_netcdf3_cube_bridge(spark, tmp_path):
     assert got == orig
 
 
+@needs_ref
 def test_netcdf3_export_size_guard(spark, tmp_path):
     """cube_to_netcdf is driver-materialized by design; exports above
     the layer/byte budget must refuse instead of collecting."""
@@ -196,6 +207,7 @@ def test_netcdf3_export_size_guard(spark, tmp_path):
                        height=1 << 16, width=1 << 16, max_layers=10)
 
 
+@needs_ref
 def test_get_layer_array_roundtrip(spark):
     """Dense-layer accessor parity (reference datacube.py
     get_product_values): the 2-D array equals the decoded TIFF."""
@@ -216,6 +228,7 @@ def test_get_layer_array_roundtrip(spark):
         dc.get_layer_array(row.product_file, row.acquisition_date, 3, 3)
 
 
+@needs_ref
 def test_to_file_netcdf4_dispatch(spark, tmp_path):
     """Reference Datacube.to_file(format=...) parity
     (icecube/bin/datacube.py:203): netCDF4 when the lib is present,
@@ -259,6 +272,7 @@ def test_to_file_netcdf4_dispatch(spark, tmp_path):
         cube_to_file(dc, p3, height=10, width=10, format="zarr")
 
 
+@needs_ref
 def test_per_product_accessors(spark):
     """Reference datacube_test.py:109-168 parity: get_all_products /
     get_metadata_by_product / get_product_values / get_index_values
@@ -290,6 +304,7 @@ def test_per_product_accessors(spark):
         dc.get_index_values("not_a_column")
 
 
+@needs_ref
 def test_all_products_dummy_only_raises(spark):
     """An all-dummy cube (use_case1 filters every layer) raises the
     reference's missing-product-metadata KeyError."""
@@ -298,6 +313,7 @@ def test_all_products_dummy_only_raises(spark):
         dc.get_all_products()
 
 
+@needs_ref
 def test_create_cube_from_list_grd(spark):
     """Reference create_cube_from_list (generate_cube.py:94-117): an
     explicit two-raster list builds the same layers as the crawl."""
@@ -334,6 +350,7 @@ def test_create_cube_from_list_slc(spark):
     assert dc.df.count() == 1
 
 
+@needs_ref
 def test_cli_inline_with_labels_and_save(spark, tmp_path):
     """Reference cli() parity (generate_cube.py:216-229): build from a
     raster dir, merge labels, save to .nc, re-import layer-identical."""
@@ -353,6 +370,7 @@ def test_cli_inline_with_labels_and_save(spark, tmp_path):
     assert back.df.count() == dc.df.count()
 
 
+@needs_ref
 def test_cli_subprocess_end_to_end(tmp_path):
     """The console entry builds a cube from the reference's own
     grd_stack fixtures in a fresh interpreter (the judge's item-6
@@ -397,6 +415,7 @@ def test_netcdf4_hdf5_read_path(spark, tmp_path):
     assert list(rows[1].pixels) == list(pix[1].ravel())
 
 
+@needs_ref
 def test_to_file_netcdf3_64bit_roundtrip(spark, tmp_path):
     """NETCDF3_64BIT writes a true CDF-2 (64-bit-offset) file via the
     dependency-free bridge (reference to_file parity — xarray's
@@ -425,6 +444,7 @@ def test_to_file_netcdf3_64bit_roundtrip(spark, tmp_path):
     assert got == orig
 
 
+@needs_ref
 def test_sample_workflows(spark, tmp_path):
     """Reference generate_cube.py:121-184 parity: the three demo
     recipes (labels, raster/SLC, explicit list) run end-to-end against

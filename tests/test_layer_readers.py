@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from icecube_spark.config import CubeConfig
 from icecube_spark.cube import _filter_and_grid, create_cube_from_slc
 from icecube_spark.sources.hdf5_write import write_h5
+from tests.conftest import run_in_job_group
 from tests.test_scale_paths import _mk_tiff_full
 
 _SLC_DATES = {  # name -> (acquisition_end_utc, incidence_center)
@@ -346,6 +347,68 @@ def test_export_guard_refuses_before_collect(
     assert not out.exists()
 
 
+def test_export_guard_refuses_over_the_cdf1_variable_limit(
+    spark, tmp_path, monkeypatch
+):
+    """With spark.driver.maxResultSize above 4 GiB, a classic export
+    whose intensity variable passes the CDF-1 limit (2 GiB - 4 bytes;
+    2 layers of 12000x12000 float64 are 2.1 GiB) is refused before
+    any pixel is collected, against the format's budget."""
+    from icecube_spark.sources.netcdf3 import cube_to_file
+
+    _slc_stack(tmp_path)
+    dc = create_cube_from_slc(spark, str(tmp_path), CubeConfig.from_dict(_KEEP))
+    shipped = _export_collects(spark, monkeypatch)
+    out = tmp_path / "x.nc"
+    conf = spark.sparkContext._jsc.sc().conf()
+    key = "spark.driver.maxResultSize"
+    old = conf.getOption(key)
+    conf.set(key, "8g")
+    try:
+        with pytest.raises(ValueError, match="the budget is 2047 MiB"):
+            cube_to_file(dc, str(out), 12000, 12000, format="NETCDF3_CLASSIC")
+    finally:
+        if old.isDefined():
+            conf.set(key, old.get())
+        else:
+            conf.remove(key)
+    assert shipped == []
+    assert not out.exists()
+
+
+@pytest.mark.parametrize(
+    "version, variables",
+    [
+        # 2.3 GiB of doubles: over the 2 GiB - 4 byte CDF-1 variable limit
+        (1, {"v": ((1024, 1024), 300, "f8")}),
+        # 4.7 GiB: over the 4 GiB - 4 byte CDF-2 limit
+        (2, {"v": ((1024, 1024), 600, "f8")}),
+        # each under the limit, but the second starts past CDF-1's
+        # 32-bit offsets
+        (1, {"a": ((1,), 2**31 - 8, "i1"), "b": ((1,), 4, "i1")}),
+    ],
+    ids=["cdf1_vsize", "cdf2_vsize", "cdf1_offset"],
+)
+def test_write_netcdf3_refuses_what_the_header_cannot_hold(
+    tmp_path, version, variables
+):
+    """write_netcdf3 names the netCDF-3 limit in a ValueError before it
+    opens the file, instead of failing in struct.pack. The arrays are
+    np.broadcast_to views, so nothing is allocated."""
+    from icecube_spark.sources.netcdf3 import write_netcdf3
+
+    dims, vs = {}, {}
+    for name, (tail, n, dtype) in variables.items():
+        shape = (n, *tail)
+        names = tuple(f"{name}{i}" for i in range(len(shape)))
+        dims.update(zip(names, shape))
+        vs[name] = (names, np.broadcast_to(np.zeros(1, dtype), shape), {})
+    out = tmp_path / "big.nc"
+    with pytest.raises(ValueError, match="at most|CDF-1 offsets"):
+        write_netcdf3(str(out), dims, vs, version=version)
+    assert not out.exists()
+
+
 @pytest.mark.parametrize("case", ["grid", "netcdf3_64bit", "labels"])
 def test_cli_export_round_trip(spark, tmp_path, monkeypatch, case):
     """The CLI's export inputs beyond the plain stack: a gridded cube,
@@ -463,16 +526,10 @@ def test_cli_job_count(spark, tmp_path, save, jobs):
     argv = [str(stack), "--config", _config(tmp_path, _KEEP)]
     if save:
         argv += ["--cube-save", str(tmp_path / "cube.nc")]
-    sc = spark.sparkContext
-    group = f"cli-job-count-{save}"
-    sc.setJobGroup(group, group)
-    try:
-        cli(argv, spark=spark)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    ran, _ = run_in_job_group(
+        spark, lambda: cli(argv, spark=spark), f"cli-job-count-{save}"
+    )
+    assert ran == jobs
     assert (tmp_path / "cube.nc").exists() == save
 
 

@@ -15,6 +15,7 @@ from icecube_spark import staging
 from icecube_spark.queries import analytics as an
 from icecube_spark.queries import llm_queries as lq
 from icecube_spark.staging import staging_stale
+from tests.conftest import run_in_job_group
 
 SF = "/root/testdata/sf0.001"
 QUERIES_ROOT = Path(__file__).resolve().parent.parent / "icecube_spark" / "queries"
@@ -169,3 +170,34 @@ def test_persist_only_inside_staged_functions():
     assert not stray, f".persist( outside staged_*: {stray}"
     # the staged builders' own persists are found (else the sweep is blind)
     assert len(sites) >= 10
+
+
+def test_staged_table_is_stored_at_the_size_of_its_data(spark):
+    """AQE coalesces a cached plan's output like any other shuffle's,
+    so the 28-row staged pair table is stored in one or two partitions
+    and a full read of it runs at most 2 tasks, not one per session
+    shuffle partition (32)."""
+    pairs = lq.staged_minhash_pairs(spark, SF)
+    pairs.count()
+    _, tasks = run_in_job_group(
+        spark,
+        lambda: pairs.write.format("noop").mode("overwrite").save(),
+        "staged-pairs-noop",
+    )
+    assert 0 < tasks <= 2
+
+
+def test_connected_components_leaves_no_cache_entry(spark):
+    """dedup_clusters persists nothing past its call: the count of
+    cached plans stays put across three calls (each call used to
+    leave its last round's frame cached)."""
+    from icecube_spark.queries.pipeline_queries import dedup_clusters
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    lq.staged_minhash_pairs(spark, SF).count()
+    counts, outs = [], []
+    for _ in range(3):
+        outs.append([tuple(r) for r in dedup_clusters(spark, SF).collect()])
+        counts.append(cache.cachedData().size())
+    assert counts[0] == counts[1] == counts[2]
+    assert outs[0] == outs[1] == outs[2] and outs[0]
