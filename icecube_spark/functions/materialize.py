@@ -18,11 +18,11 @@ without a code change):
 - ``...backend=reliable``: eager ``checkpoint()`` to the directory in
   ``spark.icecube.materialize.dir`` (HDFS/object store on a cluster) —
   survives any executor loss.
-- ``...backend=persist``: ``MEMORY_AND_DISK_2`` persist + count —
-  2-replica in-cluster materialization, cheaper than a filesystem
-  round-trip, survives single-executor loss. NOTE: persist truncates
-  re-EXECUTION (consumers read the cached blocks) but not the logical
-  plan; prefer ``reliable`` where planning time matters.
+
+Any other value raises ``ValueError``. That includes the retired
+``persist`` backend: a persisted frame keeps its logical plan, so a
+loop under it grew its plan every iteration, and each barrier left a
+cache entry behind. ``reliable`` covers executor loss.
 
 Every backend is an eager barrier: the input lineage has fully executed
 by the time the function returns, and the returned frame's consumers
@@ -50,12 +50,7 @@ def materialize(df: DataFrame) -> DataFrame:
                 spark.conf.get(_DIR_KEY, "/tmp/icecube-spark-checkpoints")
             )
         return df.checkpoint(eager=True)
-    if backend == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        out.count()
-        return out
     raise ValueError(
-        f"unknown {_BACKEND_KEY}={backend!r}; expected local|reliable|persist"
+        f"unknown {_BACKEND_KEY}={backend!r}; expected local or reliable"
+        " (reliable survives executor loss)"
     )

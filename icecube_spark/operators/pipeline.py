@@ -1143,7 +1143,7 @@ def pagerank(
         # when the graph has sinks) never re-run this pass and the plan
         # does not grow with the iteration count. The checkpoint cuts
         # lineage: its blocks are unreplicated, so a lost executor fails
-        # the query unless the reliable or persist backend is set. A
+        # the query unless the reliable backend is set. A
         # barrier on every 2nd iteration only (sink-free graphs) timed
         # no faster beyond run-to-run spread, so it was dropped.
         ranks = ranks.transform(materialize)

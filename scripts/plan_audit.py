@@ -1,13 +1,18 @@
 """Plan audit: one fingerprint line per registry key in PLANS.md, and
 the window-funnel and join rules that read it.
 
-``python scripts/plan_audit.py [key ...]`` executes the given keys
-(all keys when none are given) at sf0.01 with AQE off, prints ``== key``
-to stderr before each (so a JVM codegen-fallback log line attributes to
-its key), rewrites their PLANS.md lines from
-``executedPlan().toString()`` and exits 1 on any funnel,
-CartesianProduct or failed key. ``git diff PLANS.md`` is the plan
-review; one full plan is ``df.explain("formatted")``.
+``plan_line(spark, key, sf_dir)`` is the one plan pass: it builds
+``queries()[key]`` with AQE off and fingerprints its
+``executedPlan()``, running no action. ``python scripts/plan_audit.py
+[key ...]`` rewrites the given keys' PLANS.md lines at sf0.01 (all keys
+when none are given), printing ``== key`` to stderr before each, and
+exits 1 on any funnel, CartesianProduct or failed key. Tier-1 builds
+every key's line afresh and fails on any line that differs from PLANS.md
+(``tests/test_scale_paths.py::test_registry_wide_funnel_sweep``), so
+``git diff PLANS.md`` is the plan review; one full plan is
+``df.explain("formatted")``. Only the eager ``materialize()`` barriers
+inside a build run Spark jobs; a key's own plan is never executed here,
+so its codegen failures surface in ``scripts/janino_hunt.py``.
 
 A line is ``key | ops: | joins: | windows: | pushed: | codegen:``, each
 multiset written ``token*count`` (``-`` when empty): operator names
@@ -24,8 +29,7 @@ primitives' per-range-partition local pass on ``__pid``), ``offsets``
 (their tiny ``__ptot``/``__pcnt`` offset tables), ``group-limit`` or
 ``agg`` (a WindowGroupLimit or an aggregate in the window's input
 subtree: aggregate grain, not raw rows), or a WHITELIST reason.
-``tests/test_registry.py`` applies the rules to the PLANS.md lines and
-``tests/test_scale_paths.py`` to freshly built plans.
+``tests/test_registry.py`` applies the rules to the PLANS.md lines.
 """
 
 from __future__ import annotations
@@ -228,13 +232,6 @@ def _sites(nodes: list[_Node]) -> list[dict]:
     return sites
 
 
-def scan_plan(plan: str) -> list[dict]:
-    """Window sites of an executed-plan string: one
-    ``{"partition": [cols], "bound": ...}`` per windowspecdefinition,
-    bound being pid / offsets / group-limit / agg / none."""
-    return _sites([n for n, _ in _walk(_tree(plan))])
-
-
 def _join(n: _Node) -> str:
     body = re.sub(r"^\*\(\d+\) ", "", n.text)
     args = _split_top(body.split(" ", 1)[1] if " " in body else "")
@@ -348,11 +345,35 @@ One line per registered key, sorted: the executed plan of
 `queries()[key]` at sf0.01 with AQE off (its runtime re-plans race), as
 `key | ops | joins | windows | pushed | codegen`, written by
 `python scripts/plan_audit.py [key ...]`, whose docstring defines the
-fields. A plan change is this file's line diff; one full plan is
-`df.explain("formatted")`.
+fields. The plans are built, not executed. Tier-1 rebuilds every line
+and fails on any that differs from this file, so a plan change is this
+file's line diff; one full plan is `df.explain("formatted")`. The lines
+hold at a `defaultParallelism` of 4 or more (`local[N]`, N >= 4): below
+that, `catalog.load` does not fan a one-row-group file out.
 
 ```text
 """
+
+
+def plan_line(spark, key: str, sf_dir: str) -> str:
+    """The PLANS.md line of ``queries()[key]`` built at ``sf_dir``,
+    with AQE off for the call and no action run. AQE's runtime re-plans
+    race: when both inputs of a join are small, whichever stage finishes
+    first becomes the broadcast side. Staging is released first, so the
+    key builds its own staged tables and its plan does not depend on
+    which keys ran before it."""
+    import __spark_entry__ as entry_mod
+    from icecube_spark import staging
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        staging.release()
+        df = entry_mod.queries()[key](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return format_line(key, fingerprint(plan))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def main(argv: list[str]) -> int:
@@ -372,10 +393,6 @@ def main(argv: list[str]) -> int:
     path = os.path.join(root, "PLANS.md")
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    # AQE's runtime re-plans race: when both inputs of a join are small,
-    # whichever stage finishes first becomes the broadcast side, so its
-    # final plan differs from run to run. The static plan repeats.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     qs = entry_mod.queries()
     keys = argv or sorted(qs)
     old = read_plans(path) if argv else {}
@@ -383,17 +400,12 @@ def main(argv: list[str]) -> int:
     flagged, errors = [], {}
     for k in keys:
         print(f"== {k}", file=sys.stderr, flush=True)
-        # each key builds its own staged tables, so its plan does not
-        # depend on which keys ran before it
-        staging.release()
         try:
-            df = qs[k](spark, sf_dir)
-            df.collect()  # runs the DataFrame's own QueryExecution
-            fp = fingerprint(df._jdf.queryExecution().executedPlan().toString())
+            lines[k] = plan_line(spark, k, sf_dir)
         except Exception as exc:  # keep auditing the other keys
             errors[k] = f"{type(exc).__name__}: {exc}"[:300]
             continue
-        lines[k] = format_line(k, fp)
+        fp = parse_line(lines[k])[1]
         found = violations(k, fp["windows"]) + join_smells(k, fp)
         if found:
             print(json.dumps(found), flush=True)

@@ -18,6 +18,7 @@ from icecube_spark.session import get_spark
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 import driver_verify  # noqa: E402  (the driver gate's comparator)
+import plan_audit  # noqa: E402
 
 SF_DIR = os.environ.get("ICECUBE_TEST_SF_DIR", "/root/testdata/sf0.001")
 REF_LABELS = "/root/reference/tests/resources/labels/dummy_vector_labels.json"
@@ -58,6 +59,14 @@ def run_in_job_group(spark, fn, group: str) -> tuple[int, int]:
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def plans():
+    """{key: fingerprint} of the PLANS.md lines, which
+    test_scale_paths.py::test_registry_wide_funnel_sweep keeps equal to
+    freshly built plans: the plan-shape tests read these."""
+    return plan_audit.read_plans(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"))
 
 
 @pytest.fixture(scope="session")

@@ -21,9 +21,8 @@ def test_q1_plan_pushes_filter_and_prunes(spark, sf_dir):
     assert "l_orderkey" not in plan.split("ReadSchema")[-1]
 
 
-def test_q3_broadcasts_customer(spark, sf_dir):
-    plan = analytics.q3_shipping_priority(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+def test_q3_broadcasts_customer(plans):
+    assert "BroadcastHashJoin" in plans["q3_shipping_priority"]["ops"]
 
 
 def test_histogram_quantile_equals_rank_selection(spark):

@@ -27,28 +27,28 @@ def _frame(spark):
     )
 
 
-@pytest.mark.parametrize("backend", ["local", "reliable", "persist"])
+@pytest.mark.parametrize("backend", ["local", "reliable"])
 def test_materialize_backends_identical_content(spark, backend):
     """Every backend is an eager barrier returning identical rows."""
     want = sorted(map(tuple, _frame(spark).collect()))
     old = spark.conf.get(_BACKEND_KEY, "local")
     try:
         spark.conf.set(_BACKEND_KEY, backend)
-        out = materialize(_frame(spark))
-        got = sorted(map(tuple, out.collect()))
-        if backend == "persist":
-            out.unpersist()
+        got = sorted(map(tuple, materialize(_frame(spark)).collect()))
     finally:
         spark.conf.set(_BACKEND_KEY, old)
     assert got == want
 
 
 def test_materialize_unknown_backend_raises(spark):
+    """An unknown backend, and the retired ``persist`` one, refuse and
+    name ``reliable``, the backend that survives executor loss."""
     old = spark.conf.get(_BACKEND_KEY, "local")
     try:
-        spark.conf.set(_BACKEND_KEY, "bogus")
-        with pytest.raises(ValueError, match="bogus"):
-            materialize(_frame(spark))
+        for backend in ("bogus", "persist"):
+            spark.conf.set(_BACKEND_KEY, backend)
+            with pytest.raises(ValueError, match=f"'{backend}'.*reliable"):
+                materialize(_frame(spark))
     finally:
         spark.conf.set(_BACKEND_KEY, old)
 

@@ -127,15 +127,14 @@ def test_survey_status_counts_match_registry():
     assert int(m2.group(1)) == len(entry._NO_ORACLE)
 
 
-def test_fast_funnel_sweep_over_pinned_plans_is_clean():
+def test_fast_funnel_sweep_over_pinned_plans_is_clean(plans):
     """The plan-smell gate over PLANS.md: every pinned fingerprint must
     read clean under the current rules — no empty/low-cardinality
     window partition without a provable bound, no CartesianProduct.
     The rules read the fingerprint's window sites, so a LOW_CARD_COLS
-    or WHITELIST edit applies here without regenerating. The
-    live-plan twin (tests/test_scale_paths.py::
-    test_registry_wide_funnel_sweep) checks freshly built plans."""
-    plans = plan_audit.read_plans(os.path.join(ROOT, "PLANS.md"))
+    or WHITELIST edit applies here without regenerating. The drift
+    check (tests/test_scale_paths.py::test_registry_wide_funnel_sweep)
+    keeps the lines equal to freshly built plans."""
     assert set(entry.queries()) <= set(plans)
     flagged, cartesians = [], []
     for k, fp in sorted(plans.items()):
@@ -235,9 +234,6 @@ def test_plan_scanner_rules(case):
     a join smell — and the fingerprint line round-trips."""
     plan, funnels, n_cartesian = _PLANS[case]
     fp = plan_audit.fingerprint(plan)
-    assert fp["windows"] == sorted(
-        plan_audit.scan_plan(plan), key=plan_audit.format_site
-    )
     flagged = plan_audit.violations(case, fp["windows"])
     assert [f["partition"] for f in flagged] == funnels
     assert len(plan_audit.join_smells(case, fp)) == n_cartesian

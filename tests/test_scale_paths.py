@@ -1,12 +1,14 @@
 """IVF ANN, TF-IDF features, stateful streaming, raster crawling."""
 
+import os
 import struct
 
 import pandas as pd
+import plan_audit  # scripts/, put on sys.path by conftest.py
 import pytest
 from pyspark.sql import functions as F
 
-from icecube_spark import catalog
+from icecube_spark import catalog, staging
 from icecube_spark.operators import ivf, similarity
 from icecube_spark.sources.raster import crawl_raster_metadata, parse_tiff_header
 
@@ -357,27 +359,14 @@ WINDOW_GROUP_LIMIT_KEYS = [
 # merge), never Sort + Limit over the full exchange.
 TAKE_ORDERED_KEYS = ["basket_pairs", "basket_lift", "bm25_topk",
                      "repeated_substrings", "bpe_merge_candidates"]
-
-
-@pytest.mark.parametrize("name", WINDOW_GROUP_LIMIT_KEYS)
-def test_rank_topk_has_window_group_limit(spark, sf_dir, name):
-    import __spark_entry__ as entry_mod
-
-    plan = (
-        entry_mod.queries()[name](spark, sf_dir)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "WindowGroupLimit" in plan, f"{name} lost its rank-filter pruning"
-
-
 # Keys rerouted (rounds 6-7) through the keyed/global distributed
-# rank/cumsum/lag primitives: their executed plans must never again
-# contain a row_number/lag/running-sum window partitioned by the old
-# low-cardinality key over corpus-grain rows — that window caps
-# parallelism at |keys| tasks. The rank lives behind the primitives'
-# checkpoint (partitioned by __pid); only bounded-grain windows (the
-# tiny per-(key, partition) offset tables) may remain, and those
-# always reference __ptot/__pcnt/__pid.
+# rank/cumsum/lag primitives, with the low-cardinality column their
+# windows were once partitioned by: no window may again be partitioned
+# by it first, or be global, over corpus-grain rows (bound ``none``) —
+# that window caps parallelism at |keys| tasks. The rank lives behind
+# the primitives' checkpoint (bound ``pid``); the tiny per-(key,
+# partition) offset tables (``offsets``) and aggregate-grain frames
+# (``agg``, e.g. the r9 (key, value) count histograms) may remain.
 FUNNEL_FREE_KEYS = {
     "value_percentiles": "event_type",
     "winsorize_values": "event_type",
@@ -397,59 +386,45 @@ FUNNEL_FREE_KEYS = {
     "sequence_packing": "source",
     "packing_curve": "source",
     # r8: the last two corpus-grain funnels — conversion_lag's old
-    # GLOBAL rank window (empty partition spec → first windowspec arg
-    # is the order col lag_us) and downsample_lttb's per-type windows
+    # GLOBAL rank window and downsample_lttb's per-type windows
     "conversion_lag": "lag_us",
     "downsample_lttb": "t",
 }
 
 
+@pytest.mark.parametrize("name", WINDOW_GROUP_LIMIT_KEYS)
+def test_rank_topk_has_window_group_limit(plans, name):
+    assert "WindowGroupLimit" in plans[name]["ops"], f"{name} lost its rank-filter pruning"
+
+
 @pytest.mark.parametrize(
     "name", sorted(FUNNEL_FREE_KEYS), ids=sorted(FUNNEL_FREE_KEYS)
 )
-def test_no_low_cardinality_window_funnel(spark, sf_dir, name):
-    import re
-
-    import __spark_entry__ as entry_mod
-
-    key = FUNNEL_FREE_KEYS[name]
-    plan = (
-        entry_mod.queries()[name](spark, sf_dir)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    for m in re.finditer(
-        r"(?:row_number\(\)|lag\([^)]*\)|sum\([^)]*\)) "
-        r"windowspecdefinition\((\w+)#", plan
-    ):
-        first = m.group(1)
-        line_start = plan.rfind("\n", 0, m.start()) + 1
-        line = plan[line_start:plan.find("\n", m.start())]
-        if first == key:
-            # a window partitioned by the bare key is only legal over
-            # the primitives' tiny offset tables (__ptot/__pcnt/__pid)
-            # or an exact (key, value) count-histogram frame (__hc —
-            # aggregate-bounded by |keys|·|value domain|, the r9
-            # quantile reroute)
-            assert (
-                "__ptot" in line
-                or "__pcnt" in line
-                or "__pid" in line
-                or "__hc" in line
-            ), (
-                f"{name}: corpus-grain window partitioned by {key}: "
-                f"{line[:200]}"
-            )
+def test_no_low_cardinality_window_funnel(plans, name):
+    col = FUNNEL_FREE_KEYS[name]
+    funnels = [
+        plan_audit.format_site(s) for s in plans[name]["windows"]
+        if s["bound"] == "none" and s["partition"][:1] in ([], [col])
+    ]
+    assert not funnels, f"{name}: corpus-grain window funnels {funnels}"
 
 
 @pytest.mark.parametrize("name", TAKE_ORDERED_KEYS)
-def test_global_topk_is_take_ordered(spark, sf_dir, name):
-    import __spark_entry__ as entry_mod
+def test_global_topk_is_take_ordered(plans, name):
+    assert "TakeOrderedAndProject" in plans[name]["ops"], f"{name} lost its top-k heap merge"
 
-    plan = (
-        entry_mod.queries()[name](spark, sf_dir)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrdered" in plan, f"{name} lost its top-k heap merge"
+
+@pytest.mark.parametrize("family,name,ops,windows", [
+    (test_rank_topk_has_window_group_limit, "mmr_diversify", "Sort Window", "k@agg"),
+    (test_global_topk_is_take_ordered, "bm25_topk", "Limit Sort", "-"),
+    (test_no_low_cardinality_window_funnel, "value_percentiles", "Window", "event_type@none"),
+    (test_no_low_cardinality_window_funnel, "conversion_lag", "Window", "@none"),
+], ids=["group-limit", "take-ordered", "keyed-funnel", "global-funnel"])
+def test_plan_families_fail_on_bad_lines(plans, family, name, ops, windows):
+    """Each family rule fails on a pinned line that breaks it."""
+    line = f"{name} | ops: {ops} | joins: - | windows: {windows} | pushed: 0/0 | codegen: 1"
+    with pytest.raises(AssertionError, match=name):
+        family({**plans, name: plan_audit.parse_line(line)[1]}, name)
 
 
 def test_streaming_ingest_dedup_matches_batch(spark, sf_dir):
@@ -490,52 +465,49 @@ def test_ivf_probe_curve_monotone(spark, sf_dir):
     assert rec[-1] >= 0.5, rec
 
 
-def test_registry_wide_funnel_sweep(spark, sf_dir):
-    """VERDICT r7 item 3: the funnel detector, generalized from the
-    FUNNEL_FREE_KEYS allowlist to EVERY registered key. Walks all
-    executed plans and flags any window whose partition spec is empty
-    or a known low-cardinality column — those serialize corpus-grain
-    rows into one task — unless the window is provably bounded: the
-    distributed primitives' __pid local pass, their __ptot/__pcnt
-    offset tables, an upstream aggregate in the input subtree
-    (aggregate grain, not raw rows), or a WindowGroupLimit rewrite
-    (rank<=k pruned map-side). Rules + whitelist live in
-    scripts/plan_audit.py; the r8 sweep caught and fixed
-    conversion_lag, downsample_lttb, doc_length_stats,
-    token_budget_sample, cube_hist_match, and markov_accuracy."""
-    import plan_audit
+def _drift(spark, plans, keys) -> list[str]:
+    """Each key whose freshly built plan line differs from its PLANS.md
+    line, with both lines."""
+    sf_dir = os.path.join(os.path.dirname(catalog.DEFAULT_SF_DIR), "sf0.01")
+    out = []
+    for k in keys:
+        pinned = plan_audit.format_line(k, plans[k]) if k in plans else None
+        try:
+            fresh = plan_audit.plan_line(spark, k, sf_dir)
+        except Exception as exc:  # report every key, not the first
+            fresh = f"{type(exc).__name__}: {exc}"[:300]
+        if fresh != pinned:
+            out.append(f"{k}\n  PLANS.md: {pinned}\n  fresh:    {fresh}")
+    staging.release()
+    return out
 
+
+def test_registry_wide_funnel_sweep(spark, plans):
+    """The drift check: every registered key's plan, built the way
+    scripts/plan_audit.py builds it (sf0.01, AQE off, staging released,
+    no action), fingerprints to its PLANS.md line, and PLANS.md holds
+    no other key. So a plan change fails tier-1 until its line is
+    regenerated, and the funnel, Cartesian and family rules, which
+    read the pinned lines, judge the plans that run."""
     import __spark_entry__ as entry_mod
 
-    # earlier tests materialize the persisted staging tables, which
-    # replaces their lineage with InMemoryTableScan leaves in every
-    # consumer's plan — hiding the upstream aggregates the detector's
-    # subtree scan credits (basket_lift/basket_pairs' global windows
-    # sit on the staged co-purchase AGGREGATE and must read as such).
-    # Clearing staging makes the sweep scan full lineage regardless of
-    # suite order; plan CONSTRUCTION alone never re-materializes it.
-    from icecube_spark import staging
-
-    staging.release()
-
-    qs = entry_mod.queries()
-    flagged, cartesians, errs = [], [], {}
-    for k in sorted(qs):
-        try:
-            fp = plan_audit.fingerprint(
-                qs[k](spark, sf_dir)
-                ._jdf.queryExecution().executedPlan().toString()
-            )
-            flagged.extend(plan_audit.violations(k, fp["windows"]))
-            cartesians.extend(plan_audit.join_smells(k, fp))
-        except Exception as exc:  # pragma: no cover - plan build bug
-            errs[k] = f"{type(exc).__name__}: {exc}"[:200]
-    assert not errs, f"plans failed to build: {errs}"
-    assert not flagged, (
-        f"{len(flagged)} corpus-grain window funnels: "
-        + "; ".join(f"{v['key']}[{','.join(v['partition'])}]" for v in flagged)
+    drift = _drift(spark, plans, sorted(set(entry_mod.queries()) | set(plans)))
+    assert not drift, (
+        f"{len(drift)} plans differ from PLANS.md (defaultParallelism "
+        f"{spark.sparkContext.defaultParallelism}; the lines hold from 4 up); regenerate with "
+        "`python scripts/plan_audit.py <key ...>` and review the diff:\n"
+        + "\n".join(drift)
     )
-    assert not cartesians, (
-        "CartesianProduct (all-pairs shuffle cross join) in: "
-        + "; ".join(sorted({c['key'] for c in cartesians}))
-    )
+
+
+def test_plan_drift_names_the_changed_key(spark, plans, monkeypatch):
+    """A plan change whose line is not regenerated fails the drift
+    comparison, and the failure names the key and shows both lines."""
+    import __spark_entry__ as entry_mod
+
+    key = "q6_forecast_revenue"
+    build = entry_mod._QUERIES[key]
+    monkeypatch.setitem(entry_mod._QUERIES, key, lambda s, d: build(s, d).repartition(3))
+    pinned = plan_audit.format_line(key, plans[key])
+    fresh = pinned.replace("Exchange*2", "Exchange*3")  # the round-robin one added
+    assert _drift(spark, plans, [key]) == [f"{key}\n  PLANS.md: {pinned}\n  fresh:    {fresh}"]

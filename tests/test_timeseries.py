@@ -44,17 +44,11 @@ def test_percentiles_no_keyed_rank_funnel(spark, sf_dir):
             assert "__ptot" in line or "__pid" in line, line
 
 
-def test_range_join_is_equi_join_not_nested_loop(spark, sf_dir):
+def test_range_join_is_equi_join_not_nested_loop(plans):
     """The bucketed plan must be a hash/sort-merge equi join — never
     BroadcastNestedLoop (the naive inequality-join plan)."""
-    plan = (
-        tq.range_join_clicks(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    ops = plans["range_join_clicks"]["ops"]
+    assert "BroadcastNestedLoopJoin" not in ops and "CartesianProduct" not in ops
 
 
 def test_asof_join_single_shuffle(spark, sf_dir):
