@@ -1,9 +1,14 @@
 """One parse per product: the fused GRD/SLC layer readers against the
 crawl ⨝ decode they replace, the cube plan shape, and the
 generate_cube CLI's single-decode export and its netCDF writer — all
-on stacks synthesized in the test, no reference fixtures needed."""
+on stacks synthesized in the test, no reference fixtures needed — and
+the Python workers the readers run in."""
 
+import os
 import struct
+import subprocess
+import sys
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -682,3 +687,109 @@ def test_write_netcdf3_streams_to_file(tmp_path):
     _, variables, _ = read_netcdf3(p)
     assert (variables["intensity"][1] == a).all()
     assert variables["name"][1].tobytes() == names.tobytes()
+
+
+def _in_worker(spark, fn, schema):
+    """Run `fn()` once inside a Python worker; return its one row."""
+    import pandas as pd
+
+    def task(batches):
+        for _ in batches:
+            yield pd.DataFrame([fn()])
+
+    return spark.range(1, numPartitions=1).mapInPandas(task, schema).first()
+
+
+def test_workers_keep_unchanged_zip_directories(spark):
+    """Workers fork from icecube_spark.pydaemon, where
+    importlib.invalidate_caches(), which PySpark calls before every
+    task, re-reads no unchanged archive: every zip importer (pyspark,
+    py4j, the Spark core jar) keeps its directory object. PySpark's own
+    daemon re-reads all of them, 130-210 ms a task."""
+
+    def probe():
+        import importlib
+        import zipimport
+
+        importers = [
+            i for i in sys.path_importer_cache.values()
+            if isinstance(i, zipimport.zipimporter)
+        ]
+        before = [i._files for i in importers]
+        importlib.invalidate_caches()
+        return {
+            "daemon": sys.modules["__main__"].__spec__.name,
+            "importers": len(importers),
+            "replaced": sum(i._files is not f for i, f in zip(importers, before)),
+        }
+
+    row = _in_worker(spark, probe, "daemon string, importers int, replaced int")
+    assert row.importers > 0
+    assert (row.daemon, row.replaced) == ("icecube_spark.pydaemon", 0)
+
+
+def test_workers_reread_a_rewritten_zip(spark, tmp_path):
+    """A zip rewritten on disk (here to another size) is still re-read
+    by invalidate_caches() inside a worker, and a module imported from
+    it returns its new value."""
+    archive = str(tmp_path / "probe.zip")
+    name = "icecube_zip_probe"
+
+    def probe():
+        import importlib
+        import zipfile
+
+        def write(value):
+            with zipfile.ZipFile(archive, "w") as z:
+                z.writestr(f"{name}.py", f"VALUE = {value!r}\n")
+
+        write("old")
+        sys.path.insert(0, archive)
+        try:
+            first = importlib.import_module(name).VALUE
+            files = sys.path_importer_cache[archive]._files
+            write("rewritten")
+            importlib.invalidate_caches()
+            reread = sys.path_importer_cache[archive]._files is not files
+            del sys.modules[name]
+            second = importlib.import_module(name).VALUE
+        finally:
+            sys.path.remove(archive)
+            sys.path_importer_cache.pop(archive, None)
+            sys.modules.pop(name, None)
+        return {"first": first, "second": second, "reread": reread}
+
+    row = _in_worker(spark, probe, "first string, second string, reread boolean")
+    assert tuple(row) == ("old", "rewritten", True)
+
+
+def test_workers_import_the_package_from_any_cwd(tmp_path):
+    """get_spark puts the directory holding icecube_spark on the
+    workers' PYTHONPATH: a script run by absolute path from another
+    working directory reads an SLC stack through read_slc_layers, whose
+    worker function is pickled by reference to the package."""
+    repo = Path(__file__).resolve().parents[1]
+    stack = tmp_path / "stack"
+    stack.mkdir()
+    s_i = _slc_stack(stack, {"slc_a.h5": _SLC_DATES["slc_a.h5"]}, extras=False)
+    script = tmp_path / "read_stack.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(repo)!r})\n"
+        "from icecube_spark.session import get_spark\n"
+        "from icecube_spark.sources.hdf5 import read_slc_layers\n"
+        "spark = get_spark('cwd-probe', 'local[1]')\n"
+        f"bdf = spark.read.format('binaryFile').load({str(stack)!r})\n"
+        "(row,) = read_slc_layers(bdf).collect()\n"
+        "print(row.product_file, row.Real)\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    r = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    real = list(s_i["slc_a.h5"].astype("f8").ravel())
+    assert r.stdout.splitlines()[-1] == f"slc_a.h5 {real}"
