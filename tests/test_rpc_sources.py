@@ -20,11 +20,13 @@ from icecube_spark.sources.rpc import (
 SLC = "/root/reference/tests/resources/slc_stack"
 GRD = "/root/reference/tests/resources/grd_stack"
 
-pytestmark = pytest.mark.skipif(
+# on the tests that read the reference's fixtures; the rest run anywhere
+needs_ref = pytest.mark.skipif(
     not glob.glob(os.path.join(SLC, "*.h5")), reason="reference fixtures absent"
 )
 
 
+@needs_ref
 def test_slc_rpc_parity_with_fixture():
     """Every coefficient vector and offset/scale scalar matches the
     raw RPC/ datasets bit-for-bit (reference reads them as float32
@@ -75,6 +77,7 @@ def test_tiff_rpc_malformed_is_none():
     assert tiff_rpc_dict(b"II*\x00\x08\x00\x00\x00\x00\x00\x00\x00\x00\x00") is None
 
 
+@needs_ref
 def test_grd_fixture_rpc_decodes():
     """The reference GRD fixtures carry RPCCoefficientTag 50844; the
     pure-python decode yields the same 4x20 + offsets the reference's
@@ -87,6 +90,7 @@ def test_grd_fixture_rpc_decodes():
     assert rpc["lat_scale_factor"] != 0
 
 
+@needs_ref
 def test_distributed_rpc_crawl(spark):
     from icecube_spark.sources.rpc import crawl_rpc_metadata
 
@@ -109,6 +113,7 @@ def test_distributed_rpc_crawl(spark):
     assert all(len(r.az_den_coeff) == 20 for r in grows)
 
 
+@needs_ref
 def test_cube_from_slc_with_rpc(spark):
     """create_cube_from_slc(with_rpc=True) carries the coefficient
     columns through the cube build."""
@@ -120,3 +125,22 @@ def test_cube_from_slc_with_rpc(spark):
     assert len(rows) == 3
     for r in rows:
         assert len(r.az_num_coeff) == 20 and r.lat_mean is not None
+
+
+def test_rpc_crawl_keeps_only_products_with_rpc(spark, tmp_path):
+    """One row per product that carries RPC data, with its decoded
+    fields: a plain TIFF and a junk file crawl to nothing."""
+    from icecube_spark.sources.rpc import crawl_rpc_metadata
+
+    vals = [float(i) for i in range(92)]
+    (tmp_path / "a_rpc.tif").write_bytes(_tiff_with_rpc(vals))
+    (tmp_path / "b_plain.tif").write_bytes(
+        b"II*\x00\x08\x00\x00\x00\x00\x00\x00\x00\x00\x00"
+    )
+    (tmp_path / "c_junk.tif").write_bytes(b"not a product")
+    bdf = spark.read.format("binaryFile").load(str(tmp_path))
+    rows = crawl_rpc_metadata(bdf).collect()
+    assert len(rows) == 1
+    row = rows[0].asDict()
+    assert row.pop("path").endswith("a_rpc.tif")
+    assert row == tiff_rpc_dict(_tiff_with_rpc(vals))
