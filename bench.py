@@ -212,35 +212,18 @@ def main() -> None:
     # tables). Their cost is reported separately in staging_s so the
     # per-key numbers reflect steady state instead of charging the
     # whole one-time build to whichever key touches it first.
-    staging: dict[str, float] = dict(prewarm_s)
+    staging_s: dict[str, float] = dict(prewarm_s)
     t_stage = time.perf_counter() - sum(prewarm_s.values())
-    try:
-        from icecube_spark.queries import llm_queries as _lq
-
-        def _stage(sname, build) -> None:
-            t0 = time.perf_counter()
-            try:
-                build()
-                staging[sname] = round(time.perf_counter() - t0, 3)
-            except Exception as exc:
-                errors[f"staging:{sname}"] = f"{type(exc).__name__}: {exc}"[:200]
-
-        _stage("corpus", lambda: [d.count() for d in _lq.staged_corpus(spark, sf_dir)])
-        _stage("collapse", lambda: [d.count() for d in _lq.staged_collapse(spark, sf_dir)])
-        _stage("candidates", lambda: _lq.staged_candidates(spark, sf_dir).count())
-        _stage("minhash_pairs", lambda: _lq.staged_minhash_pairs(spark, sf_dir).count())
-        _stage("jaccard_pairs", lambda: _lq.staged_jaccard_pairs(spark, sf_dir, 0.3).count())
-        _stage("ivf_index", lambda: _lq.staged_ivf_index(spark, sf_dir)[0].count())
-
-        from icecube_spark.queries import analytics as _an
-
-        _stage(
-            "copurchase",
-            lambda: [d.count() for d in _an.staged_copurchase(spark, sf_dir)],
-        )
-    except Exception as exc:  # staging must never kill the bench
-        errors["staging"] = f"{type(exc).__name__}: {exc}"[:200]
-    result["staging_s"] = staging
+    for sname, staged in staging.ARTIFACTS.items():
+        t0 = time.perf_counter()
+        try:
+            entry = staged(spark, sf_dir)
+            for df in entry if isinstance(entry, tuple) else (entry,):
+                df.count()
+            staging_s[sname] = round(time.perf_counter() - t0, 3)
+        except Exception as exc:  # staging must never kill the bench
+            errors[f"staging:{sname}"] = f"{type(exc).__name__}: {exc}"[:200]
+    result["staging_s"] = staging_s
     result["staging_total"] = round(time.perf_counter() - t_stage, 3)
 
     # Cache ownership for the measurement pass: each key's DataFrames

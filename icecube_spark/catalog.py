@@ -37,6 +37,22 @@ _FOOTER_CACHE: dict[str, tuple[tuple[int, int], tuple]] = {}
 _FANOUT_MIN_ROWS = 1000
 
 
+def _stat(path: str) -> tuple[int, int] | None:
+    """(size, mtime in ns) of a file, None when this process cannot
+    stat it: what tells a rewritten file from the one read before."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime_ns
+
+
+def stamp(sf_dir: str) -> tuple:
+    """The ``_stat`` of every ``TABLES`` file under ``sf_dir``: equal
+    stamps mean no table of the corpus was rewritten in between."""
+    return tuple(_stat(os.path.join(sf_dir, f"{n}.parquet")) for n in TABLES)
+
+
 def _footer(
     spark: SparkSession, path: str
 ) -> tuple[int, int, StructType | None]:
@@ -47,13 +63,11 @@ def _footer(
     makes every later load of the file jobless. A path this process
     cannot stat (absent, or not on a local filesystem) gets no entry:
     its reader infers the schema, and reports a missing path, itself."""
-    try:
-        st = os.stat(path)
-    except OSError:
+    file_stamp = _stat(path)
+    if file_stamp is None:
         return 0, 0, None
-    stamp = (st.st_size, st.st_mtime_ns)
     hit = _FOOTER_CACHE.get(path)
-    if hit is None or hit[0] != stamp:
+    if hit is None or hit[0] != file_stamp:
         schema = spark.read.parquet(path).schema
         try:
             import pyarrow.parquet as pq
@@ -62,7 +76,7 @@ def _footer(
             shape = (f.num_row_groups, f.metadata.num_rows)
         except Exception:
             shape = (0, 0)
-        hit = _FOOTER_CACHE[path] = (stamp, (*shape, schema))
+        hit = _FOOTER_CACHE[path] = (file_stamp, (*shape, schema))
     return hit[1]
 
 

@@ -1147,6 +1147,9 @@ def pagerank(
         # barrier on every 2nd iteration only (sink-free graphs) timed
         # no faster beyond run-to-run spread, so it was dropped.
         ranks = ranks.transform(materialize)
+    # the last barrier's ranks no longer read the cached inputs
+    for df in (e, nodes, dangling_nodes):
+        df.unpersist()
     out = ranks.select(
         "node", (F.col("qr").cast("double") / F.lit(1e12)).alias("rank")
     )

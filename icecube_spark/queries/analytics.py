@@ -29,6 +29,7 @@ class CopurchaseStaging(NamedTuple):
     edges2: DataFrame  # support>=2 edge list (pa, pb)
 
 
+@staging.artifact
 def staged_copurchase(spark: SparkSession, sf_dir: str) -> CopurchaseStaging:
     """Session-scoped co-purchase staging: the distinct
     (order, part) basket table, the oriented pair-count table
@@ -46,31 +47,27 @@ def staged_copurchase(spark: SparkSession, sf_dir: str) -> CopurchaseStaging:
     both sides share one orderkey shuffle, the (pa, pb) aggregate
     partial-combines map-side.
     """
-
-    def build():
-        li = (
-            catalog.load(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-        b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-        pairs = (
-            a.join(b, "l_orderkey")
-            .where(F.col("pa") < F.col("pb"))
-            .groupBy("pa", "pb")
-            .agg(F.count(F.lit(1)).alias("n_orders"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        edges2 = (
-            pairs.where(F.col("n_orders") >= 2)
-            .select("pa", "pb")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        return CopurchaseStaging(li, pairs, edges2)
-
-    return staging.get(spark, ("copurchase", sf_dir), build)
+    li = (
+        catalog.load(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
+    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
+    pairs = (
+        a.join(b, "l_orderkey")
+        .where(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).alias("n_orders"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    edges2 = (
+        pairs.where(F.col("n_orders") >= 2)
+        .select("pa", "pb")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return CopurchaseStaging(li, pairs, edges2)
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -79,10 +79,6 @@ def get_spark(app_name: str = "icecube-spark", master: str | None = None) -> Spa
         # splits other writers' lines (plan_audit's `== key` markers).
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", "/tmp/icecube-spark-warehouse")
-        .config(
-            "javax.jdo.option.ConnectionURL",
-            "jdbc:derby:;databaseName=/tmp/icecube-spark-metastore;create=true",
-        )
     )
     # Deployment-specific overrides (semicolon-separated key=value):
     # lets a cluster profile retune any knob above without a code

@@ -26,9 +26,7 @@ are its metadata-only and pixels-only halves.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from icecube_spark.sources.layers import META_SCHEMA, map_products, meta_row
@@ -187,28 +185,20 @@ RASTER_META_SCHEMA = (
 )
 
 
+def _raster_meta_row(path: str, data: bytes) -> dict:
+    meta = parse_tiff_header(data) or {}
+    return {
+        "path": path, "length": len(data), "is_tiff": bool(meta),
+        "width": meta.get("width"), "height": meta.get("height"),
+        "bits": meta.get("bits"),
+    }
+
+
 def crawl_raster_metadata(binary_df: DataFrame) -> DataFrame:
     """binaryFile rows → raster metadata table (the Spark twin of
-    metadata_crawler over a directory of rasters). Arrow-batched; no
-    shuffle; payloads never reach the driver."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [parse_tiff_header(bytes(b)) for b in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "length": pdf["length"],
-                    "is_tiff": [m is not None for m in metas],
-                    "width": [(m or {}).get("width") for m in metas],
-                    "height": [(m or {}).get("height") for m in metas],
-                    "bits": [(m or {}).get("bits") for m in metas],
-                }
-            )
-
-    return binary_df.select("path", "length", "content").mapInPandas(
-        run, schema=RASTER_META_SCHEMA
-    )
+    metadata_crawler over a directory of rasters), one row per file.
+    Arrow-batched; no shuffle; payloads never reach the driver."""
+    return map_products(binary_df, _raster_meta_row, RASTER_META_SCHEMA)
 
 
 RASTER_PIXELS_SCHEMA = (

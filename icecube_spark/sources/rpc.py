@@ -25,11 +25,10 @@ crawl to no rows (the reference stores RPC=None for them).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from icecube_spark.sources.layers import map_products
 
 RPC_FIELDS = [
     ("az_num_coeff", "LINE_NUM_COEFF"),
@@ -110,39 +109,26 @@ def tiff_rpc_dict(data: bytes) -> dict | None:
     return out
 
 
+def _rpc_row(path: str, data: bytes) -> dict | None:
+    """One product's RPC row, its format sniffed by magic bytes, or
+    None when it carries no RPC data."""
+    from icecube_spark.sources.hdf5 import _SIG, load_h5
+
+    if data[:8] == _SIG:
+        try:
+            rpc = slc_rpc_dict(load_h5(data, want=_SLC_WANT))
+        except (NotImplementedError, ValueError):
+            return None
+    elif data[:2] in (b"II", b"MM"):
+        rpc = tiff_rpc_dict(data)
+    else:
+        return None
+    return None if rpc is None else {"path": path, **rpc}
+
+
 def crawl_rpc_metadata(binary_df: DataFrame) -> DataFrame:
     """binaryFile rows (.h5 SLC products and/or .tif GRD products) →
     one RPC row per product that carries RPC data. Format sniffed by
     magic bytes; products without RPC are dropped (the reference
     stores RPC=None for them)."""
-    from icecube_spark.sources.hdf5 import _SIG, load_h5
-
-    cols = ["path"] + [k for k, _ in RPC_FIELDS] + [k for k, _ in RPC_SCALARS]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict = {c: [] for c in cols}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                rpc = None
-                if data[:8] == _SIG:
-                    try:
-                        rpc = slc_rpc_dict(load_h5(data, want=_SLC_WANT))
-                    except (NotImplementedError, ValueError):
-                        rpc = None
-                elif data[:2] in (b"II", b"MM"):
-                    rpc = tiff_rpc_dict(data)
-                if rpc is None:
-                    continue
-                rows["path"].append(path)
-                for c in cols[1:]:
-                    rows[c].append(rpc[c])
-            if rows["path"]:
-                out = pd.DataFrame(rows)
-                for k, _ in RPC_FIELDS:
-                    out[k] = out[k].astype(object)
-                yield out
-
-    return binary_df.select("path", "content").mapInPandas(
-        run, schema=RPC_SCHEMA
-    )
+    return map_products(binary_df, _rpc_row, RPC_SCHEMA)

@@ -1,15 +1,22 @@
 """Session staging store (icecube_spark.staging) through its public
-surface: the staged_* entry points, staging.get and staging.release.
-Per-corpus release and full release return the executor cache to its
-baseline — a long-lived session walking many corpora must not accrete
-one persisted table set per sf_dir — and every .persist( under
-queries/ stays inside a staged_* function, so session caching lives in
-one place."""
+surface: the @staging.artifact entry points (staged_*), the
+staging.ARTIFACTS registry and staging.release. Per-corpus release and
+full release return the executor cache to its baseline — a long-lived
+session walking many corpora must not accrete one persisted table set
+per sf_dir — an entry is rebuilt once its corpus files change, and
+every .persist( under queries/ stays inside a registered staged_*
+function, so session caching lives in one place."""
 
 import ast
+import importlib
+import os
+import shutil
 import sys
 import threading
 from pathlib import Path
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from icecube_spark import staging
 from icecube_spark.queries import analytics as an
@@ -75,17 +82,46 @@ def test_release_frees_copurchase_tables(spark):
     assert not (_persisted_ids(spark) - base_ids)
 
 
-def test_release_frees_threshold_keyed_pairs(spark):
+def test_release_frees_jaccard_pairs(spark):
     staging.release()
     base_ids = _persisted_ids(spark)
-    pairs = lq.staged_jaccard_pairs(spark, SF, 0.8)
+    pairs = lq.staged_jaccard_pairs(spark, SF)
     pairs.count()
-    assert lq.staged_jaccard_pairs(spark, SF, 0.8) is pairs
-    assert lq.staged_jaccard_pairs(spark, SF, 0.9) is not pairs
+    assert lq.staged_jaccard_pairs(spark, SF) is pairs
     staging.release(SF)
     assert not (_persisted_ids(spark) - base_ids)
-    assert lq.staged_jaccard_pairs(spark, SF, 0.8) is not pairs
+    assert lq.staged_jaccard_pairs(spark, SF) is not pairs
     staging.release()
+
+
+def test_rewritten_corpus_is_not_served_stale(spark, tmp_path):
+    """A staged entry is keyed by its corpus files, not only their
+    directory: after documents.parquet is rewritten in the same
+    session, the next dedup_minhash_lsh reads the new corpus, and
+    equals a build made from nothing staged."""
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    for name in os.listdir(SF):
+        shutil.copyfile(os.path.join(SF, name), os.path.join(sf, name))
+
+    def pairs():
+        return sorted(tuple(r) for r in lq.dedup_minhash_lsh(spark, sf).collect())
+
+    try:
+        before = pairs()
+        assert before
+        docs_path = os.path.join(sf, "documents.parquet")
+        docs = pq.read_table(docs_path)
+        docs = docs.filter(pc.not_equal(docs["doc_id"], before[0][0]))
+        pq.write_table(docs, docs_path + ".tmp")
+        os.replace(docs_path + ".tmp", docs_path)
+
+        after = pairs()
+        assert after != before
+        staging.release(sf)
+        assert after == pairs()
+    finally:
+        staging.release(sf)
 
 
 def test_staging_stale_detects_foreign_session(spark):
@@ -171,6 +207,25 @@ def test_persist_only_inside_staged_functions():
     # the staged builders' own persists are found (else the sweep is blind)
     assert len(sites) >= 10
 
+    # staging.ARTIFACTS is the one artifact list: every top-level
+    # staged_* (bar the no-op staged_tfidf_fit) and nothing else
+    declared = set()
+    for path in sorted(QUERIES_ROOT.glob("*.py")):
+        module = f"icecube_spark.queries.{path.stem}"
+        importlib.import_module(module)
+        declared |= {
+            (module, top.name)
+            for top in ast.parse(path.read_text()).body
+            if isinstance(top, ast.FunctionDef)
+            and top.name.startswith("staged_")
+            and top.name != "staged_tfidf_fit"
+        }
+    registered = {
+        (fn.__module__, fn.__name__) for fn in staging.ARTIFACTS.values()
+    }
+    assert registered == declared
+    assert all(fn.__name__ == f"staged_{n}" for n, fn in staging.ARTIFACTS.items())
+
 
 def test_staged_table_is_stored_at_the_size_of_its_data(spark):
     """AQE coalesces a cached plan's output like any other shuffle's,
@@ -201,3 +256,20 @@ def test_connected_components_leaves_no_cache_entry(spark):
         counts.append(cache.cachedData().size())
     assert counts[0] == counts[1] == counts[2]
     assert outs[0] == outs[1] == outs[2] and outs[0]
+
+
+def test_pagerank_leaves_no_cache_entry(spark):
+    """pagerank's cached edge, node and sink tables are freed once the
+    last iteration's ranks are stored: the count of cached plans is
+    the same before and after a call (it used to rise by 3 here)."""
+    from icecube_spark.operators import pipeline
+
+    # node 4 is a sink, so the dangling-node table is cached too
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (1, 3)], "a long, b long"
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    rows = pipeline.pagerank(edges, "a", "b").collect()
+    assert cache.cachedData().size() == before
+    assert sorted(r.node for r in rows) == [1, 2, 3, 4]
