@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from icecube_spark.functions import hashing
+from icecube_spark.functions.materialize import materialize
 from icecube_spark.functions.plans import filter_once
 
 # normalized text: lowercase, trimmed, single-spaced
@@ -39,26 +40,6 @@ GRAMS = f"""
 
 def normalized(col: str):
     return F.expr(NORM.format(col=col))
-
-
-def _materialized_grams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Gram-array table computed ONCE and persisted.
-
-    The candidate/verify shape consumes the gram table three times
-    (inverted-index explode + both sides of the pair rejoin); each
-    consumer repartitions on a different key, so Catalyst cannot
-    reuse one exchange and would re-run the regex shingling per
-    branch (~3x the whole query's CPU). Persisting the narrow
-    (id, grams) projection removes the recompute. At 100 TB the same
-    move is writing the gram table to a staging table (or
-    df.persist(DISK_ONLY)) before the pair join — standard for any
-    multi-consumer derived corpus."""
-    from pyspark import StorageLevel
-
-    grams = with_grams(df.select(id_col, text_col), text_col).select(
-        id_col, F.col("grams")
-    )
-    return grams.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def with_grams(df: DataFrame, text_col: str, out: str = "grams") -> DataFrame:
@@ -301,6 +282,63 @@ def capped_gram_candidates(
     )
 
 
+def candidate_overlaps(grams: DataFrame, cands: DataFrame, id_col: str) -> DataFrame:
+    """The verify of every candidate pair: (doc_a, doc_b, grams_a,
+    grams_b, n_shared), the two distinct-gram counts and
+    size(array_intersect) of the pair's full gram arrays, as bigint.
+    D3 and D6 (and D18 through D3) are threshold filters over this
+    table, so a session that stages it (llm_queries.staged_candidates)
+    runs the gram rejoin and array_intersect once per corpus."""
+    ga = grams.withColumnRenamed(id_col, "doc_a").withColumnRenamed("grams", "ga")
+    gb = grams.withColumnRenamed(id_col, "doc_b").withColumnRenamed("grams", "gb")
+    return (
+        cands.join(ga, "doc_a")
+        .join(gb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size("ga").alias("grams_a"),
+            F.size("gb").alias("grams_b"),
+            F.size(F.array_intersect("ga", "gb")).cast("bigint").alias("n_shared"),
+        )
+    )
+
+
+def _overlaps(
+    df: DataFrame, id_col: str, text_col: str, max_df: int,
+    grams: DataFrame | None, cands: DataFrame | None,
+) -> DataFrame:
+    """candidate_overlaps for D3/D6: `cands` itself when it already
+    carries n_shared (the staged table), else built here over the
+    capped candidates. `max_df` only applies when `cands` is None — a
+    caller passing a pre-staged table owns the cap it was built with,
+    so a non-default `max_df` next to it is refused, not ignored.
+
+    What is built here is stored behind materialize() barriers, which
+    leave no cache entry behind. The gram table is read three times
+    (the inverted-index explode and both sides of the pair rejoin),
+    each on a different key, so an unstored one would re-run the regex
+    shingling per branch. The overlaps are stored so that the caller's
+    threshold filter reads n_shared: over the unstored rejoin Catalyst
+    pushes the threshold into the join condition, and array_intersect
+    runs there and again in the projection (filter_once does not stop
+    that push)."""
+    if cands is not None and max_df != 64:
+        raise ValueError(
+            "max_df is ignored when a pre-staged cands table is passed; "
+            "build the staged candidates with the desired max_df instead"
+        )
+    if cands is not None and "n_shared" in cands.columns:
+        return cands
+    if grams is None:
+        grams = with_grams(df.select(id_col, text_col), text_col).select(
+            id_col, "grams"
+        ).transform(materialize)
+    if cands is None:
+        cands = capped_gram_candidates(grams, id_col, max_df)
+    return candidate_overlaps(grams, cands, id_col).transform(materialize)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5,
     max_df: int = 64, grams: DataFrame | None = None,
@@ -311,39 +349,22 @@ def ngram_jaccard_pairs(
 
     Candidates come from rare-gram buckets (capped_gram_candidates:
     bounded fanout, no quadratic blowup on the Zipf head); the
-    Jaccard itself is EXACT — computed on the full distinct-gram
-    arrays of each candidate pair (array_intersect), not on the
-    capped index. Same candidate/verify shape as minhash_lsh_pairs,
-    with deterministic (not probabilistic) candidate recall for any
+    Jaccard itself is EXACT — n_shared / (grams_a + grams_b -
+    n_shared) from candidate_overlaps, computed on the full
+    distinct-gram arrays of each candidate pair, not on the capped
+    index. Deterministic (not probabilistic) candidate recall for any
     pair sharing >= 1 gram with df <= max_df.
 
-    NOTE: `max_df` only applies when `cands` is None — a caller
-    passing a pre-staged candidate table (llm_queries.staged_candidates,
-    held in the icecube_spark.staging store) owns the cap that table
-    was built with, and this function will not re-derive or re-check
-    it.
+    `cands` may be the staged overlap table
+    (llm_queries.staged_candidates), which makes this a threshold
+    filter; see _overlaps for `grams`, `cands` and `max_df`.
     """
-    if cands is not None and max_df != 64:
-        raise ValueError(
-            "max_df is ignored when a pre-staged cands table is passed; "
-            "build the staged candidates with the desired max_df instead"
-        )
-    if grams is None:
-        grams = _materialized_grams(df, id_col, text_col)
-    if cands is None:
-        cands = capped_gram_candidates(grams, id_col, max_df)
-    ga = grams.withColumnRenamed(id_col, "doc_a").withColumnRenamed("grams", "ga")
-    gb = grams.withColumnRenamed(id_col, "doc_b").withColumnRenamed("grams", "gb")
-    scored = (
-        cands.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("ga", "gb")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.size("ga") + F.size("gb") - F.col("inter")),
-        )
+    o = _overlaps(df, id_col, text_col, max_df, grams, cands)
+    scored = o.withColumn(
+        "jaccard",
+        F.col("n_shared") / (F.col("grams_a") + F.col("grams_b") - F.col("n_shared")),
     )
-    return filter_once(scored, F.col("jaccard") >= threshold).select(
+    return scored.where(F.col("jaccard") >= threshold).select(
         "doc_a", "doc_b", "jaccard"
     )
 
@@ -424,35 +445,19 @@ def containment_pairs(
     the standard complement that catches them (Broder's resemblance
     vs containment distinction).
 
-    Plan: same capped-inverted-index candidates as
-    ngram_jaccard_pairs (rare-gram buckets, bounded fanout); |∩| and
-    sizes are computed EXACTLY on each candidate's full gram arrays.
-    The ratio is one INT/INT double division, bit-equal in both
-    engines.
+    Plan: a threshold filter over the same candidate_overlaps as
+    ngram_jaccard_pairs (rare-gram buckets, bounded fanout; |∩| and
+    sizes EXACT on each candidate's full gram arrays), staged or built
+    here as _overlaps says. The ratio is one INT/INT double division,
+    bit-equal in both engines.
     """
-    if grams is None:
-        grams = _materialized_grams(df, id_col, text_col)
-    if cands is None:
-        cands = capped_gram_candidates(grams, id_col, max_df)
-    ga = grams.withColumnRenamed(id_col, "doc_a").withColumnRenamed("grams", "ga")
-    gb = grams.withColumnRenamed(id_col, "doc_b").withColumnRenamed("grams", "gb")
-    scored = (
-        cands.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size("ga").alias("grams_a"),
-            F.size("gb").alias("grams_b"),
-            F.size(F.array_intersect("ga", "gb")).cast("bigint").alias("n_shared"),
-        )
-        .withColumn(
-            "containment",
-            F.col("n_shared").cast("double")
-            / F.least("grams_a", "grams_b").cast("double"),
-        )
+    o = _overlaps(df, id_col, text_col, max_df, grams, cands)
+    scored = o.withColumn(
+        "containment",
+        F.col("n_shared").cast("double")
+        / F.least("grams_a", "grams_b").cast("double"),
     )
-    return filter_once(scored, F.col("containment") >= threshold).select(
+    return scored.where(F.col("containment") >= threshold).select(
         "doc_a", "doc_b", "grams_a", "grams_b", "n_shared", "containment"
     )
 
@@ -630,7 +635,7 @@ def near_dup_diff(
             F.col("inter") / (F.size("ga") + F.size("gb") - F.col("inter")),
         )
     )
-    return filter_once(scored, F.col("jaccard") >= threshold).select(
+    return scored.where(F.col("jaccard") >= threshold).select(
         "doc_a",
         "doc_b",
         F.col("inter").cast("bigint").alias("n_shared"),

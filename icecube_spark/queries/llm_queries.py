@@ -64,14 +64,19 @@ def staged_collapse(spark, sf_dir):
 
 @staging.artifact
 def staged_candidates(spark, sf_dir):
-    """The capped-inverted-index candidate-pair table, staged once per
-    corpus like the gram/signature tables: D3 (Jaccard) and D6
-    (containment) verify over the SAME rare-gram candidate set, and
-    the window-count + bucket self-join + DISTINCT that builds it is
-    the most expensive part of both plans. Same at-scale story: a
-    dedup campaign writes candidates once, every verifier reads them."""
-    return dedup.capped_gram_candidates(
-        staged_corpus(spark, sf_dir)[0], "doc_id", max_df=64
+    """The verified candidate-pair table, staged once per corpus like
+    the gram/signature tables: every capped-inverted-index candidate
+    pair with its two gram counts and shared-gram count
+    (dedup.candidate_overlaps). D3 (Jaccard), D6 (containment) and
+    D18 (through D3 at 0.3) are threshold filters over it, so the
+    window-count + bucket self-join + DISTINCT that finds the pairs
+    and the gram rejoin + array_intersect that verifies them run once
+    per corpus, not once per call. Same at-scale story: a dedup
+    campaign writes verified candidates once, every report reads
+    them."""
+    grams = staged_corpus(spark, sf_dir)[0]
+    return dedup.candidate_overlaps(
+        grams, dedup.capped_gram_candidates(grams, "doc_id", max_df=64), "doc_id"
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
@@ -88,23 +93,6 @@ def staged_minhash_pairs(spark, sf_dir):
     return dedup.minhash_lsh_pairs(
         _docs(spark, sf_dir), "doc_id", "text", threshold=0.8,
         grams=grams, sigs=sigs, members=members,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-
-@staging.artifact
-def staged_jaccard_pairs(spark, sf_dir):
-    """The verified n-gram Jaccard pair graph at threshold 0.3, staged
-    once per corpus. Graph-shaped consumers (D18's wedge/triangle
-    audit) reference the pair table many times in one plan — wedges
-    are a self-join, closure is a third join, and the summary
-    crossJoins three aggregates — so without staging the verify
-    pipeline re-runs per reference. Same at-scale story as the other
-    staged_* tables: a dedup campaign writes pairs once, every graph
-    diagnostic reads them."""
-    return dedup.ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", threshold=0.3,
-        grams=staged_corpus(spark, sf_dir)[0],
-        cands=staged_candidates(spark, sf_dir),
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
@@ -144,9 +132,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 — exact all-pairs 3-gram Jaccard >= 0.5 (inverted index)."""
-    grams, _ = staged_corpus(spark, sf_dir)
     return dedup.ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", threshold=0.5, grams=grams,
+        _docs(spark, sf_dir), "doc_id", "text", threshold=0.5,
         cands=staged_candidates(spark, sf_dir),
     )
 
@@ -349,9 +336,8 @@ def embed_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D6 — exact n-gram containment near-dup pairs (catches subset
     duplicates that Jaccard misses)."""
-    grams, _ = staged_corpus(spark, sf_dir)
     return dedup.containment_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", threshold=0.8, grams=grams,
+        _docs(spark, sf_dir), "doc_id", "text", threshold=0.8,
         cands=staged_candidates(spark, sf_dir),
     ).orderBy("doc_a", "doc_b")
 
@@ -1244,7 +1230,10 @@ def dup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D18 — does near-dup similarity behave transitively? Wedge/
     triangle closure rate of the 0.3-Jaccard pair graph — the
     go/no-go check before connected-components cluster collapse."""
-    return dedup.dup_transitivity_audit(staged_jaccard_pairs(spark, sf_dir))
+    return dedup.dup_transitivity_audit(dedup.ngram_jaccard_pairs(
+        _docs(spark, sf_dir), "doc_id", "text", threshold=0.3,
+        cands=staged_candidates(spark, sf_dir),
+    ))
 
 
 def quantization_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:

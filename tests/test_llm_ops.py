@@ -35,6 +35,20 @@ def test_minhash_recall_vs_exact(spark, sf_dir):
     assert got == want, f"LSH missed {want - got} / extra {got - want}"
 
 
+@pytest.mark.parametrize("verify", ["ngram_jaccard_pairs", "containment_pairs"])
+def test_staged_cands_refuse_another_max_df(spark, sf_dir, verify):
+    """A staged candidate table fixes its own max_df: passing another
+    one next to it raises instead of being ignored."""
+    from icecube_spark import catalog
+    from icecube_spark.operators import dedup
+
+    docs = catalog.load(spark, sf_dir, "documents")
+    with pytest.raises(ValueError, match="max_df"):
+        getattr(dedup, verify)(
+            docs, "doc_id", "text", max_df=8, cands=lq.staged_candidates(spark, sf_dir)
+        )
+
+
 def test_cosine_topk_is_broadcast_no_corpus_shuffle(plans):
     joins = plans["embed_cosine_topk"]["joins"]
     assert any(j.startswith("Broadcast") for j in joins), joins

@@ -82,16 +82,31 @@ def test_release_frees_copurchase_tables(spark):
     assert not (_persisted_ids(spark) - base_ids)
 
 
-def test_release_frees_jaccard_pairs(spark):
+def test_release_frees_candidate_overlaps(spark):
     staging.release()
     base_ids = _persisted_ids(spark)
-    pairs = lq.staged_jaccard_pairs(spark, SF)
-    pairs.count()
-    assert lq.staged_jaccard_pairs(spark, SF) is pairs
+    overlaps = lq.staged_candidates(spark, SF)
+    overlaps.count()
+    assert lq.staged_candidates(spark, SF) is overlaps
     staging.release(SF)
     assert not (_persisted_ids(spark) - base_ids)
-    assert lq.staged_jaccard_pairs(spark, SF) is not pairs
+    assert lq.staged_candidates(spark, SF) is not overlaps
     staging.release()
+
+
+def test_staged_overlaps_make_d3_and_d6_threshold_filters(spark):
+    """The staged candidate table carries each pair's overlap counts,
+    so a warm D3 collect is one job that reads it (it was 3: the gram
+    rejoin's two broadcasts and the verify) and a warm D6 collect runs
+    at most 3 (it was 5: its trailing orderBy's range-sampling job ran
+    the verify a second time)."""
+    assert {"grams_a", "grams_b", "n_shared"} <= set(lq.staged_candidates(spark, SF).columns)
+    lq.staged_candidates(spark, SF).count()
+    for key, most in (("dedup_ngram_jaccard", 1), ("dedup_containment", 3)):
+        fn = getattr(lq, key)
+        fn(spark, SF).collect()  # warm
+        jobs, _ = run_in_job_group(spark, lambda: fn(spark, SF).collect(), f"warm-{key}")
+        assert 0 < jobs <= most, (key, jobs)
 
 
 def test_rewritten_corpus_is_not_served_stale(spark, tmp_path):
@@ -256,6 +271,26 @@ def test_connected_components_leaves_no_cache_entry(spark):
         counts.append(cache.cachedData().size())
     assert counts[0] == counts[1] == counts[2]
     assert outs[0] == outs[1] == outs[2] and outs[0]
+
+
+def test_unstaged_verify_leaves_no_cache_entry(spark, tmp_path):
+    """D3 and D6 called without staged tables store their gram table
+    behind a materialize() barrier, not in the cache: the count of
+    cached plans is the same before and after a collect of each (a
+    persisted gram table used to stay cached for the session). The
+    corpus is a fresh copy, so no earlier test has cached its plan."""
+    from icecube_spark import catalog
+    from icecube_spark.operators import dedup
+
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    shutil.copyfile(os.path.join(SF, "documents.parquet"), os.path.join(sf, "documents.parquet"))
+    docs = catalog.load(spark, sf, "documents")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    assert dedup.ngram_jaccard_pairs(docs, "doc_id", "text").collect()
+    assert dedup.containment_pairs(docs, "doc_id", "text").collect()
+    assert cache.cachedData().size() == before
 
 
 def test_pagerank_leaves_no_cache_entry(spark):
